@@ -301,21 +301,21 @@ ALLOWED_LEDGER: dict[str, tuple[dict[str, int], str]] = {
         "oracle baseline; the bucketed primary is p_semantic_dedup_lsh",
     ),
     "p_semantic_dedup.edges": (
-        {"BroadcastNestedLoopJoin": 2},
-        "symmetrizing union references the persisted pair table twice; "
+        {"BroadcastNestedLoopJoin": 1},
+        "exploded symmetrization reads the persisted pair table once; "
         "same one pair scan as similarity.semantic_pairs",
     ),
     "p_semantic_dedup.round": (
-        {"BroadcastNestedLoopJoin": 8},
+        {"BroadcastNestedLoopJoin": 4},
         "per-round join re-expands the persisted pair-scan subtree in the "
         "plan string; executed work is InMemoryTableScan reads only",
     ),
     "p_semantic_dedup.init": (
-        {"BroadcastNestedLoopJoin": 2},
-        "r14 touched-node init derives from the persisted symmetrized "
-        "edge table, whose plan string re-expands the same one pair scan "
+        {"BroadcastNestedLoopJoin": 1},
+        "round 1 is a min-aggregate over the persisted symmetrized edge "
+        "table, whose plan string re-expands the same one pair scan "
         "justified under p_semantic_dedup.edges; executed work is an "
-        "InMemoryTableScan read + distinct",
+        "InMemoryTableScan read + map-side aggregate",
     ),
     "g3.edges": (
         {"BroadcastNestedLoopJoin": 1, "Exchange SinglePartition": 1},

@@ -10,16 +10,35 @@ the minimum vertex id of its component. Rounds needed = graph diameter,
 and dedup graphs are quasi-cliques (diameter 2-3), so convergence is a
 handful of rounds even at corpus scale.
 
-Scale shape per round: one equi-join of the (symmetrized, distinct)
-edge table against the label table on vertex id, one min-aggregation on
-vertex id — both shuffle on the same key, so a cluster reuses the
+Edge table: one pass over the edge generator. Each input edge fans out
+to both directions with ``explode(array(struct(src, dst), struct(dst,
+src)))`` rather than a ``union`` of two projections. A union references
+the generator twice, and with no exchange reuse across its branches the
+whole candidate pipeline (SimHash/LSH banding, pair scans) runs once per
+branch. ``repartition(e_src)`` precedes ``distinct()``, so ONE exchange
+both de-duplicates and leaves the persisted table hash-partitioned by
+the propagation key.
+
+Per round: one Spark action, the eager ``localCheckpoint`` of the
+round's label table. The fixpoint probe — the exact label sum — rides
+on that action as ``DataFrame.observe(Observation, sum(...))`` instead
+of a separate aggregate-and-collect per round. Under AQE the action's
+broadcast and shuffle stages submit as their own jobs: 3 jobs per round
+on a path graph in local mode.
+
+Round 1 starts from identity labels, so it is the map-combinable
+``least(node, min(e_dst))`` grouped by ``e_src`` over the partitioned
+edge table: no init table, no join, and no exchange once the cached
+edge stage is materialized. Rounds 2.. are one equi-join of the edge
+table against the label table on vertex id plus one min-aggregation on
+vertex id — both keyed on the same column, so a cluster reuses the
 exchange; the edge table is persisted once and re-read every round.
-Lineage is truncated every round with an eager ``localCheckpoint``
-(executor-local blocks): without it the iterated plan doubles each
-round and Catalyst analysis itself becomes the bottleneck. On a real
-cluster prefer ``spark.sparkContext.setCheckpointDir`` + ``checkpoint``
-for fault tolerance — localCheckpoint trades lineage-based recovery
-away, which is the right trade in local mode only.
+The checkpoint truncates lineage every round: without it the iterated
+plan doubles each round and Catalyst analysis itself becomes the
+bottleneck. On a real cluster prefer
+``spark.sparkContext.setCheckpointDir`` + ``checkpoint`` for fault
+tolerance — localCheckpoint trades lineage-based recovery away, which
+is the right trade in local mode only.
 
 For adversarial topologies (million-hop chains) the round count makes
 min-propagation a poor fit; the published fix is alternating
@@ -34,7 +53,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 
 from ..audit import record_plan
 
@@ -57,107 +76,81 @@ def connected_components(
 
     ``nodes`` must hold every vertex (isolated vertices become singleton
     components); ``edges`` may be directed, duplicated, or self-looped —
-    it is symmetrized and de-duplicated here. The result is returned
-    materialized (the final checkpointed label table), not as a lazy
-    plan over the whole iteration history.
+    it is symmetrized and de-duplicated here. The edge-touched vertices
+    come back as the final checkpointed label table; the singleton
+    vertices are a LAZY anti-join of ``nodes`` against it, re-evaluated
+    whenever the result is consumed — pass a cheap or pooled ``nodes``
+    frame. ``max_iter`` counts rounds including round 1.
 
     Every plan this operator materializes — the symmetrized edge table
-    and each checkpointed round — is filed in the audit ledger under
-    ``ledger_key`` (callers pass their query name): ``localCheckpoint``
-    truncates lineage to a Scan ExistingRDD, so without the ledger the
-    shuffle audit would be blind to the EDGE GENERATOR's plan (the exact
-    O(n²) pair scan in p_semantic_dedup was the proof case).
+    (``.edges``), round 1 (``.init``) and the later rounds (``.round``)
+    — is filed in the audit ledger under ``ledger_key`` (callers pass
+    their query name): ``localCheckpoint`` truncates lineage to a Scan
+    ExistingRDD, so without the ledger the shuffle audit would be blind
+    to the EDGE GENERATOR's plan (the exact O(n²) pair scan in
+    p_semantic_dedup was the proof case).
     """
+    fwd = F.struct(F.col(src).alias("e_src"), F.col(dst).alias("e_dst"))
+    rev = F.struct(F.col(dst).alias("e_src"), F.col(src).alias("e_dst"))
     sym = (
-        edges.select(F.col(src).alias("e_src"), F.col(dst).alias("e_dst"))
-        .union(edges.select(F.col(dst).alias("e_src"), F.col(src).alias("e_dst")))
+        edges.select(F.explode(F.array(fwd, rev)).alias("e"))
+        .select("e.e_src", "e.e_dst")
         .filter(F.col("e_src") != F.col("e_dst"))
-        .distinct()
-        # hash-partition by the propagation join key BEFORE persisting
-        # (r13 optimization round, guide §2.1): the cached table reports
-        # hash(e_src) output partitioning, so when the per-round join is
-        # shuffle-based (sort-merge/shuffled-hash — the corpus-scale
-        # case, where the label table is node-sized and cannot
-        # broadcast) the EDGE side joins shuffle-free every round
-        # instead of re-exchanging Σ edges per round. At fixture scale
-        # AQE broadcasts the label side, so this is a one-time
-        # edge-build shuffle with no per-round effect locally (plan
-        # read: BroadcastHashJoin BuildRight over the InMemoryTableScan
-        # both ways); the dial it sets is the scale posture.
+        # hash-partition by the propagation key, then distinct: the
+        # distinct's clustering is satisfied by hash(e_src), so one
+        # exchange both de-duplicates and partitions the persisted
+        # table. Round 1 then aggregates by e_src without a shuffle, and
+        # when a later round's join is shuffle-based (the corpus-scale
+        # case, where the label table cannot broadcast) the EDGE side
+        # joins shuffle-free every round.
         .repartition(F.col("e_src"))
+        .distinct()
     )
     record_plan(f"{ledger_key}.edges", sym)
     sym = sym.persist(StorageLevel.MEMORY_AND_DISK)
-    # Iterate ONLY the edge-touched vertices (r14, guide §1.2 order 1 —
-    # don't move rows the loop cannot change): a vertex with no edge is
+    # Iterate ONLY the edge-touched vertices: a vertex with no edge is
     # its own component by definition and can never receive a message,
-    # so it has no business riding through every round's join, union,
-    # aggregate, checkpoint and sum-probe. Dedup graphs are sparse —
-    # the touched set is typically a small fraction of the corpus (86
-    # verified pairs over 5000 vectors at sf0.1 here; the same ratio
-    # argument is what makes per-ingest dedup viable at 100 TB), so the
-    # per-round label table shrinks from |V| to |V(E)| rows at any
-    # scale. Singletons are attached once, at the end, with a single
-    # anti-join — identical output rows.
+    # so it has no business riding through every round's join and
+    # checkpoint. Dedup graphs are sparse, so the per-round label table
+    # shrinks from |V| to |V(E)| rows. Singletons are attached once, at
+    # the end, with a single anti-join — identical output rows.
     #
-    # The sum-probe below is sound ONLY because the iterated node set
-    # is CONSTANT across rounds: msgs' dst values are sym's e_dst,
-    # which by symmetrization equals the touched set exactly. (The old
-    # form iterated `nodes` and relied on the "nodes holds every
-    # vertex" caller contract for the same constancy — r13 ADVICE; the
-    # touched set makes the constancy self-evident.)
-    init = (
-        sym.select(F.col("e_src").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("component"))
-    )
-    record_plan(f"{ledger_key}.init", init)
-    # no eager init checkpoint (r14): round 1 reads init straight off
-    # the persisted edge table (twice — join side + union side — both
-    # InMemoryTableScan reads of a node-sized distinct), and round 1's
-    # own checkpoint truncates the lineage; a pre-loop materialization
-    # job bought nothing
-    labels = init
-    # decimal(38,0) sum of labels: exact at any scale (n·max_id ≤ 1e38),
-    # no int64 overflow — see the fixpoint probe below
-    _label_sum = lambda df: df.agg(
-        F.sum(F.col("component").cast("decimal(38,0)"))
-    ).collect()[0][0]
-    # No pre-loop sum job (r14): with at least one edge, round 1 ALWAYS
-    # lowers some label (both endpoints start self-labeled, min picks
-    # the smaller), so an init-vs-round-1 comparison can never detect
-    # convergence — the old pre-loop aggregate was a pure waste job.
-    # The sentinel never equals a decimal sum, so the first real
-    # comparison is round 2 vs round 1; an edgeless graph (touched set
-    # empty) pays one extra trivial round over empty tables.
+    # Round 1 from identity labels: every touched node takes the min of
+    # itself and its neighbors, and by symmetry its neighbors are
+    # exactly its e_dst values.
+    step = sym.groupBy("e_src").agg(
+        F.least(F.col("e_src"), F.min("e_dst")).alias("component")
+    ).withColumnRenamed("e_src", "node")
+    round_key = f"{ledger_key}.init"
+    # The fixpoint probe: min() is monotone non-increasing per node, so
+    # the label SUM strictly decreases until fixpoint and "sum
+    # unchanged" ⇔ "no label got smaller". Sound because the iterated
+    # node set is constant across rounds: msgs' dst values are sym's
+    # e_dst, which by symmetry equal the touched set exactly. The sum
+    # is decimal(38,0), exact at any scale (n·max_id ≤ 1e38). The None
+    # sentinel never equals a non-empty sum, so the first real
+    # comparison is round 2 vs round 1 (round 1 always lowers some
+    # label); an edgeless graph sums to NULL and stops after round 1.
     prev_sum = None
 
     try:
         for _ in range(max_iter):
-            msgs = sym.join(labels, sym["e_src"] == labels["node"]).select(
-                F.col("e_dst").alias("node"), F.col("component")
+            probe = Observation()
+            step = step.observe(
+                probe,
+                F.sum(F.col("component").cast("decimal(38,0)")).alias("s"),
             )
-            step = labels.unionByName(msgs).groupBy("node").agg(
-                F.min("component").alias("component")
-            )
-            # same shape every round — one ledger slot, overwritten
-            record_plan(f"{ledger_key}.round", step)
-            new = step.localCheckpoint(eager=True)
-            # min() is monotone non-increasing per node, so the label
-            # SUM strictly decreases until fixpoint and "sum unchanged"
-            # ⇔ "no label got smaller" — one exact aggregate over the
-            # just-checkpointed label table replaces the old join+take
-            # probe of new vs old (r13: one fewer join job per round)
-            new_sum = _label_sum(new)
-            labels = new
+            # one ledger slot for round 1, one for the rest (same
+            # shape every later round, first write wins)
+            record_plan(round_key, step)
+            labels = step.localCheckpoint(eager=True)
+            new_sum = probe.get["s"]
             if new_sum == prev_sum:
                 # singleton vertices (no edges) are their own component;
                 # attached once here instead of iterated every round.
                 # The anti-join keys on the FINAL checkpointed label
-                # table (whose node set IS the touched set — constant
-                # across rounds), so the returned plan holds no lineage
-                # back into the edge generator after sym unpersists,
-                # and no extra materialization job is needed.
+                # table, so the returned plan holds no lineage back
+                # into the edge generator after sym unpersists.
                 singles = (
                     nodes.select(F.col(node_col).alias("node"))
                     .join(labels.select("node"), "node", "left_anti")
@@ -167,6 +160,13 @@ def connected_components(
                     "node", node_col
                 )
             prev_sum = new_sum
+            msgs = sym.join(labels, sym["e_src"] == labels["node"]).select(
+                F.col("e_dst").alias("node"), F.col("component")
+            )
+            step = labels.unionByName(msgs).groupBy("node").agg(
+                F.min("component").alias("component")
+            )
+            round_key = f"{ledger_key}.round"
     finally:
         sym.unpersist()
     raise ConvergenceError(

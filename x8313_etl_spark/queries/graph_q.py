@@ -461,12 +461,19 @@ def g4_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Per round: one edges⋈labels shuffle on src (same key every round —
     exchange reuse, the g1/g2 discipline), one map-side-combined
-    (dst, lbl) count, a WindowGroupLimit argmax, one node-sized left
-    join; labels are localCheckpointed per round through the audit
-    ledger (lineage must not double). At 100 TB: labels stay
-    node-sized, messages edge-sized, and the vote aggregate's key space
-    is (node × distinct neighbor labels) — bounded by degree, no
-    all-to-one stage anywhere."""
+    (dst, lbl) count, a map-combinable min(struct) argmax; labels are
+    localCheckpointed per round through the audit ledger (lineage must
+    not double). At 100 TB: labels stay node-sized, messages edge-sized,
+    and the vote aggregate's key space is (node × distinct neighbor
+    labels) — bounded by degree, no all-to-one stage anywhere.
+
+    Round 1 is computed as a min-neighbor vote, ``min(dst)`` per
+    ``src``, with no identity-label table and no join. From identity
+    labels every (node, label) count in round 1 is exactly 1: the edge
+    set is distinct, and it is bipartite (S/C prefixes), so the
+    symmetrized copy never duplicates an edge. All labels tie, and the
+    smallest-label tie-break picks the minimum neighbor. The remaining
+    rounds are the full majority vote."""
     from ..audit import audited_checkpoint
     from ..operators.cachepool import swap_persist
 
@@ -490,13 +497,15 @@ def g4_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         ).repartition(F.col("src")),
     )
+    # round 1 is a min-neighbor vote (see docstring): one map-combined
+    # aggregate over the src-partitioned edge table, no join
     labels = audited_checkpoint(
         "g4.round",
-        ed.select(F.col("src").alias("node")).distinct().select(
-            "node", F.col("node").alias("lbl")
-        ),
+        ed.groupBy("src")
+        .agg(F.min("dst").alias("lbl"))
+        .withColumnRenamed("src", "node"),
     )
-    for _ in range(_LPA_ROUNDS):
+    for _ in range(_LPA_ROUNDS - 1):
         msgs = ed.join(labels, ed["src"] == labels["node"]).select(
             F.col("dst").alias("node"), "lbl"
         )

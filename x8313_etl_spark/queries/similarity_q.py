@@ -491,10 +491,8 @@ def p_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # same stream-side parallelism fix as sim_neardup_exact: the n²
     # probe must fan out over the cores, not the scan's 1-2 partitions.
-    # The pair table is persisted via the keyed pool because concomp's
-    # symmetrizing union references it TWICE (and each propagation round
-    # joins against it) — without the persist the O(n²) probe re-runs
-    # per reference (measured 2× at 20k vectors).
+    # The pair table is persisted via the keyed pool, which files the
+    # O(n²) pair scan under its own ledger key; concomp reads it once.
     pairs = swap_persist(
         "similarity.semantic_pairs",
         a.repartition(default_parallelism())
