@@ -119,9 +119,6 @@ def test_incremental_dedup_band_join_shapes(spark, sf_dir):
     from x8313_etl_spark.operators.increment import incremental_near_dups
 
     d = _docs(spark, sf_dir)
-    # cache=False keeps the raw join lineage inspectable: the default
-    # path eagerly checkpoints the verdict (r8 cache-lifetime fix),
-    # which truncates the plan to a checkpoint scan
     out = incremental_near_dups(
         d.filter(F.col("doc_id") % 5 != 0),
         d.filter(F.col("doc_id") % 5 == 0),

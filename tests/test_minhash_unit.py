@@ -36,7 +36,7 @@ def test_short_docs_yield_no_pairs(spark):
 
 
 def test_native_signature_matches_hof_fold(spark):
-    """signature_table (native explode+agg sketch) must be bit-identical
+    """signature_table (the Arrow kernel sketch) must be bit-identical
     to the shingle_stage HOF-fold reference on every doc with shingles."""
     import pyspark.sql.functions as F
 

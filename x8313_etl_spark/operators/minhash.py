@@ -1,8 +1,8 @@
 """MinHash + LSH near-duplicate detection (SURVEY.md §2.10 L2).
 
-Classic shingle → minhash → band-bucket → candidate-join pipeline,
-entirely in JVM expressions (no UDFs; the production sketch path is
-plain native expressions — see ``signature_table`` — with the
+Classic shingle → minhash → band-bucket → candidate-join pipeline
+(the production sketch path is the integer-exact Arrow kernel in
+``signature_from_shingles`` — see ``signature_table`` — with the
 higher-order-function fold kept as the cross-checked reference form):
 
 1. k-word shingles per doc (functions/text.py `shingles`).
@@ -21,11 +21,8 @@ whose fan-in is bounded by band-bucket sizes — a bucket with B docs
 yields B² candidates, so it runs through
 ``operators/bandjoin.guarded_band_self_join`` with a live
 ``max_bucket_size`` cap — and (b) the verify join, bounded by the
-candidate count. Signature computation partial-aggregates map-side to
-one row per doc, so its exchange carries exactly the signature table
-(measured at 50k docs: full pipeline 26.2s → 6.7s vs the HOF-fold
-form, identical 250,383 pairs). All hash arithmetic is fixed-constant
-and deterministic:
+candidate count. Signature computation is map-only (no exchange).
+All hash arithmetic is fixed-constant and deterministic:
 the same corpus gives the same pairs on any cluster size.
 
 Determinism: every constant (P, A_i, B_i) is a pure function of the
@@ -76,8 +73,7 @@ def shingle_stage(
     staging through column attributes computes each exactly once per row.
 
     This is the HOF-fold reference form; ``signature_table`` below is
-    the production sketch path (identical signatures, all-native, 2.2×
-    faster end-to-end at 50k docs).
+    the production sketch path (identical signatures).
     """
     return (
         docs.select(
@@ -107,26 +103,12 @@ def shingle_table(
 def signature_table(
     docs: DataFrame, id_col: str, text_col: str, k: int = _SHINGLE_K
 ) -> DataFrame:
-    """(doc_id, sig) via the ALL-NATIVE sketch path: explode shingles,
-    hash each once per row (md5→bigint, plain expressions), then one
-    groupBy with 32 ``min(perm_i(h))`` native aggregates → the
-    signature array. Bit-identical to the HOF fold in
-    ``minhash_signature`` (asserted at 50k docs) but stays inside
-    whole-stage codegen, where the fold's ``aggregate``/``zip_with``
-    lambdas are interpreted per element — measured 15.9s → 7.3s for the
-    50k-doc sketch+persist.
-
-    Scale shape: the explode keeps each doc's shingles in their input
-    partition, so the min-aggregates partial-combine map-side to ONE
-    row per doc before the shuffle — the exchange carries exactly the
-    signature table, same bytes as a map-only computation would, at any
-    corpus size. Docs with < k words produce no rows (same semantics as
-    filtering empty shingle arrays).
-
-    r14: routed through the ``signature_from_shingles`` numpy kernel
-    (map-only, no exchange at all — see its docstring); this docstring's
-    aggregate shape survives as ``_signature_from_exploded``, the
-    reference form the kernel is bit-asserted against."""
+    """(doc_id, sig): ``shingle_table`` then the ``signature_from_shingles``
+    numpy kernel (map-only, no exchange at all — see its docstring).
+    Docs with < k words produce no rows (same semantics as filtering
+    empty shingle arrays). Bit-identical to the ``shingle_stage`` HOF
+    fold (``minhash_signature``), the reference form it is asserted
+    against in tests/test_minhash_unit.py."""
     return signature_from_shingles(shingle_table(docs, id_col, text_col, k))
 
 
@@ -211,24 +193,6 @@ def signature_from_shingles(sh: DataFrame) -> DataFrame:
 
     return sh.select("doc_id", "sh").mapInPandas(
         go, "doc_id long, sig array<bigint>"
-    )
-
-
-def _signature_from_exploded(ex: DataFrame) -> DataFrame:
-    """(doc_id, sig) from exploded (doc_id, s) shingle rows."""
-    h0 = F.pmod(
-        F.conv(F.substring(F.md5(F.col("s")), 1, 15), 16, 10).cast("bigint"),
-        F.lit(MINHASH_P),
-    )
-    exh = ex.select("doc_id", h0.alias("h0"))
-    aggs = [
-        F.min(F.pmod(F.col("h0") * F.lit(PERM_A[i]) + F.lit(PERM_B[i]), F.lit(MINHASH_P))).alias(f"s{i}")
-        for i in range(N_HASHES)
-    ]
-    return (
-        exh.groupBy("doc_id")
-        .agg(*aggs)
-        .select("doc_id", F.array(*[f"s{i}" for i in range(N_HASHES)]).alias("sig"))
     )
 
 

@@ -1388,9 +1388,7 @@ def p_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     index = d.filter(F.col("doc_id") % _DELTA_MOD != 0)
     batch = d.filter(F.col("doc_id") % _DELTA_MOD == 0)
-    return incremental_near_dups(
-        index, batch, threshold=_INC_TAU, ledger_key="p_incremental_dedup"
-    )
+    return incremental_near_dups(index, batch, threshold=_INC_TAU)
 
 
 def _golden_sql() -> str:
@@ -2406,8 +2404,8 @@ def p_budget_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # p_dedup_recall_eval (registered round 13, substituted into batch K's
 # fifth slot after g14_label_propagation was found output-identical to
 # the already-registered g4 — see ROADMAP.md; twin pre-verified in the
-# batch-M candidate suite at both fixture sfs —
-# tests/test_r15_candidates.py)
+# batch-M candidate suite at both fixture sfs, kept in git history:
+# `git show a2241ba:tests/`)
 # ---------------------------------------------------------------------------
 
 _EVAL_TAU = 0.3  # the l2 family's design threshold

@@ -269,31 +269,6 @@ HYPERPLANES32: list[list[float]] = [
 ]
 
 
-def _sketch_expr(vec) -> "F.Column":
-    """bigint: bit j = 1 iff dot(vec, plane_j) > 0. ±1 components make
-    the dot a signed sum — exact-double fold, same order both engines."""
-    bits = [
-        F.when(
-            F.aggregate(
-                F.zip_with(
-                    vec,
-                    F.array(*[F.lit(c) for c in HYPERPLANES[j]]),
-                    lambda x, p: x.cast("double") * p,
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            > 0,
-            F.lit(1 << j).cast("bigint"),
-        ).otherwise(F.lit(0).cast("bigint"))
-        for j in range(_N_PLANES)
-    ]
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
-
-
 def _sql_sketch(vec: str, planes: list[list[float]] | None = None) -> str:
     planes = HYPERPLANES if planes is None else planes
     terms = []
@@ -1088,10 +1063,9 @@ WHERE rn <= {_PQ_TOPK}
 def sim_rerank_two_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-stage retrieval — the production ANN shape: stage 1 scores
     PQ CODES by asymmetric distance (compressed-domain scan, the
-    sim_pq_topk core, shared via _pq_adc_scores and the pooled score
-    table) and keeps 25 candidates per probe; stage 2 re-ranks ONLY
-    those candidates by exact cosine over the full vectors and returns
-    the top 5. This is how real systems spend their compute: the cheap
+    sim_pq_topk core, shared via _pq_adc_scores) and keeps 25
+    candidates per probe; stage 2 re-ranks ONLY those candidates by
+    exact cosine over the full vectors and returns the top 5. This is how real systems spend their compute: the cheap
     approximate scan touches everything, the exact math touches
     k·candidates rows — here stage 2 reads 25 vectors per probe instead
     of the corpus, so its cost is probe-budget-bounded at any corpus
