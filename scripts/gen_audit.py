@@ -1,8 +1,9 @@
 """Repo-wide shuffle audit — every registered query's physical plan
-scanned for the 100 TB red-flag node types (the scan definition —
-FLAGS / count_hits — and the justified allowlist live in
-tests/test_shuffle_audit.py; this script imports them so the artifact
-and the pytest gate can never audit different node sets).
+scanned for the 100 TB red-flag node types. The scan definition
+(FLAGS / count_hits) and the cold sweep (cold_plans) live in
+x8313_etl_spark/audit.py, the justified allowlists in
+tests/test_shuffle_audit.py; this script imports both, so the artifact
+and the pytest gate can never audit different node sets.
 
 PLANS.md audits the bench set in detail; this sweep covers ALL queries
 (including streaming/timeseries, which the pytest gate skips because
@@ -27,39 +28,24 @@ sys.path.insert(0, ROOT)
 from tests.test_shuffle_audit import (  # noqa: E402
     ALLOWED,
     ALLOWED_LEDGER,
-    count_hits,
     ledger_violations,
 )
+from x8313_etl_spark import audit as plan_audit  # noqa: E402
 
 
 def audit(
     sf_dir: str,
 ) -> tuple[dict[str, dict[str, int]], dict[str, str], dict[str, dict[str, int]]]:
-    from x8313_etl_spark import audit as plan_audit
-    from x8313_etl_spark.registry import registry
     from x8313_etl_spark.session import get_spark
 
     spark = get_spark("shuffle-audit")
     spark.sparkContext.setLogLevel("ERROR")
-    from x8313_etl_spark.operators.cachepool import clear_pool
-
     flagged: dict[str, dict[str, int]] = {}
     errors: dict[str, str] = {}
-    for name, spec in registry().items():
-        try:
-            # cold pool per query: each count is the query's own
-            # first-build plan, order-independent (a pooled table
-            # materialized by an earlier query re-expands its subtree
-            # in later plan strings — tests/test_shuffle_audit.py's
-            # audit_hits clears identically)
-            clear_pool(forget_ledger=False)
-            df = spec.fn(spark, sf_dir)
-            plan = df._jdf.queryExecution().executedPlan().toString()
-        except Exception as exc:
-            errors[name] = str(exc)[:160]
-            continue
-        hits = count_hits(plan)
-        if hits:
+    for name, plan in plan_audit.cold_plans(spark, sf_dir, skip=()):
+        if isinstance(plan, Exception):
+            errors[name] = str(plan)[:160]
+        elif hits := plan_audit.count_hits(plan):
             flagged[name] = hits
     ledger = plan_audit.ledger()
     spark.stop()

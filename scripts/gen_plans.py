@@ -1,7 +1,8 @@
 """Regenerate PLANS.md — physical-plan audit of every bench-set query.
 
 For each query in the bench set, builds the DataFrame at the given
-sf_dir (plan-only; nothing executes) and summarizes the scale-critical
+sf_dir from a cold cache (x8313_etl_spark/audit.py's cold_plans sweep;
+plan-only, nothing executes) and summarizes the scale-critical
 plan features: shuffle exchanges, broadcast joins/exchanges, sort-merge
 joins, WindowGroupLimit partial top-k, whole-stage-codegen span count,
 and whether the parquet scan carries pushed filters. This is the
@@ -23,8 +24,9 @@ sys.path.insert(0, ROOT)
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    from x8313_etl_spark.session import get_spark
+    from x8313_etl_spark.audit import cold_plans
     from x8313_etl_spark.registry import bench_queries
+    from x8313_etl_spark.session import get_spark
 
     spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
@@ -43,15 +45,18 @@ def main() -> None:
         "| query | shuffles | all-to-one | broadcasts | SMJ | WindowGroupLimit | pushed |",
         "|---|---|---|---|---|---|---|",
     ]
-    for name, spec in sorted(bench_queries().items()):
-        if spec.category == "streaming":
+    bench = bench_queries()
+    plans = dict(cold_plans(spark, sf_dir, names=bench, skip=("streaming",)))
+    for name in sorted(bench):
+        if name not in plans:
             lines.append(
                 f"| {name} | — | — | — | — | — | — (streaming runner owns execution; "
                 "state-partition policy in streaming.py) |"
             )
             continue
-        df = spec.fn(spark, sf_dir)
-        plan = df._jdf.queryExecution().executedPlan().toString()
+        plan = plans[name]
+        if isinstance(plan, Exception):
+            raise plan
         # count EVERY exchange flavor — hash, range, round-robin, AND
         # SinglePartition: an exchange the audit can't see is exactly
         # the failure mode this table exists to prevent (a repartition()
@@ -128,7 +133,7 @@ def main() -> None:
     with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     spark.stop()
-    print(f"wrote PLANS.md: {len(bench_queries())} queries")
+    print(f"wrote PLANS.md: {len(bench)} queries")
 
 
 if __name__ == "__main__":

@@ -1,18 +1,20 @@
 #!/usr/bin/env python3
-"""STRING-vs-TRUE triage for the scan-sweep hits (ROADMAP r11 queue).
+"""Raw-vs-live FileScan report over the cold-plan sweep.
 
-scan_sweep.py counts FileScan strings in the executed plan, which
-OVERSTATES for materialized plans: a persisted/checkpointed subtree
-re-prints its whole child plan under every InMemoryTableScan reference
-while executing exactly once. This script strips every subtree rooted
-at an InMemoryRelation line (by indentation) and counts the FileScans
-that remain — those are the scans Spark will actually re-execute per
-plan branch. dup>=2 on the SAME table in the stripped plan = TRUE
-re-execution worth fixing; dup only in the unstripped count = plan
--string re-expansion, leave it alone.
+A raw FileScan count of the executed plan STRING overstates for
+materialized plans: a persisted/checkpointed subtree re-prints its whole
+child plan under every InMemoryTableScan reference while executing
+exactly once. ``strip_cached`` (x8313_etl_spark/audit.py) drops every
+subtree rooted at an InMemoryRelation line; the FileScans that remain
+are the scans Spark really re-executes per plan branch. dup>=2 on the
+SAME table in the stripped plan = TRUE re-execution; dup only in the
+raw count = plan-string re-expansion, leave it alone.
+tests/test_scan_reexec.py gates the 3+ live tier.
+
+Prints one line per query that has a duplicate scan (raw or live).
 
 Usage: python scripts/scan_triage.py [sf_dir] [query ...]
-       (default sf0.001, ROADMAP triage list)
+       (default sf0.001, every non-streaming registered query)
 """
 
 import os
@@ -22,79 +24,33 @@ from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TRIAGE = [
-    # 5-8x tier
-    "sim_rerank_two_stage", "sim_lsh_neardup", "sim_ivfpq_topk",
-    "p_rag_context_pack", "p_bm25_topk", "p_er_blocked_multikey",
-    # 3-4x tier
-    "dq3_constraint_audit", "p_ngram_lm_kneser_ney", "m3_incremental_refresh",
-    "l2c_ngram_jaccard", "w14_pattern_quantifiers", "a14_cohort_retention",
-    "p_mix_schedule", "p_contamination_overlap_score", "l6_tfidf",
-    "p_perplexity_filter", "p_negative_samples", "m1_merge_upsert",
-    "p_decontaminate", "p_unigram_encode",
-]
-
-
-def _indent(line: str) -> int:
-    return len(line) - len(line.lstrip(" :+-*("))
-
-
-def strip_cached(plan: str) -> str:
-    """Remove every subtree rooted at an InMemoryRelation line."""
-    out, skip_to = [], None
-    for line in plan.splitlines():
-        ind = _indent(line)
-        if skip_to is not None:
-            if line.strip() and ind > skip_to:
-                continue
-            skip_to = None
-        if "InMemoryRelation" in line:
-            skip_to = ind
-            continue
-        out.append(line)
-    return "\n".join(out)
-
 
 def run() -> None:
-    from x8313_etl_spark.operators.cachepool import clear_pool
-    from x8313_etl_spark.registry import registry
+    from x8313_etl_spark.audit import cold_plans, strip_cached
     from x8313_etl_spark.session import get_spark
 
     args = sys.argv[1:]
     sf_dir = args[0] if args else "/root/testdata/sf0.001"
-    names = args[1:] or TRIAGE
     tag = os.path.basename(sf_dir.rstrip("/"))
     spark = get_spark("scan-triage", cpus=8)
     spark.sparkContext.setLogLevel("ERROR")
-    specs = registry()
-    for name in names:
-        spec = specs.get(name)
-        if spec is None:
-            print(f"?? {name}: not registered")
+    # finditer + whole-match span: with a bare groupless alternative,
+    # findall would return '' for every .scratch hit and conflate all
+    # scratch tables under one Counter key (ADVICE r10)
+    pat = re.compile(rf"{re.escape(tag)}/(\w+)\.parquet|\.scratch/[\w/]+")
+    for name, plan in cold_plans(spark, sf_dir, names=args[1:] or None):
+        if isinstance(plan, Exception):
+            print(f"ERR {name}: {type(plan).__name__}")
             continue
-        clear_pool(forget_ledger=False)
-        try:
-            plan = (
-                spec.fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-            )
-        except Exception as exc:  # noqa: BLE001 - diagnostic sweep
-            print(f"ERR {name}: {type(exc).__name__}")
-            continue
-        live = strip_cached(plan)
-        # finditer + whole-match span: with a bare groupless alternative,
-        # findall would return '' for every .scratch hit and conflate all
-        # scratch tables under one Counter key (ADVICE r10)
-        pat = re.compile(rf"{re.escape(tag)}/(\w+)\.parquet|\.scratch/[\w/]+")
-        raw_tabs = Counter(
-            m.group(1) or m.group(0) for m in pat.finditer(plan)
-        )
+        raw_tabs = Counter(m.group(1) or m.group(0) for m in pat.finditer(plan))
         live_tabs = Counter(
-            m.group(1) or m.group(0) for m in pat.finditer(live)
+            m.group(1) or m.group(0) for m in pat.finditer(strip_cached(plan))
         )
         raw_dup = {t: k for t, k in raw_tabs.items() if k >= 2}
         true_dup = {t: k for t, k in live_tabs.items() if k >= 2}
-        verdict = "TRUE-REEXEC" if true_dup else ("string-only" if raw_dup else "clean")
-        print(f"{name:32s} {verdict:12s} raw={dict(raw_dup)} live={dict(true_dup)}")
+        if raw_dup:
+            verdict = "TRUE-REEXEC" if true_dup else "string-only"
+            print(f"{name:32s} {verdict:12s} raw={dict(raw_dup)} live={dict(true_dup)}")
 
 
 if __name__ == "__main__":

@@ -11,6 +11,7 @@ carry fp risk before the driver does.
 from __future__ import annotations
 
 import datetime as dt
+import heapq
 import math
 from dataclasses import dataclass
 from decimal import Decimal
@@ -211,3 +212,25 @@ def compare_query(spark, spec: QuerySpec, sf_dir: str) -> CompareResult:
                     f"value mismatch row {i} col {c}: spark={a!r} oracle={b!r}",
                 )
     return CompareResult(spec.name, True, f"{len(sdf)} rows exact")
+
+
+def dijkstra(edges, seeds) -> dict:
+    """Exact multi-source shortest distances over weighted directed
+    ``edges`` ((src, dst, w) with w >= 0): the driver-side reference the
+    Spark SSSP operators (operators/sssp.py) are checked against."""
+    adj = {}
+    for s, d, w in edges:
+        adj.setdefault(s, []).append((d, w))
+    dist = {n: 0 for n in seeds}
+    pq = [(0, n) for n in dist]
+    heapq.heapify(pq)
+    while pq:
+        dd, u = heapq.heappop(pq)
+        if dd > dist[u]:
+            continue
+        for v, w in adj.get(u, []):
+            nd = dd + w
+            if nd < dist.get(v, float("inf")):
+                dist[v] = nd
+                heapq.heappush(pq, (nd, v))
+    return dist

@@ -539,9 +539,9 @@ def test_delta_stepping_matches_dijkstra(spark, edges, delta, max_buckets):
     node with true distance < max_buckets·Δ (the settled horizon), on
     random weighted digraphs, across Δ values (Δ=1 ≈ Dijkstra schedule,
     large Δ ≈ Bellman-Ford)."""
-    import heapq
-
     from x8313_etl_spark.operators.sssp import delta_stepping
+
+    from .oracle_utils import dijkstra
 
     e = spark.createDataFrame(
         [(s, d, w) for s, d, w in edges], "src int, dst int, w long"
@@ -555,24 +555,8 @@ def test_delta_stepping_matches_dijkstra(spark, edges, delta, max_buckets):
         r.node: r.dist
         for r in delta_stepping(e, sdf, delta, max_buckets).collect()
     }
-    # reference: multi-source Dijkstra
-    adj = {}
-    for s, d, w in edges:
-        adj.setdefault(s, []).append((d, w))
-    dist = {n: 0 for n in seeds}
-    pq = [(0, n) for n in seeds]
-    heapq.heapify(pq)
-    while pq:
-        dd, u = heapq.heappop(pq)
-        if dd > dist.get(u, float("inf")):
-            continue
-        for v, w in adj.get(u, []):
-            nd = dd + w
-            if nd < dist.get(v, float("inf")):
-                dist[v] = nd
-                heapq.heappush(pq, (nd, v))
     horizon = max_buckets * delta
-    want = {n: d for n, d in dist.items() if d < horizon}
+    want = {n: d for n, d in dijkstra(edges, seeds).items() if d < horizon}
     assert got == want, (edges, delta, max_buckets)
 
 

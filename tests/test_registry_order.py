@@ -154,20 +154,11 @@ def test_no_query_specs_outside_the_registry():
     a QuerySpec of its own, so the battery holds no code for queries
     that are not registered. Unregistered candidates live in git
     history and come back into ``x8313_etl_spark/queries/`` in the
-    change that registers them.
-
-    Three candidate modules are still in the tree, waiting for their
-    removal; ``retained`` caps their QuerySpec calls, so the bank can
-    only shrink. Drop an entry when its module goes."""
+    change that registers them."""
     import re
     from collections import Counter
     from pathlib import Path
 
-    retained = {
-        "test_spare5_candidates.py": 1,
-        "test_spare7_candidates.py": 5,
-        "test_spare8_candidates.py": 5,
-    }
     call = re.compile(r"\bQuerySpec\s*\(")
     calls = Counter(
         p.name
@@ -175,5 +166,4 @@ def test_no_query_specs_outside_the_registry():
         for line in p.read_text().splitlines()
         if call.search(line)
     )
-    over = {f: n for f, n in calls.items() if n > retained.get(f, 0)}
-    assert not over, over
+    assert not calls, calls

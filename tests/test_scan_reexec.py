@@ -8,9 +8,9 @@ fixed every offender worth fixing (pool/checkpoint the many-consumer
 bounded intermediate, or explode instead of self-union). This test
 turns that triage into a regression gate: it strips cached
 (InMemoryRelation) subtrees from every registered query's executed
-plan, counts the LIVE FileScans per source table, and fails on any
-query scanning one table 3+ times that is not in the adjudicated
-allowlist below.
+plan (the shared cold sweep, tests/conftest.py::cold_plans), counts the
+LIVE FileScans per source table, and fails on any query scanning one
+table 3+ times that is not in the adjudicated allowlist below.
 
 The 2x tier is NOT gated: two live scans are usually the semantics
 (self-joins, set operations, both sides of an interval/asof join,
@@ -25,11 +25,7 @@ import os
 import re
 from collections import Counter
 
-import pytest
-
-from scripts.scan_triage import strip_cached
-from x8313_etl_spark.operators.cachepool import clear_pool
-from x8313_etl_spark.registry import registry
+from x8313_etl_spark.audit import strip_cached
 
 #: query -> why 3+ live scans of one table is the RIGHT plan at scale.
 #: Every entry was adjudicated in the r10 triage (ROADMAP.md scan-sweep
@@ -78,63 +74,46 @@ ALLOWED_REEXEC = {
 }
 
 
-def _cold(spark):
-    """Cold-cache measurement context: empty the keyed pool AND the
-    session CacheManager. The gate measures each query's own FIRST
-    build (the audit semantics); after a long test session the
-    CacheManager holds hundreds of ambient entries whose plan
-    substitution interacts with the fns' internal persist() calls
-    order-dependently (observed: l2_near_dup_pairs printed 16 bare
-    scans mid-suite but is clean cold — its raw persists no-op'd
-    against ambient equal-plan entries that were no longer
-    substituted). A cold manager makes the count deterministic."""
-    clear_pool(forget_ledger=False)
-    spark.catalog.clearCache()
+def _live_scans(plan: str, sf_dir: str) -> Counter:
+    """Live FileScan count per fixture table once cached subtrees are
+    stripped."""
+    tag = re.escape(os.path.basename(sf_dir.rstrip("/")))
+    return Counter(re.findall(rf"{tag}/(\w+)\.parquet", strip_cached(plan)))
 
 
-@pytest.mark.usefixtures("spark")
-def test_no_unadjudicated_true_reexecution(spark, sf_dir):
-    tag = os.path.basename(sf_dir.rstrip("/"))
+def test_no_unadjudicated_true_reexecution(cold_plans, sf_dir):
     offenders = {}
-    for name, spec in registry().items():
-        if spec.category in ("streaming", "timeseries"):
-            continue  # their fns execute real microbatch jobs
-        _cold(spark)
-        plan = (
-            spec.fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-        )
-        live = strip_cached(plan)
-        tabs = Counter(re.findall(rf"{re.escape(tag)}/(\w+)\.parquet", live))
+    for name, plan in cold_plans[0].items():
+        if isinstance(plan, Exception):
+            offenders[name] = repr(plan)
+            continue
         bad = {
             t: k
-            for t, k in tabs.items()
+            for t, k in _live_scans(plan, sf_dir).items()
             if k >= 3 and ALLOWED_REEXEC.get(name) != t
         }
         if bad:
             offenders[name] = bad
     assert not offenders, (
         "TRUE re-execution (3+ live scans of one table, not in "
-        f"ALLOWED_REEXEC): {offenders} — pool/checkpoint the "
-        "many-consumer intermediate or explode instead of self-union "
-        "(ROADMAP.md scan-sweep section), or adjudicate with a written "
-        "argument."
+        f"ALLOWED_REEXEC) or a build that raised: {offenders} — "
+        "pool/checkpoint the many-consumer intermediate or explode "
+        "instead of self-union (ROADMAP.md scan-sweep section), or "
+        "adjudicate with a written argument."
     )
 
 
-def test_allowlist_entries_still_reexecute(spark, sf_dir):
+def test_allowlist_entries_still_reexecute(cold_plans, sf_dir):
     """Keep ALLOWED_REEXEC honest: drop entries whose queries no longer
     re-scan 3+ times (a stale allowlist would mask a future regression
-    on a since-fixed query)."""
-    tag = os.path.basename(sf_dir.rstrip("/"))
+    on a since-fixed query). A name the sweep did not build counts 0."""
     stale = []
     for name, table in ALLOWED_REEXEC.items():
-        spec = registry()[name]
-        _cold(spark)
-        plan = (
-            spec.fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-        )
-        live = strip_cached(plan)
-        n = len(re.findall(rf"{re.escape(tag)}/{table}\.parquet", live))
+        plan = cold_plans[0].get(name, "")
+        if isinstance(plan, Exception):
+            stale.append((name, table, repr(plan)))
+            continue
+        n = _live_scans(plan, sf_dir)[table]
         if n < 3:
             stale.append((name, table, n))
     assert not stale, f"stale ALLOWED_REEXEC entries (live count < 3): {stale}"

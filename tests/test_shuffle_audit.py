@@ -6,15 +6,15 @@ below WITH a justification, and allowlisted counts must not grow. A new
 CartesianProduct / BroadcastNestedLoopJoin / Exchange SinglePartition
 anywhere else fails this test — the o1 fix (an unpartitioned rank
 window over every customer row, found by exactly this sweep) is why it
-exists. ``FLAGS``/``count_hits`` are the single scan definition —
-scripts/gen_audit.py imports them (and ALLOWED) so the artifact and the
-gate can never audit different node sets.
+exists. ``FLAGS``/``count_hits`` and the ``cold_plans`` sweep live in
+x8313_etl_spark/audit.py; scripts/gen_audit.py uses them (and ALLOWED)
+so the artifact and the gate can never audit different node sets.
 
-Streaming/timeseries queries are excluded here (their fns execute real
-microbatch jobs); the full sweep including them is scripts/gen_audit.py,
-which exits non-zero on any unjustified or errored entry. Its only
-additional finding (ts_sliding_dau) is recorded in ALLOWED for the
-artifact even though this test does not reach it.
+Streaming/timeseries queries are excluded here (``SKIP_CATEGORIES``:
+their fns execute real microbatch jobs); the full sweep including them
+is scripts/gen_audit.py, which exits non-zero on any unjustified or
+errored entry. Its only additional finding (ts_sliding_dau) is recorded
+in ALLOWED for the artifact even though this test does not reach it.
 """
 
 from __future__ import annotations
@@ -22,12 +22,8 @@ from __future__ import annotations
 import pytest
 
 from x8313_etl_spark import audit
-from x8313_etl_spark.audit import FLAGS, count_hits  # single scan definition
+from x8313_etl_spark.audit import SKIP_CATEGORIES, count_hits
 from x8313_etl_spark.registry import registry
-
-#: categories whose fns execute streaming jobs — audited by
-#: scripts/gen_audit.py instead (see module docstring)
-SKIP_CATEGORIES = ("streaming", "timeseries")
 
 
 #: query -> (flag counts, justification). Counts are ceilings: growth
@@ -468,34 +464,17 @@ def ledger_violations(
 
 
 @pytest.fixture(scope="module")
-def audit_hits(spark, sf_dir) -> dict[str, dict[str, int]]:
-    """One sweep shared by both tests — each query fn builds (and, for
-    the few side-effecting ones, executes) exactly once per run."""
-    from x8313_etl_spark.operators.cachepool import clear_pool
-
-    # COLD pool PER QUERY: a pooled table materialized by an earlier
-    # query in the sweep (e.g. the IVF assignment — g11's eager edges
-    # checkpoint executes it as a side effect) makes later plan strings
-    # re-expand the cached subtree and the node counts become
-    # order-dependent; clearing before EVERY fn makes each count the
-    # query's own first-build plan — the same thing ALLOWED justifies
-    # and scripts/gen_audit.py measures (which clears identically)
-    clear_pool()  # initial: drop earlier tests' warm pool AND recordings
-    hits: dict[str, dict[str, int]] = {}
-    for name, spec in registry().items():
-        if spec.category in SKIP_CATEGORIES:
-            continue
-        # cold pool, but KEEP the cold ledger recordings made so far
-        clear_pool(forget_ledger=False)
-        plan = (
-            spec.fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-        )
-        hits[name] = count_hits(plan)
-    return hits
+def audit_hits(cold_plans) -> dict[str, dict[str, int]]:
+    """Flag counts of every query whose cold build succeeded, read from
+    the shared sweep (tests/conftest.py::cold_plans)."""
+    plans, _ledger = cold_plans
+    return {name: count_hits(p) for name, p in plans.items() if isinstance(p, str)}
 
 
-def test_no_unjustified_scale_red_flags(audit_hits):
-    failures = []
+def test_no_unjustified_scale_red_flags(cold_plans, audit_hits):
+    failures = [
+        (name, repr(p)) for name, p in cold_plans[0].items() if isinstance(p, Exception)
+    ]
     for name, hits in audit_hits.items():
         allowed = ALLOWED.get(name, ({}, ""))[0]
         for flag, n in hits.items():
@@ -503,26 +482,26 @@ def test_no_unjustified_scale_red_flags(audit_hits):
                 failures.append((name, flag, n, allowed.get(flag, 0)))
     assert not failures, (
         "unjustified scale red flags (add to ALLOWED only with a real "
-        f"justification): {failures}"
+        f"justification) or queries whose build raised: {failures}"
     )
 
 
-def test_ledger_has_no_unjustified_flags(audit_hits):
+def test_ledger_has_no_unjustified_flags(cold_plans):
     """The materialization ledger covers plans that localCheckpoint /
-    persist hide from the returned-DataFrame scan above. audit_hits is a
-    dependency so the full sweep has populated the ledger."""
-    bad = ledger_violations(audit.ledger())
+    persist hide from the returned-DataFrame scan above; the sweep's
+    end-of-sweep snapshot holds every cold recording."""
+    bad = ledger_violations(cold_plans[1])
     assert not bad, (
         "unjustified red flags in materialized (persisted/checkpointed) "
         f"plans — add to ALLOWED_LEDGER only with a real justification: {bad}"
     )
 
 
-def test_ledger_allowlist_has_no_stale_entries(audit_hits):
+def test_ledger_allowlist_has_no_stale_entries(cold_plans):
     """Per-flag staleness, same discipline as the query allowlist: a
     ceiling whose flag no longer fires must be deleted, and every
     allowlisted key must actually be recorded by the sweep."""
-    got = audit.ledger()
+    got = cold_plans[1]
     stale = []
     for key, (flags, _why) in ALLOWED_LEDGER.items():
         hits = got.get(key)

@@ -108,8 +108,9 @@ def delta_stepping(
     deterministic — both engines replay the identical schedule — it is
     just no longer guaranteed equal to true distances; the registered
     query must verify sufficiency of its cap on the fixture the same
-    way seed-nonemptiness is verified (tests/test_r7_candidates.py
-    pins cap=2 ≡ cap=Δ on every fixture sf).
+    way seed-nonemptiness is verified (g8's cap=2 is pinned equal to
+    exact Dijkstra distances on every fixture sf by
+    tests/test_registered_guards.py::test_g8_light_round_cap_suffices_on_fixtures).
 
     ``ledger_key``: routes every per-merge checkpoint through
     audited_checkpoint (the registered-query invariant — the shuffle

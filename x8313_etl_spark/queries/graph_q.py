@@ -1055,8 +1055,8 @@ def g8_delta_stepping(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-empty at every sf); it is fetched as a one-row scalar (the t16
     sentinel pattern: a single-row agg ``first()``, bounded by
     construction — never a row collect). The light-round cap is FIXED
-    at 2 so the twin unrolls a Δ-independent schedule; cap=2 ≡ full
-    fixpoint is pinned on every fixture sf by
+    at 2 so the twin unrolls a Δ-independent schedule; cap=2 ≡ exact
+    Dijkstra distances is pinned on every fixture sf by
     tests/test_registered_guards.py.
 
     Scale: vs g7, round count is bounded by path WEIGHT/Δ rather than
