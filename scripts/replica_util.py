@@ -1,8 +1,9 @@
-"""Shared key-shifted replica builder for the 10x scale sweeps.
+"""Key-shifted table replicas for the 10x scale checks.
 
-Every scale10x_* script replicates sf0.1 tables with per-copy key
-shifts (so foreign keys resolve and probe moduli keep their meaning);
-this is the ONE implementation (review round 6: four drifting copies).
+A replica stacks copies of a table with per-copy key shifts, so
+foreign keys resolve and probe moduli keep their meaning. Callers:
+``scripts/scale10x_bench.py build`` (the ~sf1 replica of sf0.1) and
+perfbench's seeded replicas (perfbench/gen.py).
 """
 
 from __future__ import annotations

@@ -167,3 +167,34 @@ def test_no_query_specs_outside_the_registry():
         if call.search(line)
     )
     assert not calls, calls
+
+
+def test_no_round_stamped_scripts():
+    """Measurements go through the standing tools, not one-off copies:
+    ``scripts/`` holds no round-stamped ``*_r<N>*.py`` file, the only
+    10× script is ``scale10x_bench.py`` (its ``sweep`` mode times any
+    registered query), and every ``scripts/<name>.py`` the package,
+    the scripts, bench.py or README.md cite exists — a retired script
+    is cited as ``git show <sha>:scripts/<name>.py``."""
+    import re
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    scripts = sorted(p.name for p in (root / "scripts").glob("*.py"))
+    assert [n for n in scripts if re.search(r"_r\d+", n)] == []
+    assert [n for n in scripts if n.startswith("scale10x_")] == ["scale10x_bench.py"]
+
+    cite = re.compile(r"(git show [0-9a-f]{7,40}:)?scripts/(\w+\.py)")
+    sources = [
+        *sorted((root / "x8313_etl_spark").rglob("*.py")),
+        *sorted((root / "scripts").glob("*.py")),
+        root / "bench.py",
+        root / "README.md",
+    ]
+    missing = {
+        (str(p.relative_to(root)), m.group(2))
+        for p in sources
+        for m in cite.finditer(p.read_text())
+        if m.group(1) is None and m.group(2) not in scripts
+    }
+    assert not missing, sorted(missing)

@@ -1158,8 +1158,9 @@ def a26_dim_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     a CONSTANT d² per vector, never rows×rows), and a groupBy(i, j)
     whose map-side combine collapses to d²/2 cells before the
     exchange. Upper triangle only (i ≤ j); d=64 keeps the output a
-    2080-row table. 10× sweep: scripts/scale10x_r8.py (linear law,
-    PERF.md). Operator: operators/covariance.py."""
+    2080-row table. 10× sweep: linear law (PERF.md;
+    git show 0b946b4:scripts/scale10x_r8.py). Operator:
+    operators/covariance.py."""
     from ..operators.covariance import dim_comoment
 
     dim, qscale = _a26_dims()

@@ -395,7 +395,12 @@ def p_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     are aggregates of that pruned table plus one map-only doc-length
     pass; final agg shuffles (query, doc) pairs bounded by the pruned
     postings; top-k is a WindowGroupLimit. Self-retrieval sanity: each
-    query's own doc ranks #1 (tested)."""
+    query's own doc ranks #1 (tested).
+
+    Building the DataFrame runs a Spark job: the query-term set
+    (``qset``) is collected driver-side before the plan is returned, so
+    a plan dump or registry sweep that only builds this query still
+    executes that job."""
     d = load_table(spark, sf_dir, "documents")
     stats = d.agg(
         F.count(F.lit(1)).cast("double").alias("n_docs"),
@@ -1446,13 +1451,13 @@ def p_query_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-union trap (p_item_cf's r10 lesson). Rank ties break on the
     term string. 10×-swept at authoring (5.3→21.6 s — the BM25
     corpus-explode law), re-swept at registration
-    (scripts/scale10x_r11.py) and after this rework
-    (scripts/scale10x_r12.py). The documents scan is POOLED
-    (swap_persist): four consumers (tf, df, query terms, N) would
-    otherwise each re-execute it per plan branch — the explode stays
-    un-materialized, re-run map-only from the cached scan per consumer
-    (caught at registration by tests/test_scan_reexec.py: 6 live
-    scans pre-pool)."""
+    (git show 0b946b4:scripts/scale10x_r11.py) and after this
+    rework (git show 0b946b4:scripts/scale10x_r12.py). The
+    documents scan is POOLED (swap_persist): four consumers (tf, df,
+    query terms, N) would otherwise each re-execute it per plan
+    branch — the explode stays un-materialized, re-run map-only from
+    the cached scan per consumer (caught at registration by
+    tests/test_scan_reexec.py: 6 live scans pre-pool)."""
     from ..audit import audited_checkpoint
     from ..operators.cachepool import swap_persist
 

@@ -1256,7 +1256,7 @@ def g11_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows instead of re-executing the dominant self-join stage (the r8
     review catch — the checkpoint halved the 10× sweep). The top-k
     prune is a WindowGroupLimit below the shuffle. 10× sweep: 1.8×
-    (scripts/scale10x_r8.py; PERF.md growth law)."""
+    (git show 0b946b4:scripts/scale10x_r8.py; PERF.md growth law)."""
     from ..functions.vector import dot
     from .similarity_q import _ivf_assign
 
@@ -1603,7 +1603,7 @@ def g13_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode. Nodes with deg < 2 have no wedges and are excluded (lcc
     undefined). 10×-swept at authoring (11.5→15.0 s, 1.3× — the
     threshold keeps wedge volume flat) and re-swept at registration
-    (scripts/scale10x_r11.py)."""
+    (git show 0b946b4:scripts/scale10x_r11.py)."""
     e = _cosupply_edges(spark, sf_dir, "g13.edges")  # s1 < s2
     # wedges centered anywhere: join e(a,b) ⋈ e(b,c) with a<b<c, close
     # with e(a,c) — each triangle found exactly once as (a<b<c)

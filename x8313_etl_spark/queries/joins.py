@@ -744,7 +744,7 @@ def j18_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     convention) so both engines pick identical representatives.
     Tie-prefers-backward pinned by a crafted-fixture guard
     (tests/test_registered_guards.py); 10x sweep ~linear
-    (scripts/scale10x_r9.py)."""
+    (git show 0b946b4:scripts/scale10x_r9.py)."""
     ev = load_table(spark, sf_dir, "events")
     p = ev.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("purchase_id"),
@@ -831,7 +831,8 @@ def j19_scd2_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimensions are versions-per-entity small). The twin composes the
     verified _W9_SQL constant (the named-constant rule). Exactly-one-
     version-per-fact pinned in tests/test_registered_guards.py; 10x
-    sweep 1.6x wall for 10x facts (scripts/scale10x_r9.py)."""
+    sweep 1.6x wall for 10x facts
+    (git show 0b946b4:scripts/scale10x_r9.py)."""
     from .windows import w9_scd2_intervals
 
     dim = w9_scd2_intervals(spark, sf_dir).select(

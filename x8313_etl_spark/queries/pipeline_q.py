@@ -1007,12 +1007,12 @@ def p_er_blocked_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin (it scores every probe-row × candidate-row pair) hash-matches —
     the interning is verified as an algebraic identity, not assumed.
 
-    Scale: measured 10× (scripts/scale10x_r6.py) — the row-level form
-    was 3.0 s → 388 s at 10× (same 64-name vocabulary, so every block
-    grew 10× AND probes grew 10×: Σ block² is 100× pair work — the
-    classic ER trap); the interned form's fuzzy core is
-    vocabulary-bounded (constant here) and its row-side work is two
-    linear equi-joins. When the name domain is high-cardinality
+    Scale: measured 10× (git show 0b946b4:scripts/scale10x_r6.py) —
+    the row-level form was 3.0 s → 388 s at 10× (same 64-name
+    vocabulary, so every block grew 10× AND probes grew 10×: Σ block²
+    is 100× pair work — the classic ER trap); the interned form's
+    fuzzy core is vocabulary-bounded (constant here) and its row-side
+    work is two linear equi-joins. When the name domain is high-cardinality
     (interning ≈ no-op), blocking granularity is the dial again: add
     finer keys (phonetic, q-grams) and the cap-or-salt postures of
     operators/bandjoin.py for hot blocks.
@@ -1122,9 +1122,9 @@ def p_substr_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams come from ONE map-side-combined count; the island merge is a
     per-doc window (one shuffle keyed by doc). 10× sweep SUB-LINEAR in
     the worst all-duplicated regime (6.0s → 12.0s,
-    scripts/scale10x_substr.py). k=8 measured non-trivial at every
-    fixture sf (~10% of positions duplicated). Operator:
-    operators/substrdedup.py (property-tested against a brute-force
+    git show 0b946b4:scripts/scale10x_substr.py). k=8 measured
+    non-trivial at every fixture sf (~10% of positions duplicated).
+    Operator: operators/substrdedup.py (property-tested against a brute-force
     suffix scan)."""
     from ..operators.substrdedup import duplicated_spans
 
@@ -1379,9 +1379,9 @@ def p_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     never re-read (the operator's production contract; recomputed here
     from the fixture for oracle parity). Index-side hot buckets over
     the cap are dropped (bandjoin's on_hot="drop" posture). 10× sweep:
-    sub-linear, scripts/scale10x_increment.py (PERF.md). Operator:
-    operators/increment.py; sketch tables pooled via the keyed
-    swap-pool (increment.* keys, r14 — the old eager verdict
+    sub-linear, git show 0b946b4:scripts/scale10x_increment.py
+    (PERF.md). Operator: operators/increment.py; sketch tables pooled
+    via the keyed swap-pool (increment.* keys, r14 — the old eager verdict
     checkpoint cost one extra full materialization per run)."""
     from ..operators.increment import incremental_near_dups
 
@@ -1452,8 +1452,8 @@ def p_er_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: survivorship is two grouped aggregates + a window mode over
     cluster ids (shuffles keyed by cluster, map-side combined); the
     closure inherits concomp's per-round equi-join bound. 10× sweep:
-    flat, scripts/scale10x_golden.py (PERF.md). Ledger key
-    p_er_golden.concomp audits the per-round checkpoints."""
+    flat, git show 0b946b4:scripts/scale10x_golden.py (PERF.md).
+    Ledger key p_er_golden.concomp audits the per-round checkpoints."""
     mem_w = Window.partitionBy("component").orderBy(
         F.col("cnt").desc(), F.col("p_brand")
     )
@@ -2017,7 +2017,8 @@ def p_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the l11 precedent): candidate generation must be invisible in the
     answer.
 
-    10× sweep (scripts/scale10x_r8cand.py, near-duplicated replica):
+    10× sweep (git show 0b946b4:scripts/scale10x_r8cand.py,
+    near-duplicated replica):
     6.4 s → 435 s is an OUTPUT-DENSITY artifact, not a law violation —
     qualifying pairs grew 979× (every 10-copy near-dup group mutually
     contains) while wall per output row IMPROVED 14×. Production dials

@@ -913,7 +913,12 @@ def _pq_adc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumer per query, so persisting it would only add materialization
     cost inside the timed run. The probe LUT is probe-budget-bounded
     at any corpus size; the only remaining exchange in either consumer
-    is its own per-probe top-k window."""
+    is its own per-probe top-k window.
+
+    Building the DataFrame runs Spark jobs: the codebook rows and the
+    probe rows behind the LUT are collected driver-side before the
+    plan is returned, so a plan dump or registry sweep that only builds
+    sim_pq_topk or sim_rerank_two_stage still executes those jobs."""
     import numpy as np
 
     e = load_table(spark, sf_dir, "embeddings")
@@ -1324,12 +1329,12 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the production ANN shape: candidate volume capped by nprobe·cell,
     memory traffic cut ~32× by 8-byte codes vs 256-byte vectors.
 
-    Scale (measured, scripts/scale10x_ivfpq.py): build 1.3×, capped
-    search 3.0× at 10× corpus — sub-linear; probe budgets are CAPPED
-    constants (the r5 probes-grow-with-corpus lesson). Recall is
-    monotone in nprobe on the fixture (0.06→0.12 @ 1→4, gated by a
-    bit-exact NumPy mirror in tests/test_ivfpq.py). Operator:
-    operators/ivfpq.py."""
+    Scale (measured, git show 0b946b4:scripts/scale10x_ivfpq.py):
+    build 1.3×, capped search 3.0× at 10× corpus — sub-linear; probe
+    budgets are CAPPED constants (the r5 probes-grow-with-corpus
+    lesson). Recall is monotone in nprobe on the fixture (0.06→0.12 @
+    1→4, gated by a bit-exact NumPy mirror in tests/test_ivfpq.py).
+    Operator: operators/ivfpq.py."""
     from ..operators.ivfpq import ivfpq_index, ivfpq_search
 
     e = load_table(spark, sf_dir, "embeddings")
@@ -1451,8 +1456,9 @@ def sim_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells before the exchange; rounds are a fixed constant; per-round
     audited checkpoints (keys sim_kmeans.*) keep lineage shallow. 10×
     sweep: 14.6s→8.4s — scheduling floor dominates, linear law holds
-    (scripts/scale10x_kmeans.py). Operator: operators/kmeans.py (pinned
-    by a pure-Python mirror + plan-shape guards)."""
+    (git show 0b946b4:scripts/scale10x_kmeans.py). Operator:
+    operators/kmeans.py (pinned by a pure-Python mirror + plan-shape
+    guards)."""
     from ..operators.kmeans import lloyd_kmeans
 
     vecs = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -1667,7 +1673,7 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the audited ledger (key sim_mmr.round — the r7 ADVICE fix:
     without it the plan grew 3^k). Both persisted inputs release via
     the swap_persist pool (keys sim_mmr.cand / sim_mmr.pairsim). 10×
-    sweep: scripts/scale10x_r8.py (PERF.md)."""
+    sweep: git show 0b946b4:scripts/scale10x_r8.py (PERF.md)."""
     from ..operators.annscan import cosine_probe_topk
     from ..operators.cachepool import swap_persist
     from ..operators.mmr import mmr_select
@@ -1863,7 +1869,7 @@ def sim_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     union/groupBy shuffles only ranked rows; the twin embeds the
     verified _BM25_SQL constant (the named-constant rule). 10x corpus
     sweep 3.4x wall — the cosine probe term, linear in corpus at fixed
-    probes (scripts/scale10x_r9.py)."""
+    probes (git show 0b946b4:scripts/scale10x_r9.py)."""
     from ..operators.annscan import cosine_probe_topk
     from .corpus_q import BM25_N_QUERIES, p_bm25_topk
 

@@ -1041,8 +1041,9 @@ def t18_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets (the r7 cap fix). State (signature/band tables) lives as
     parquet appends — the restart-safe layout. The index grows by
     arrivals only; per-batch cost is independent of history outside
-    collided buckets (same growth law as scripts/scale10x_increment.py
-    measures for the batch form)."""
+    collided buckets (same growth law as
+    git show 0b946b4:scripts/scale10x_increment.py measures for the
+    batch form)."""
     import os
     import shutil
     import time as _time
@@ -1144,7 +1145,7 @@ def t19_stream_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     The final availableNow sink state equals batch EXISTS semantics —
     the twin — independent of micro-batch splits. Pre-verified in the
     retired r9 candidate module; registered round 9 (state-probe volume
-    measured ~flat at 10x events, scripts/scale10x_r9.py)."""
+    measured ~flat at 10x events, git show 0b946b4:scripts/scale10x_r9.py)."""
     views = (
         stream_events(spark, sf_dir)
         .filter(F.col("event_type") == "view")

@@ -76,7 +76,8 @@ def get_spark(app_name: str = "x8313-etl-spark", cpus: int | None = None) -> Spa
         # (p_item_cf's 2.4M-row symmetrized pair table, the LSH candidate
         # tables) compress to a few MB, so their window sorts and verify
         # joins serialized on one core while 31 idled. A/B at sf0.1
-        # local[32], cold caches, median of 3 (scripts/ab_parallelism_r13.py):
+        # local[32], cold caches, median of 3
+        # (git show 0b946b4:scripts/ab_parallelism_r13.py):
         # p_item_cf 6.72→2.72 s, 10 of 13 slots 0.87-0.96×, worst
         # regression a1_groupby_basic +0.04 s; subset total 23.5→18.2 s.
         # Parallelism-first also makes post-shuffle parallelism track the
