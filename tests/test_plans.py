@@ -339,9 +339,14 @@ def test_bm25_tf_table_is_map_only_kernel(spark, sf_dir):
 def test_m2_time_travel_reads_are_plain_scans(spark, sf_dir):
     """m2: both snapshot reads must be ordinary vectorized parquet scans
     (the manifest resolves on the driver, never in the plan) joined by
-    one key shuffle each — time travel must add zero plan overhead."""
+    one key shuffle each. v0 is one plain scan; v1, after the
+    merge-on-read MERGE, is its data scan plus its DV scan under one
+    broadcast anti-join — the only overhead time travel adds."""
     plan = _plan(spark, "m2_time_travel", sf_dir)
-    assert plan.count("FileScan parquet") == 2, plan
+    assert plan.count("FileScan parquet") == 3, plan
+    assert plan.count("LeftAnti") == 1, plan
+    anti = next(ln for ln in plan.splitlines() if "LeftAnti" in ln)
+    assert "BroadcastHashJoin" in anti, plan
     assert "SortMergeJoin" in plan  # full-outer on the key
 
 

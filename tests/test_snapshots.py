@@ -477,3 +477,182 @@ def test_delete_version_numbering_is_global_across_branches(spark, tmp_path):
     assert sorted(r.k for r in tbl.read(spark).collect()) == list(range(1, 8))
     # the branch is untouched throughout
     assert tbl.read(spark, branch="b").count() == 3
+
+
+# -- merge-on-read MERGE and manifest-planned reads ---------------------
+
+
+def _jobs_during(spark, fn) -> int:
+    """Spark jobs ``fn`` launches. A one-job sentinel runs after it in
+    the same job group: listener events arrive in order, so once the
+    sentinel is visible every job ``fn`` started is too."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"snapjobs-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "count jobs")
+    try:
+        fn()
+        sc.parallelize([1], 1).count()
+    finally:
+        sc._jsc.clearJobGroup()
+    tracker = sc.statusTracker()
+    deadline = time.time() + 30
+    while time.time() < deadline:
+        jobs = tracker.getJobIdsForGroup(group)
+        info = tracker.getJobInfo(max(jobs)) if jobs else None
+        if info is not None and info.status == "SUCCEEDED":
+            return len(jobs) - 1
+        time.sleep(0.05)
+    raise AssertionError("sentinel job never reached the status tracker")
+
+
+def _dir_bytes(base, dirs):
+    return sum(
+        os.path.getsize(os.path.join(r, f))
+        for d in dirs
+        for r, _, fs in os.walk(os.path.join(base, d))
+        for f in fs
+    )
+
+
+def test_read_plans_from_the_manifest_without_jobs(spark, tmp_path):
+    """Building a read of a plain version, a DV version, an equality-
+    delete version and a MERGE version launches no Spark job: every
+    scan takes its schema from the manifest instead of a footer."""
+    tbl = _dv_table(spark, tmp_path)  # v0 plain
+    tbl.delete_where(spark, F.col("k") < 10)  # v1 DV
+    tbl.delete_eq(spark, spark.range(20, 30).select(F.col("id").alias("k")), on="k")
+    changes = spark.createDataFrame(
+        [(50, -1, "U"), (60, None, "D")], "k long, v long, cdc_op string"
+    )
+    tbl.apply_cdc(spark, changes, "k")  # v3 MERGE
+    for v in range(4):
+        assert _jobs_during(spark, lambda: tbl.read(spark, version=v)) == 0, v
+    got = sorted((r.k, r.v) for r in tbl.read(spark).collect())
+    want = sorted(
+        [(k, 2 * k) for k in range(10, 100) if not 20 <= k < 30 and k not in (50, 60)]
+        + [(50, -1)]
+    )
+    assert got == want
+
+
+def test_apply_cdc_writes_one_dv_and_one_delta_dir(spark, tmp_path):
+    """MERGE is merge-on-read: the new manifest keeps every parent data
+    dir verbatim and adds exactly one data dir and one DV dir, and the
+    bytes it adds stay below the parent's data bytes."""
+    tbl = SnapshotTable(str(tmp_path / "mor"))
+    tbl.commit(
+        spark.range(20000).select(
+            F.col("id").alias("k"), (F.col("id") * 3).alias("v")
+        ).repartition(4)
+    )
+    tbl.commit(
+        spark.range(20000, 21000).select(
+            F.col("id").alias("k"), (F.col("id") * 3).alias("v")
+        ),
+        mode="append",
+    )
+    parent = tbl.versions()[-1]
+    changes = spark.createDataFrame(
+        [(5, -5, "U"), (20500, None, "D"), (30000, 7, "U")],
+        "k long, v long, cdc_op string",
+    )
+    tbl.apply_cdc(spark, changes, "k")
+    m = tbl.versions()[-1]
+    assert m["dirs"][: len(parent["dirs"])] == parent["dirs"]
+    new_dirs = m["dirs"][len(parent["dirs"]):]
+    new_dvs = [d for d in m["dvs"] if d not in parent["dvs"]]
+    assert len(new_dirs) == 1 and len(new_dvs) == 1
+    assert m["eqdvs"] == parent["eqdvs"]
+    added = _dir_bytes(tbl.base, new_dirs + new_dvs)
+    assert added < _dir_bytes(tbl.base, parent["dirs"]), added
+    assert tbl.read(spark).count() == 21000  # one delete, one insert
+    touched = tbl.read(spark).filter(F.col("k").isin(5, 20500, 30000))
+    assert {r.k: r.v for r in touched.collect()} == {5: -5, 30000: 7}
+
+
+def test_apply_cdc_composes_with_eqdeletes_appends_and_time_travel(spark, tmp_path):
+    """MERGE inside a chain of equality deletes and appends: a 'U' on a
+    key an older equality delete removed comes back (its dir is younger
+    than the delete), a later equality delete covers the MERGE dir, a
+    second MERGE tombstones the first one's row, and time travel
+    replays every version across the MERGEs."""
+    tbl = _dv_table(spark, tmp_path)  # v0: k -> 2k, k in 0..99
+
+    def cdc(rows):
+        return spark.createDataFrame(rows, "k long, v long, cdc_op string")
+
+    tbl.delete_eq(spark, spark.range(10).select(F.col("id").alias("k")), on="k")  # v1
+    tbl.apply_cdc(  # v2
+        spark, cdc([(5, -5, "U"), (20, -20, "U"), (30, None, "D"), (200, -200, "U")]), "k"
+    )
+    tbl.commit(  # v3: younger append, reusing key 20
+        spark.createDataFrame([(300, 600), (20, 40)], "k long, v long"), mode="append"
+    )
+    tbl.delete_eq(spark, spark.range(20, 21).select(F.col("id").alias("k")), on="k")  # v4
+    tbl.apply_cdc(spark, cdc([(5, 55, "U")]), "k")  # v5
+
+    base = {k: 2 * k for k in range(100)}
+    v1 = {k: v for k, v in base.items() if k >= 10}
+    v2 = {**{k: v for k, v in v1.items() if k not in (20, 30)}, 5: -5, 20: -20, 200: -200}
+    want = {
+        0: sorted(base.items()),
+        1: sorted(v1.items()),
+        2: sorted(v2.items()),
+        3: sorted([*v2.items(), (300, 600), (20, 40)]),
+        4: sorted([*((k, v) for k, v in v2.items() if k != 20), (300, 600)]),
+        5: sorted(
+            [*((k, v) for k, v in v2.items() if k not in (5, 20)), (300, 600), (5, 55)]
+        ),
+    }
+    for version, rows in want.items():
+        got = sorted((r.k, r.v) for r in tbl.read(spark, version=version).collect())
+        assert got == rows, version
+    tbl.rewrite_compact(spark)
+    assert sorted((r.k, r.v) for r in tbl.read(spark).collect()) == want[5]
+
+
+def test_lost_merge_race_reclaims_both_dirs(spark, tmp_path):
+    """A MERGE that loses the commit race (the stale-listing pattern of
+    test_concurrent_commit_loser_fails_loudly) raises and leaves
+    neither its DV dir nor its data dir on disk."""
+    from x8313_etl_spark.operators.snapshots import ConcurrentCommitError
+
+    base = str(tmp_path / "mergerace")
+    winner, loser = SnapshotTable(base), SnapshotTable(base)
+    winner.commit(spark.range(10).select(F.col("id").alias("k")))  # v0
+    stale = loser.versions(None)
+    loser.versions = lambda branch="main": stale  # type: ignore[method-assign]
+    assert winner.commit(
+        spark.range(10, 12).select(F.col("id").alias("k")), mode="append"
+    ) == 1
+    before = set(os.listdir(base))
+    changes = spark.createDataFrame([(3, "U"), (4, "D")], "k long, cdc_op string")
+    with pytest.raises(ConcurrentCommitError):
+        loser.apply_cdc(spark, changes, "k")
+    assert set(os.listdir(base)) == before, "the lost MERGE leaked a dir"
+    assert winner.read(spark).count() == 12
+
+
+def test_delete_racing_a_commit_loses_instead_of_dropping_it(spark, tmp_path):
+    """A commit that lands while a delete writes its vector must make
+    the delete lose the race. Numbering the delete's version from a
+    fresh listing after its write would publish it on top of the stale
+    parent and silently drop the other writer's rows from the lineage."""
+    from x8313_etl_spark.operators.snapshots import ConcurrentCommitError
+
+    base = str(tmp_path / "delrace")
+    winner, loser = SnapshotTable(base), SnapshotTable(base)
+    winner.commit(spark.range(10).select(F.col("id").alias("k")))  # v0
+    write = loser._write_dir
+
+    def racing_write(df, prefix):
+        winner.commit(spark.range(10, 15).select(F.col("id").alias("k")), mode="append")
+        return write(df, prefix)
+
+    loser._write_dir = racing_write  # type: ignore[method-assign]
+    with pytest.raises(ConcurrentCommitError):
+        loser.delete_where(spark, F.col("k") < 3)
+    assert winner.read(spark).count() == 15

@@ -22,23 +22,30 @@ dirs it names — old versions stay readable until explicitly vacuumed.
 Scale notes: the manifest is O(commits) tiny JSON files read on the
 driver once per read — the data path is an ordinary multi-dir
 vectorized parquet scan with full predicate pushdown / partition
-parallelism. MERGE (apply_cdc) is one keyed shuffle (or an AQE
-broadcast when the change set is the usual <1% of base) + a full
-rewrite of the base into the next version dir — copy-on-write
-semantics, the same cost model as Delta's non-deletion-vector MERGE.
+parallelism. Every scan takes its schema from the manifest (each
+dir's schema is recorded at commit), so planning a read opens no
+file and launches no Spark job (Dremel's plan-from-metadata point).
 
-Round-5 extensions give the merge-on-read side of the trade:
+Writes are merge-on-read; every write costs O(change), not O(table):
+- ``apply_cdc`` (MERGE) — writes one positional deletion vector
+  holding the (file_path, row_index) of every current row whose key
+  the change set names, plus one data dir of the 'U' rows. No data
+  file is rewritten: bytes written track the change set.
 - ``delete_where`` — POSITIONAL deletion vectors, (file_path,
   row_index) tombstones from the parquet reader's hidden _metadata
-  columns (the Iceberg v2 position-delete design): a DELETE costs
-  O(matched rows), reads pay one anti-join on the DV union.
+  columns (the Iceberg v2 position-delete design).
 - ``delete_eq`` — sequence-scoped EQUALITY deletes: key tombstones
   recorded with the dir set they cover, so appends committed AFTER the
   delete are exempt (the upsert-by-delete-then-append pattern).
-- ``rewrite_compact`` — materialize visible rows, clear all tombstones.
-- schema evolution — manifests record per-dir column fingerprints and
-  reads enable mergeSchema only when a version's dirs disagree; time
+- schema evolution — a version's scan schema is the union of its
+  dirs' recorded schemas; a column a dir lacks reads as NULL, and time
   travel keeps each version's own schema.
+
+The price is on the read side: a version with tombstones pays one
+anti-join on its DV union (broadcast while the vectors are small) plus
+one broadcast anti-join per equality delete, and each MERGE adds two
+live dirs. ``rewrite_compact`` materializes the visible rows and
+clears every tombstone — the maintenance rewrite back to plain scans.
 """
 
 from __future__ import annotations
@@ -48,9 +55,18 @@ import os
 import time
 import uuid
 
+import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 _MANIFEST = "_manifest"
+#: what a manifest carries from parent to child; the rest (version,
+#: branch, mode, commit_ts) is stamped per commit
+_STATE = ("dirs", "dvs", "eqdvs", "dir_schema")
+#: every deletion-vector dir holds exactly these two columns
+_DV_SCHEMA = StructType(
+    [StructField("file_path", StringType()), StructField("row_index", LongType())]
+)
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -109,6 +125,30 @@ class SnapshotTable:
             return eligible[-1]
         return vs[-1]
 
+    def _head(self, branch: str = "main") -> tuple[dict | None, int]:
+        """The branch head and the next GLOBAL version number, both from
+        ONE listing. A writer builds on that head and commits under that
+        number, so any commit landing in between makes its link(2) fail
+        (ConcurrentCommitError) instead of silently dropping the other
+        writer's change from the lineage."""
+        allv = self.versions(None)
+        heads = [m for m in allv if m.get("branch", "main") == branch]
+        return (heads[-1] if heads else None), (
+            allv[-1]["version"] + 1 if allv else 0
+        )
+
+    def _main_head(self) -> tuple[dict, int]:
+        m, version = self._head()
+        if m is None:
+            raise FileNotFoundError(f"snapshot table {self.base} has no commits")
+        return m, version
+
+    def _write_dir(self, df: DataFrame, prefix: str) -> str:
+        """Write ``df`` to a fresh ``<prefix>-<uuid>`` dir; returns its name."""
+        d = f"{prefix}-{uuid.uuid4().hex[:12]}"
+        df.write.mode("errorifexists").parquet(os.path.join(self.base, d))
+        return d
+
     # -- commits ------------------------------------------------------
 
     def commit(
@@ -122,54 +162,38 @@ class SnapshotTable:
         never see a half-written version."""
         if mode not in ("overwrite", "append"):
             raise ValueError(f"mode must be overwrite|append, got {mode!r}")
-        prev = self.versions(branch)
-        allv = self.versions(None)
-        version = allv[-1]["version"] + 1 if allv else 0
-        ddir = f"d-{uuid.uuid4().hex[:12]}"
-        df.write.mode("errorifexists").parquet(os.path.join(self.base, ddir))
-        # per-dir column fingerprint: read() turns on mergeSchema only
-        # when a version's dirs actually disagree (schema evolution —
-        # the added column null-fills older dirs), so the common
-        # homogeneous case keeps the cheap single-schema scan
-        dirs, dvs, eqdvs = [ddir], [], []
-        if mode == "append" and prev:
-            dirs = prev[-1]["dirs"] + dirs
-            dvs = prev[-1].get("dvs") or []
-            # parent equality deletes stay scoped to their recorded
-            # covered dirs — the NEW delta dir is younger, so exempt
-            eqdvs = prev[-1].get("eqdvs") or []
-        cols = {ddir: list(df.columns)}
-        if mode == "append" and prev:
-            cols.update(prev[-1].get("dir_cols") or {})
+        prev, version = self._head(branch)
+        ddir = self._write_dir(df, "d")
+        if mode == "overwrite" or prev is None:
+            prev = {"dirs": [], "dvs": [], "eqdvs": [], "dir_schema": {}}
+        # parent equality deletes stay scoped to their recorded
+        # covered dirs — the NEW delta dir is younger, so exempt
+        state = dict(
+            prev,
+            dirs=prev["dirs"] + [ddir],
+            dir_schema={**prev["dir_schema"], ddir: df.schema.jsonValue()},
+        )
         return self._commit_manifest(
-            version=version, dirs=dirs, dvs=dvs, mode=mode, data_dir=ddir,
-            eqdvs=eqdvs, dir_cols=cols, branch=branch,
+            version, state, mode=mode, written=[ddir], branch=branch
         )
 
     def _commit_manifest(
         self,
-        *,
         version: int,
-        dirs: list,
-        dvs: list,
+        state: dict,
+        *,
         mode: str,
-        data_dir: str,
-        eqdvs: list | None = None,
-        dir_cols: dict | None = None,
+        written: list[str],
         branch: str = "main",
     ) -> int:
-        """Publish a manifest for ``version`` with writer mutual
-        exclusion; on a lost race, reclaim ``data_dir`` (this writer's
-        just-written dir — data or DV) and raise. Metadata-only commits
-        (publish) pass ``data_dir=""`` and have nothing to reclaim —
-        the guard below matters: rmtree(join(base, "")) IS rmtree(base),
-        i.e. the whole table."""
+        """Publish a manifest for ``version`` carrying ``state``'s dir
+        sets, with writer mutual exclusion; on a lost race, reclaim
+        every dir in ``written`` (this writer's just-written data, DV
+        or key dirs — a MERGE writes two) and raise. Metadata-only
+        commits (publish) pass ``written=[]`` and reclaim nothing."""
         manifest = {
+            **{k: state[k] for k in _STATE},
             "version": version,
-            "dirs": dirs,
-            "dvs": dvs,
-            "eqdvs": eqdvs or [],
-            "dir_cols": dir_cols or {},
             "branch": branch,
             "mode": mode,
             "commit_ts": time.time(),
@@ -194,15 +218,13 @@ class SnapshotTable:
             os.link(tmp, final)
         except FileExistsError as exc:
             os.unlink(tmp)
-            # reclaim the loser's data dir NOW: no manifest will ever
-            # reference it, and vacuum() only walks manifest-listed
-            # dirs, so leaving it would leak a table copy per lost race
-            if data_dir:
-                import shutil
+            # reclaim the loser's dirs NOW: no manifest will ever
+            # reference them, and vacuum() only walks manifest-listed
+            # dirs, so leaving them would leak a copy per lost race
+            import shutil
 
-                shutil.rmtree(
-                    os.path.join(self.base, data_dir), ignore_errors=True
-                )
+            for d in written:
+                shutil.rmtree(os.path.join(self.base, d), ignore_errors=True)
             raise ConcurrentCommitError(
                 f"version {version} was committed by another writer"
             ) from exc
@@ -221,40 +243,50 @@ class SnapshotTable:
         """Latest version, a specific ``version``, or time travel to the
         last version committed at or before ``as_of_ts``. When the
         version carries deletion vectors the scan applies them
-        (merge-on-read); otherwise it is a plain multi-dir scan."""
+        (merge-on-read); otherwise it is a plain multi-dir scan. Either
+        way building the DataFrame launches no Spark job."""
         m = self._resolve(version, as_of_ts, branch)
-        if m.get("dvs") or m.get("eqdvs"):
+        if m["dvs"] or m["eqdvs"]:
             return self._scan_minus_dvs(spark, m).drop("__dv_file", "__dv_pos")
         return self._scan(spark, m)
 
+    @staticmethod
+    def _schema(m: dict) -> StructType:
+        """Union of the version's recorded dir schemas, first dir first:
+        a column some dir lacks reads as NULL there (schema evolution),
+        and no footer is opened to plan the scan."""
+        fields: dict = {}
+        for d in m["dirs"]:
+            for f in StructType.fromJson(m["dir_schema"][d]).fields:
+                fields.setdefault(f.name, f)
+        return StructType(list(fields.values()))
+
     def _scan(self, spark: SparkSession, m: dict) -> DataFrame:
         paths = [os.path.join(self.base, d) for d in m["dirs"]]
-        reader = spark.read
-        cols = m.get("dir_cols") or {}
-        schemas = {tuple(cols[d]) for d in m["dirs"] if d in cols}
-        if len(schemas) > 1:
-            reader = reader.option("mergeSchema", "true")
-        return reader.parquet(*paths)
+        return spark.read.schema(self._schema(m)).parquet(*paths)
 
     # -- deletion vectors (merge-on-read DELETE) ----------------------
 
-    def _scan_minus_dvs(self, spark: SparkSession, m: dict) -> DataFrame:
-        """Data-dir scan carrying (__dv_file, __dv_pos) = the parquet
-        reader's hidden (_metadata.file_path, _metadata.row_index),
-        with every DV the manifest names anti-joined away. Positions
-        are per PHYSICAL FILE, so they survive any re-partitioning of
-        downstream reads and never depend on row content — the Iceberg
-        v2 position-delete design."""
-        import pyspark.sql.functions as F
-
-        df = self._scan(spark, m).select(
+    def _positions(self, spark: SparkSession, m: dict) -> DataFrame:
+        """Raw data-dir scan carrying (__dv_file, __dv_pos) = the parquet
+        reader's hidden (_metadata.file_path, _metadata.row_index).
+        Positions are per PHYSICAL FILE, so they survive any
+        re-partitioning of downstream reads and never depend on row
+        content — the Iceberg v2 position-delete design."""
+        return self._scan(spark, m).select(
             "*",
             F.col("_metadata.file_path").alias("__dv_file"),
             F.col("_metadata.row_index").alias("__dv_pos"),
         )
-        dvs = m.get("dvs") or []
-        if dvs:
-            dv = spark.read.parquet(*[os.path.join(self.base, d) for d in dvs])
+
+    def _scan_minus_dvs(self, spark: SparkSession, m: dict) -> DataFrame:
+        """``_positions`` with every DV and equality delete the manifest
+        names anti-joined away."""
+        df = self._positions(spark, m)
+        if m["dvs"]:
+            dv = spark.read.schema(_DV_SCHEMA).parquet(
+                *[os.path.join(self.base, d) for d in m["dvs"]]
+            )
             df = df.join(
                 dv.select(
                     F.col("file_path").alias("__dv_file"),
@@ -263,12 +295,14 @@ class SnapshotTable:
                 ["__dv_file", "__dv_pos"],
                 "left_anti",
             )
-        for eq in m.get("eqdvs") or []:
+        for eq in m["eqdvs"]:
             # anti-join restricted to the dirs this delete covers: the
             # row's source dir is the second-to-last path segment of its
             # file — younger (appended-later) dirs fall outside `covers`
             # and keep their rows, Iceberg's sequence-number semantics
-            eqk = spark.read.parquet(os.path.join(self.base, eq["dir"]))
+            eqk = spark.read.schema(StructType.fromJson(eq["schema"])).parquet(
+                os.path.join(self.base, eq["dir"])
+            )
             src_dir = F.element_at(F.split(F.col("__dv_file"), "/"), -2)
             df = df.join(
                 F.broadcast(eqk),
@@ -277,6 +311,16 @@ class SnapshotTable:
             )
         return df
 
+    def _write_dv(self, positions: DataFrame) -> str:
+        # stored under the public names; the read path re-aliases
+        return self._write_dir(
+            positions.select(
+                F.col("__dv_file").alias("file_path"),
+                F.col("__dv_pos").alias("row_index"),
+            ),
+            "dv",
+        )
+
     def delete_where(self, spark: SparkSession, condition) -> int:
         """Merge-on-read DELETE: rows matching ``condition`` (a Column
         over the table schema) are tombstoned by writing a POSITIONAL
@@ -284,49 +328,24 @@ class SnapshotTable:
         and a manifest that references the parent's data dirs plus the
         new DV. No data file is rewritten: the cost is proportional to
         the DELETED rows, not the table (the whole point of DVs vs
-        copy-on-write at 100 TB). The predicate is evaluated on the
-        CURRENT visible state, so re-deleting already-dead rows can't
-        bloat the vector. Readers of old versions are untouched; time
-        travel across delete versions replays exactly the right
-        tombstone sets. Compaction is ``rewrite_compact``."""
-        import pyspark.sql.functions as F
-
-        prev = self.versions()
-        if not prev:
-            raise FileNotFoundError(f"snapshot table {self.base} has no commits")
-        m = prev[-1]
-        dv = (
-            self._scan_minus_dvs(spark, m)
-            .filter(condition)
-            .select(
-                # stored under the public names; read path re-aliases
-                F.col("__dv_file").alias("file_path"),
-                F.col("__dv_pos").alias("row_index"),
-            )
-        )
-        ddir = f"dv-{uuid.uuid4().hex[:12]}"
-        dv.write.mode("errorifexists").parquet(os.path.join(self.base, ddir))
-        # version numbering is GLOBAL across branches (same rule as
-        # commit()/publish()): main-head+1 would collide forever with
-        # any branch commit ahead of main (EEXIST on every retry).
-        # eqdvs and dir_cols are forwarded — dropping them would
-        # resurrect equality-deleted rows and lose evolved-schema
-        # mergeSchema detection in the new version.
+        copy-on-write at 100 TB). The predicate is evaluated on the raw
+        data-dir scan, without first anti-joining the existing
+        tombstones, so a row that is already dead can be listed again —
+        at most once per matching call; reads anti-join the union, so
+        visible rows are the same. Readers of old versions are
+        untouched; time travel across delete versions replays exactly
+        the right tombstone sets. Compaction is ``rewrite_compact``."""
+        m, version = self._main_head()
+        dv = self._write_dv(self._positions(spark, m).filter(condition))
         return self._commit_manifest(
-            version=self.versions(None)[-1]["version"] + 1,
-            dirs=m["dirs"],
-            dvs=(m.get("dvs") or []) + [ddir],
-            mode="delete",
-            data_dir=ddir,
-            eqdvs=m.get("eqdvs") or [],
-            dir_cols=m.get("dir_cols") or {},
+            version, dict(m, dvs=m["dvs"] + [dv]), mode="delete", written=[dv]
         )
 
     def rewrite_compact(self, spark: SparkSession) -> int:
         """Materialize the current visible rows into a fresh data dir
         and commit it with NO deletion vectors — the maintenance
-        rewrite that re-earns pure-scan reads after many deletes. Same
-        visible rows before and after (pinned by tests)."""
+        rewrite that re-earns pure-scan reads after many deletes and
+        MERGEs. Same visible rows before and after (pinned by tests)."""
         return self.commit(self.read(spark), mode="overwrite")
 
     # -- equality deletes (sequence-scoped, the Iceberg v2 sibling) ---
@@ -338,30 +357,19 @@ class SnapshotTable:
         granularity: an equality delete applies to files OLDER than
         itself, so rows appended later with the same key are exempt
         (the upsert-by-delete-then-append pattern depends on this).
-        The manifest records each eq-delete with its covered dir set;
-        reads apply each eq set as one anti-join restricted to rows
-        whose source dir is covered."""
-        prev = self.versions()
-        if not prev:
-            raise FileNotFoundError(f"snapshot table {self.base} has no commits")
-        m = prev[-1]
-        import pyspark.sql.functions as F
-
-        ddir = f"ev-{uuid.uuid4().hex[:12]}"
-        keys.select(F.col(on).alias("key")).distinct().write.mode(
-            "errorifexists"
-        ).parquet(os.path.join(self.base, ddir))
-        eqdvs = list(m.get("eqdvs") or []) + [
-            {"dir": ddir, "on": on, "covers": list(m["dirs"])}
-        ]
+        The manifest records each eq-delete with its covered dir set
+        and its key schema; reads apply each eq set as one anti-join
+        restricted to rows whose source dir is covered."""
+        m, version = self._main_head()
+        key = keys.select(F.col(on).alias("key")).distinct()
+        ddir = self._write_dir(key, "ev")
+        eq = {
+            "dir": ddir, "on": on, "covers": list(m["dirs"]),
+            "schema": key.schema.jsonValue(),
+        }
         return self._commit_manifest(
-            version=self.versions(None)[-1]["version"] + 1,
-            dirs=m["dirs"],
-            dvs=m.get("dvs") or [],
-            mode="delete_eq",
-            data_dir=ddir,
-            eqdvs=eqdvs,
-            dir_cols=m.get("dir_cols") or {},
+            version, dict(m, eqdvs=m["eqdvs"] + [eq]), mode="delete_eq",
+            written=[ddir],
         )
 
     # -- write-audit-publish ------------------------------------------
@@ -375,21 +383,10 @@ class SnapshotTable:
         atomically); the link(2) commit point gives publish the same
         optimistic concurrency as any commit — a racing publish or
         main commit loses cleanly and retries."""
-        head = self.versions(branch)
-        if not head:
+        h, version = self._head(branch)
+        if h is None:
             raise KeyError(f"branch {branch!r} has no commits")
-        h = head[-1]
-        allv = self.versions(None)
-        return self._commit_manifest(
-            version=allv[-1]["version"] + 1,
-            dirs=h["dirs"],
-            dvs=h.get("dvs") or [],
-            mode="publish",
-            data_dir="",
-            eqdvs=h.get("eqdvs") or [],
-            dir_cols=h.get("dir_cols") or {},
-            branch="main",
-        )
+        return self._commit_manifest(version, h, mode="publish", written=[])
 
     # -- retention ------------------------------------------------------
 
@@ -418,9 +415,7 @@ class SnapshotTable:
             return []
         def _alldirs(m):
             return (
-                m["dirs"]
-                + (m.get("dvs") or [])
-                + [e["dir"] for e in (m.get("eqdvs") or [])]
+                m["dirs"] + m["dvs"] + [e["dir"] for e in m["eqdvs"]]
             )
 
         drop, keep = vs[:-keep_last], vs[-keep_last:]
@@ -447,28 +442,36 @@ class SnapshotTable:
         op_col: str = "cdc_op",
     ) -> int:
         """MERGE-statement semantics producing a new version from a CDC
-        change set: ``changes`` carries the target's schema plus
+        change set: ``changes`` carries the target's columns plus
         ``op_col`` ∈ {'U','D'} — 'D' removes the key, 'U' upserts the
         full row (update when the key exists, insert when it doesn't).
-        One full-outer join on the key (AQE broadcasts the usual small
-        change batch), then a copy-on-write overwrite commit — the same
-        cost model as a lakehouse MERGE without deletion vectors."""
-        import pyspark.sql.functions as F
 
-        target = self.read(spark)
-        data_cols = [c for c in target.columns if c != on]
-        src = changes.select(
-            F.col(on).alias("__k"),
-            F.col(op_col).alias("__op"),
-            *[F.col(c).alias(f"__s_{c}") for c in data_cols],
+        Merge-on-read: one positional DV holding every current row
+        whose key ``changes`` names (for either op, taken from the raw
+        data-dir scan like ``delete_where``), plus one data dir of the
+        'U' rows projected and cast to the target's columns. The new
+        manifest names the parent's dirs plus that dir and the parent's
+        DVs plus that DV; the parent's equality deletes are unchanged,
+        and the new dir is younger than all of them, so they do not
+        touch it. Bytes written are O(change), not O(table)."""
+        m, version = self._main_head()
+        schema = self._schema(m)
+        keys = changes.select(F.col(on).alias("__cdc_key"))
+        dv = self._write_dv(
+            self._positions(spark, m).join(
+                keys, F.col(on) == F.col("__cdc_key"), "left_semi"
+            )
         )
-        joined = target.join(src, target[on] == src["__k"], "full_outer")
-        upsert = F.col("__op") == "U"
-        out = joined.filter(F.col("__op").isNull() | upsert).select(
-            F.coalesce(target[on], F.col("__k")).alias(on),
-            *[
-                F.when(upsert, F.col(f"__s_{c}")).otherwise(target[c]).alias(c)
-                for c in data_cols
-            ],
+        upserts = changes.filter(F.col(op_col) == "U").select(
+            *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
         )
-        return self.commit(out, mode="overwrite")
+        ddir = self._write_dir(upserts, "d")
+        state = dict(
+            m,
+            dirs=m["dirs"] + [ddir],
+            dvs=m["dvs"] + [dv],
+            dir_schema={**m["dir_schema"], ddir: upserts.schema.jsonValue()},
+        )
+        return self._commit_manifest(
+            version, state, mode="merge", written=[dv, ddir]
+        )

@@ -28,9 +28,12 @@ the state_root while resetting the checkpoint makes the re-delivered
 epochs 0..N look like replays (nothing applies, stale state is served).
 Reprocessing from scratch = delete both.
 
-Scale: the merge is one state∪delta shuffle on the key per batch — the
-lakehouse MERGE cost model (same as operators/snapshots.py apply_cdc);
-state never transits the driver.
+Scale: the merge is one state∪delta shuffle on the key per batch and a
+copy-on-write rewrite of the whole state — O(state) written per epoch,
+unlike operators/snapshots.py apply_cdc, which is merge-on-read and
+writes O(change). State never transits the driver, and the next epoch
+reads it under the schema this sink last wrote, so it plans without a
+footer-inference job.
 """
 
 from __future__ import annotations
@@ -66,6 +69,16 @@ class KeyedUpsertSink(VersionedStateDir):
         self.key = key
         self.delta_fn = delta_fn
         self.merge_exprs = merge_exprs
+        # schema of the state this object last committed: the next
+        # epoch's merge and read_state pass it to the reader, which then
+        # plans without a footer-inference job (None after a restart)
+        self._schema = None
+
+    def _read_current(self, spark) -> DataFrame:
+        reader = spark.read
+        if self._schema is not None:
+            reader = reader.schema(self._schema)
+        return reader.parquet(self.current)
 
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
         """Merge one epoch's rows into the state table (idempotent)."""
@@ -74,7 +87,7 @@ class KeyedUpsertSink(VersionedStateDir):
             return
         delta = self.delta_fn(batch)
         if self.current is not None:
-            old = batch.sparkSession.read.parquet(self.current)
+            old = self._read_current(batch.sparkSession)
             o, d = old.alias("o"), delta.alias("d")
             cols = [
                 F.coalesce(
@@ -93,10 +106,11 @@ class KeyedUpsertSink(VersionedStateDir):
         self._commit(
             batch_id, lambda tmp: merged.write.mode("overwrite").parquet(tmp)
         )
+        self._schema = merged.schema
 
     def read_state(self, spark) -> DataFrame:
         assert self.current is not None, "no epoch has been applied"
-        return spark.read.parquet(self.current)
+        return self._read_current(spark)
 
 
 def counter_add(o: F.Column, d: F.Column) -> F.Column:

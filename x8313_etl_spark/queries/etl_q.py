@@ -189,11 +189,14 @@ def m2_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``append`` commits reference parent dirs without rewriting, and
     time travel reads exactly the dir set an old manifest names. The
     query commits the customer base as v0, applies m1's deterministic
-    CDC change set through ``apply_cdc`` (one full-outer key join,
-    copy-on-write commit → v1), then DIFFS v1 against the
+    CDC change set through ``apply_cdc`` (merge-on-read → v1: one
+    positional deletion vector for the changed keys' rows plus one
+    delta dir of the upserted rows, so the MERGE writes O(change) and
+    v0's files are shared, not rewritten), then DIFFS v1 against the
     time-traveled v0 read — the audit query snapshots exist for. The
-    twin recomputes both versions relationally; only the merge/travel
-    machinery differs."""
+    v0 read is one plain scan; the v1 read is its data scan plus one
+    broadcast anti-join against its DV. The twin recomputes both
+    versions relationally; only the merge/travel machinery differs."""
     import shutil
 
     from ..operators.snapshots import SnapshotTable
@@ -529,8 +532,8 @@ WHERE NOT (c_acctbal < 0) AND NOT (c_custkey % 10 = 0)
 )
 def m4_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M4: merge-on-read DELETE via POSITIONAL deletion vectors — the
-    lakehouse capability m2's copy-on-write MERGE deliberately scoped
-    out. Two successive deletes (negative balances, then every 10th
+    same tombstones m2's MERGE writes for the rows of its changed keys,
+    here driven by predicates. Two successive deletes (negative balances, then every 10th
     key) each write only a (file_path, row_index) tombstone parquet and
     a manifest — zero data-file rewrites; the read path anti-joins the
     DV union against the parquet reader's hidden _metadata positions
@@ -619,14 +622,13 @@ FROM customer WHERE c_custkey % 3 = 0
 def m6_schema_evolution_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M6: schema evolution THROUGH the snapshot table — an append
     commit carries an ADDED column (c_tier); the manifest records each
-    data dir's column fingerprint, and the read path turns on
-    mergeSchema only when a version's dirs actually disagree, so the
-    homogeneous common case keeps the cheap single-schema scan while
-    evolved versions null-fill the old dirs (s11's mergeSchema
-    mechanics, now versioned: time travel to v0 yields the ORIGINAL
-    two-column schema, pinned in tests/test_snapshots.py). Output
-    backfills nulls with 'legacy' — the standard evolved-read
-    pattern."""
+    data dir's schema, and the read path scans a version under the
+    union of its dirs' schemas, so evolved versions null-fill the old
+    dirs without mergeSchema's per-file footer reads — planning the
+    scan opens no file (s11's evolution semantics, now versioned: time
+    travel to v0 yields the ORIGINAL two-column schema, pinned in
+    tests/test_snapshots.py). Output backfills nulls with 'legacy' —
+    the standard evolved-read pattern."""
     import shutil
 
     from ..operators.snapshots import SnapshotTable

@@ -716,9 +716,10 @@ def t15_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     and skips the re-apply, making the merge idempotent per epoch
     (pinned by tests/test_streaming.py::test_t15_replay_is_idempotent).
     At 100 TB the state table is a keyed parquet table; the full-outer
-    merge shuffles state ∪ delta on the key once per batch — the same
-    cost model as m1/SnapshotTable.apply_cdc, which this reuses
-    conceptually (a streaming driver for the lakehouse MERGE)."""
+    merge shuffles state ∪ delta on the key once per batch and rewrites
+    the whole state — m1's copy-on-write cost model, O(state) written
+    per batch. SnapshotTable.apply_cdc's MERGE is merge-on-read instead
+    and writes O(change)."""
     import os
     import shutil
 
