@@ -82,11 +82,14 @@ def main() -> None:
         "local[32]): p_sequence_pack 0.20 s → 1.5 s (the prefix-sum window "
         "and the explode both scale with rows; no new shuffle appears), "
         "SnapshotTable commit 1.16 s and apply_cdc MERGE 1.54 s at 150k "
-        "keys (measured when the MERGE was one full-outer key shuffle plus "
-        "a copy-on-write rewrite; it is now merge-on-read — a semi-join "
-        "of the change keys against the scan, writing one deletion vector "
-        "and the upserted rows — and has not been re-timed at 10×), "
-        "p_bm25_topk 24 s cold / 6.3 s warm (see PERF.md).",
+        "keys (measured on the copy-on-write MERGE: one full-outer key "
+        "shuffle plus a full rewrite). The merge-on-read MERGE — a "
+        "semi-join of the change keys against the scan, writing one "
+        "deletion vector and the upserted rows — takes 0.90 / 0.76 s warm "
+        "against the copy-on-write form's 0.79 / 0.74 s at 150k keys and a "
+        "1% change set (4-core VM, local[4]), and leaves the table at "
+        "2.25 MB on disk against 4.21 MB. p_bm25_topk 24 s cold / 6.3 s "
+        "warm (see PERF.md).",
         "",
         "10× spot-check for the TPC-H suite (6M-row lineitem / 1.5M-row "
         "orders replica — sf0.1 copied 10× with shifted order keys — "
