@@ -277,7 +277,7 @@ def test_eqdelete_composes_with_positional_and_compacts(spark, tmp_path):
     assert sorted(r.k for r in tbl.read(spark).collect()) == expect
     tbl.rewrite_compact(spark)
     m = tbl.versions()[-1]
-    assert m["dvs"] == [] and m["eqdvs"] == []
+    assert m["dvs"] == [] and "eqdvs" not in m
     assert sorted(r.k for r in tbl.read(spark).collect()) == expect
 
 
@@ -421,7 +421,7 @@ def test_positional_delete_after_eqdelete_keeps_eq_tombstones(spark, tmp_path):
         "positional delete must not resurrect equality-deleted rows"
     )
     # and the reverse order still holds (the previously-tested path)
-    assert tbl.versions()[-1]["eqdvs"], "eqdvs must be forwarded in the manifest"
+    assert len(tbl.versions()[-1]["dvs"]) == 2
 
 
 def test_delete_preserves_schema_evolution_dir_cols(spark, tmp_path):
@@ -565,7 +565,6 @@ def test_apply_cdc_writes_one_dv_and_one_delta_dir(spark, tmp_path):
     new_dirs = m["dirs"][len(parent["dirs"]):]
     new_dvs = [d for d in m["dvs"] if d not in parent["dvs"]]
     assert len(new_dirs) == 1 and len(new_dvs) == 1
-    assert m["eqdvs"] == parent["eqdvs"]
     added = _dir_bytes(tbl.base, new_dirs + new_dvs)
     assert added < _dir_bytes(tbl.base, parent["dirs"]), added
     assert tbl.read(spark).count() == 21000  # one delete, one insert
@@ -656,3 +655,84 @@ def test_delete_racing_a_commit_loses_instead_of_dropping_it(spark, tmp_path):
     with pytest.raises(ConcurrentCommitError):
         loser.delete_where(spark, F.col("k") < 3)
     assert winner.read(spark).count() == 15
+
+
+def test_manifest_with_equality_delete_dirs_fails_loudly(spark, tmp_path):
+    """A manifest that still carries equality-delete key dirs (the
+    format before ``delete_eq`` wrote positional vectors) raises a
+    ValueError naming its version before any Spark job runs: reading it
+    without those tombstones would resurrect the rows they deleted."""
+    import json
+
+    tbl = _dv_table(spark, tmp_path)  # v0
+    v0 = tbl.versions()[-1]
+    old = dict(
+        v0,
+        version=1,
+        mode="delete_eq",
+        eqdvs=[{
+            "dir": "ev-0123456789ab",
+            "on": "k",
+            "covers": v0["dirs"],
+            "schema": {"type": "struct", "fields": [
+                {"name": "key", "type": "long", "nullable": True, "metadata": {}}
+            ]},
+        }],
+    )
+    with open(os.path.join(tbl.base, "_manifest", "00000001.json"), "w") as fh:
+        json.dump(old, fh)
+
+    def read():
+        with pytest.raises(ValueError, match="version 1"):
+            tbl.read(spark)
+
+    assert _jobs_during(spark, read) == 0
+    with pytest.raises(ValueError, match="version 1"):
+        tbl.delete_where(spark, F.col("k") < 3)
+    assert tbl.read(spark, version=0).count() == 100
+
+
+def test_read_plan_is_one_join_after_many_writes(spark, tmp_path):
+    """Sixteen writes mixing appends, MERGEs, positional and equality
+    deletes leave the latest read one multi-dir data scan minus one DV
+    anti-join: one join and two FileScans, however many deletes made
+    the vectors. Time travel to a middle version stays exact."""
+    import re
+
+    import pandas as pd
+
+    def frame(rows, cols):  # Arrow-backed: no Python worker per write
+        return spark.createDataFrame(pd.DataFrame(rows, columns=cols))
+
+    tbl = _dv_table(spark, tmp_path)  # v0: k -> 2k, k in 0..99
+    state = {k: 2 * k for k in range(100)}
+    want = {0: sorted(state.items())}
+
+    def wrote(version):
+        want[version] = sorted(state.items())
+
+    for r in range(4):
+        lo = 200 + 10 * r
+        # fresh keys, plus the key the previous round's delete_eq took
+        rows = [(k, -k) for k in range(lo, lo + 5)] + ([(10 * r - 10, r)] if r else [])
+        state.update(rows)
+        wrote(tbl.commit(frame(rows, ["k", "v"]), mode="append"))
+        changes = [(lo, 1, "U"), (300 + r, r, "U"), (50 + r, 0, "D")]
+        state.update({lo: 1, 300 + r: r})
+        del state[50 + r]
+        wrote(tbl.apply_cdc(spark, frame(changes, ["k", "v", "cdc_op"]), "k"))
+        for k in range(60 + 5 * r, 62 + 5 * r):
+            del state[k]
+        wrote(tbl.delete_where(spark, F.col("k").between(60 + 5 * r, 61 + 5 * r)))
+        doomed = [10 * r, 90 + r, lo]  # lo's live row is in the MERGE dir
+        for k in doomed:
+            del state[k]
+        wrote(tbl.delete_eq(spark, frame([(k,) for k in doomed], ["k"]), on="k"))
+
+    assert len(want) == 17
+    for version in (8, 16):
+        got = sorted((r.k, r.v) for r in tbl.read(spark, version=version).collect())
+        assert got == want[version], version
+    plan = tbl.read(spark)._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"\b\w+Join\b", plan)) == 1, plan
+    assert plan.count("FileScan") == 2, plan

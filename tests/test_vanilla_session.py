@@ -28,3 +28,12 @@ def test_env_sensitive_queries_on_default_session(sf_oracle_dir):
         cwd=_REPO,
     )
     assert proc.returncode == 0, f"vanilla-session check failed:\n{proc.stdout[-3000:]}\n{proc.stderr[-2000:]}"
+
+
+def test_get_spark_puts_the_checkout_on_the_workers_path(spark):
+    """``get_spark`` sessions hand Python workers the checkout root, so
+    a script started outside the checkout can still import the package
+    inside a UDF."""
+    root = spark.sparkContext.getConf().get("spark.executorEnv.PYTHONPATH")
+    assert os.path.isfile(os.path.join(root, "x8313_etl_spark", "__init__.py"))
+    assert os.path.samefile(root, _REPO)

@@ -34,18 +34,20 @@ Writes are merge-on-read; every write costs O(change), not O(table):
 - ``delete_where`` — POSITIONAL deletion vectors, (file_path,
   row_index) tombstones from the parquet reader's hidden _metadata
   columns (the Iceberg v2 position-delete design).
-- ``delete_eq`` — sequence-scoped EQUALITY deletes: key tombstones
-  recorded with the dir set they cover, so appends committed AFTER the
-  delete are exempt (the upsert-by-delete-then-append pattern).
+- ``delete_eq`` — EQUALITY deletes resolved at delete time into the
+  same positional DV ``apply_cdc`` writes: only rows in the dirs that
+  exist now are named, so appends committed AFTER the delete are exempt
+  (the upsert-by-delete-then-append pattern).
 - schema evolution — a version's scan schema is the union of its
   dirs' recorded schemas; a column a dir lacks reads as NULL, and time
   travel keeps each version's own schema.
 
-The price is on the read side: a version with tombstones pays one
-anti-join on its DV union (broadcast while the vectors are small) plus
-one broadcast anti-join per equality delete, and each MERGE adds two
-live dirs. ``rewrite_compact`` materializes the visible rows and
-clears every tombstone — the maintenance rewrite back to plain scans.
+The price is on the read side: a version with tombstones is one
+multi-dir data scan minus one anti-join on its DV union (broadcast
+while the vectors are small), whatever the write history, and each
+write adds a DV dir (a MERGE also a data dir) that every later read
+lists. ``rewrite_compact`` materializes the visible rows and clears
+every tombstone — the maintenance rewrite back to plain scans.
 """
 
 from __future__ import annotations
@@ -60,9 +62,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 _MANIFEST = "_manifest"
-#: what a manifest carries from parent to child; the rest (version,
-#: branch, mode, commit_ts) is stamped per commit
-_STATE = ("dirs", "dvs", "eqdvs", "dir_schema")
+#: what a manifest carries from parent to child; _STAMPS are set per commit
+_STATE = ("dirs", "dvs", "dir_schema")
+_STAMPS = ("version", "branch", "mode", "commit_ts")
 #: every deletion-vector dir holds exactly these two columns
 _DV_SCHEMA = StructType(
     [StructField("file_path", StringType()), StructField("row_index", LongType())]
@@ -114,16 +116,26 @@ class SnapshotTable:
         if not vs:
             raise FileNotFoundError(f"snapshot table {self.base} has no commits")
         if version is not None:
-            for m in vs:
-                if m["version"] == version:
-                    return m
-            raise KeyError(f"version {version} not in {self.base}")
-        if as_of_ts is not None:
-            eligible = [m for m in vs if m["commit_ts"] <= as_of_ts]
-            if not eligible:
+            vs = [m for m in vs if m["version"] == version]
+            if not vs:
+                raise KeyError(f"version {version} not in {self.base}")
+        elif as_of_ts is not None:
+            vs = [m for m in vs if m["commit_ts"] <= as_of_ts]
+            if not vs:
                 raise KeyError(f"no version at or before ts={as_of_ts}")
-            return eligible[-1]
-        return vs[-1]
+        return self._known(vs[-1])
+
+    def _known(self, m: dict) -> dict:
+        """``m``, unless it carries non-empty state this reader cannot
+        apply (the equality-delete key dirs of an older format):
+        ignoring it would silently resurrect the rows it deleted."""
+        extra = sorted(k for k, v in m.items() if v and k not in _STATE + _STAMPS)
+        if extra:
+            raise ValueError(
+                f"version {m['version']} of {self.base} carries manifest "
+                f"state {extra} that this reader cannot apply"
+            )
+        return m
 
     def _head(self, branch: str = "main") -> tuple[dict | None, int]:
         """The branch head and the next GLOBAL version number, both from
@@ -133,7 +145,7 @@ class SnapshotTable:
         writer's change from the lineage."""
         allv = self.versions(None)
         heads = [m for m in allv if m.get("branch", "main") == branch]
-        return (heads[-1] if heads else None), (
+        return (self._known(heads[-1]) if heads else None), (
             allv[-1]["version"] + 1 if allv else 0
         )
 
@@ -165,9 +177,9 @@ class SnapshotTable:
         prev, version = self._head(branch)
         ddir = self._write_dir(df, "d")
         if mode == "overwrite" or prev is None:
-            prev = {"dirs": [], "dvs": [], "eqdvs": [], "dir_schema": {}}
-        # parent equality deletes stay scoped to their recorded
-        # covered dirs — the NEW delta dir is younger, so exempt
+            prev = {"dirs": [], "dvs": [], "dir_schema": {}}
+        # the parent's DVs name positions in the parent's files only,
+        # so the NEW delta dir is exempt from every earlier delete
         state = dict(
             prev,
             dirs=prev["dirs"] + [ddir],
@@ -188,8 +200,8 @@ class SnapshotTable:
     ) -> int:
         """Publish a manifest for ``version`` carrying ``state``'s dir
         sets, with writer mutual exclusion; on a lost race, reclaim
-        every dir in ``written`` (this writer's just-written data, DV
-        or key dirs — a MERGE writes two) and raise. Metadata-only
+        every dir in ``written`` (this writer's just-written data or
+        DV dirs — a MERGE writes two) and raise. Metadata-only
         commits (publish) pass ``written=[]`` and reclaim nothing."""
         manifest = {
             **{k: state[k] for k in _STATE},
@@ -246,7 +258,7 @@ class SnapshotTable:
         (merge-on-read); otherwise it is a plain multi-dir scan. Either
         way building the DataFrame launches no Spark job."""
         m = self._resolve(version, as_of_ts, branch)
-        if m["dvs"] or m["eqdvs"]:
+        if m["dvs"]:
             return self._scan_minus_dvs(spark, m).drop("__dv_file", "__dv_pos")
         return self._scan(spark, m)
 
@@ -280,36 +292,30 @@ class SnapshotTable:
         )
 
     def _scan_minus_dvs(self, spark: SparkSession, m: dict) -> DataFrame:
-        """``_positions`` with every DV and equality delete the manifest
-        names anti-joined away."""
-        df = self._positions(spark, m)
-        if m["dvs"]:
-            dv = spark.read.schema(_DV_SCHEMA).parquet(
-                *[os.path.join(self.base, d) for d in m["dvs"]]
-            )
-            df = df.join(
-                dv.select(
-                    F.col("file_path").alias("__dv_file"),
-                    F.col("row_index").alias("__dv_pos"),
-                ),
-                ["__dv_file", "__dv_pos"],
-                "left_anti",
-            )
-        for eq in m["eqdvs"]:
-            # anti-join restricted to the dirs this delete covers: the
-            # row's source dir is the second-to-last path segment of its
-            # file — younger (appended-later) dirs fall outside `covers`
-            # and keep their rows, Iceberg's sequence-number semantics
-            eqk = spark.read.schema(StructType.fromJson(eq["schema"])).parquet(
-                os.path.join(self.base, eq["dir"])
-            )
-            src_dir = F.element_at(F.split(F.col("__dv_file"), "/"), -2)
-            df = df.join(
-                F.broadcast(eqk),
-                (F.col(eq["on"]) == eqk["key"]) & src_dir.isin(list(eq["covers"])),
-                "left_anti",
-            )
-        return df
+        """``_positions`` with the union of the manifest's DVs
+        anti-joined away: one join, however many deletes made them."""
+        dv = spark.read.schema(_DV_SCHEMA).parquet(
+            *[os.path.join(self.base, d) for d in m["dvs"]]
+        )
+        return self._positions(spark, m).join(
+            dv.select(
+                F.col("file_path").alias("__dv_file"),
+                F.col("row_index").alias("__dv_pos"),
+            ),
+            ["__dv_file", "__dv_pos"],
+            "left_anti",
+        )
+
+    def _key_positions(
+        self, spark: SparkSession, m: dict, keys: DataFrame, on: str
+    ) -> DataFrame:
+        """``_positions`` of every row whose ``on`` value ``keys`` names,
+        taken from the raw data-dir scan: the DV of both ``delete_eq``
+        and ``apply_cdc``."""
+        k = keys.select(F.col(on).alias("__dv_key"))
+        return self._positions(spark, m).join(
+            k, F.col(on) == F.col("__dv_key"), "left_semi"
+        )
 
     def _write_dv(self, positions: DataFrame) -> str:
         # stored under the public names; the read path re-aliases
@@ -348,8 +354,6 @@ class SnapshotTable:
         MERGEs. Same visible rows before and after (pinned by tests)."""
         return self.commit(self.read(spark), mode="overwrite")
 
-    # -- equality deletes (sequence-scoped, the Iceberg v2 sibling) ---
-
     def delete_eq(self, spark: SparkSession, keys: DataFrame, on: str) -> int:
         """Merge-on-read EQUALITY delete: tombstone every row whose
         ``on`` value appears in ``keys`` — but ONLY in the data dirs
@@ -357,19 +361,13 @@ class SnapshotTable:
         granularity: an equality delete applies to files OLDER than
         itself, so rows appended later with the same key are exempt
         (the upsert-by-delete-then-append pattern depends on this).
-        The manifest records each eq-delete with its covered dir set
-        and its key schema; reads apply each eq set as one anti-join
-        restricted to rows whose source dir is covered."""
+        The keys resolve at delete time into one positional DV, the
+        same one ``apply_cdc`` writes, so the write scans the table
+        like ``delete_where`` and the read pays no extra join."""
         m, version = self._main_head()
-        key = keys.select(F.col(on).alias("key")).distinct()
-        ddir = self._write_dir(key, "ev")
-        eq = {
-            "dir": ddir, "on": on, "covers": list(m["dirs"]),
-            "schema": key.schema.jsonValue(),
-        }
+        dv = self._write_dv(self._key_positions(spark, m, keys, on))
         return self._commit_manifest(
-            version, dict(m, eqdvs=m["eqdvs"] + [eq]), mode="delete_eq",
-            written=[ddir],
+            version, dict(m, dvs=m["dvs"] + [dv]), mode="delete_eq", written=[dv]
         )
 
     # -- write-audit-publish ------------------------------------------
@@ -413,20 +411,15 @@ class SnapshotTable:
         vs = mains
         if len(vs) <= keep_last:
             return []
-        def _alldirs(m):
-            return (
-                m["dirs"] + m["dvs"] + [e["dir"] for e in m["eqdvs"]]
-            )
-
         drop, keep = vs[:-keep_last], vs[-keep_last:]
         keep = keep + list(heads.values())  # branch heads stay readable
         drop = drop + [m for m in others if m is not heads.get(m.get("branch"))]
-        live = {d for m in keep for d in _alldirs(m)}
+        live = {d for m in keep for d in m["dirs"] + m["dvs"]}
         for m in drop:
             os.remove(os.path.join(self._manifest_dir(), f"{m['version']:08d}.json"))
         deleted = []
         for m in drop:
-            for d in _alldirs(m):
+            for d in m["dirs"] + m["dvs"]:
                 if d not in live and os.path.isdir(os.path.join(self.base, d)):
                     shutil.rmtree(os.path.join(self.base, d))
                     deleted.append(d)
@@ -446,22 +439,14 @@ class SnapshotTable:
         ``op_col`` ∈ {'U','D'} — 'D' removes the key, 'U' upserts the
         full row (update when the key exists, insert when it doesn't).
 
-        Merge-on-read: one positional DV holding every current row
-        whose key ``changes`` names (for either op, taken from the raw
-        data-dir scan like ``delete_where``), plus one data dir of the
+        Merge-on-read: ``delete_eq``'s positional DV over every key
+        ``changes`` names (for either op), plus one data dir of the
         'U' rows projected and cast to the target's columns. The new
         manifest names the parent's dirs plus that dir and the parent's
-        DVs plus that DV; the parent's equality deletes are unchanged,
-        and the new dir is younger than all of them, so they do not
-        touch it. Bytes written are O(change), not O(table)."""
+        DVs plus that DV. Bytes written are O(change), not O(table)."""
         m, version = self._main_head()
         schema = self._schema(m)
-        keys = changes.select(F.col(on).alias("__cdc_key"))
-        dv = self._write_dv(
-            self._positions(spark, m).join(
-                keys, F.col(on) == F.col("__cdc_key"), "left_semi"
-            )
-        )
+        dv = self._write_dv(self._key_positions(spark, m, changes, on))
         upserts = changes.filter(F.col(op_col) == "U").select(
             *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
         )

@@ -582,13 +582,13 @@ def m5_equality_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     enables upsert-by-delete-then-append: (1) commit the customer base,
     (2) equality-delete every key ≡ 0 (mod 7), (3) APPEND replacement
     rows (offset keys, zeroed balances) — the appended dir is YOUNGER
-    than the delete, so the delete's recorded covered-dir set exempts
-    it; a naive global key tombstone would wrongly swallow any appended
-    row that reused a deleted key. The twin states the net effect:
-    survivors plus replacements. The delete costs O(|keys|) written;
-    the read applies one broadcast anti-join per eq-delete commit,
-    restricted to rows whose source dir the delete covers (derived from
-    the _metadata file path — no extra column in the data files)."""
+    than the delete, so the delete does not touch it; a naive global
+    key tombstone would wrongly swallow any appended row that reused a
+    deleted key. The twin states the net effect: survivors plus
+    replacements. The delete resolves its keys against the dirs that
+    exist at delete time into one positional deletion vector (a scan of
+    the table, O(deleted rows) written), so the read is the same one
+    data scan minus one DV anti-join as m4's."""
     import shutil
 
     from ..operators.snapshots import SnapshotTable

@@ -28,6 +28,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: the directory holding the ``x8313_etl_spark`` package
+_CHECKOUT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 #: Correctness-critical runtime confs (see module docstring).
 _INVARIANT_CONFS = {
     "spark.sql.session.timeZone": "UTC",
@@ -89,6 +92,9 @@ def get_spark(app_name: str = "x8313-etl-spark", cpus: int | None = None) -> Spa
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        # Python workers import the package from the checkout root, so
+        # a script started outside the checkout still runs its UDFs
+        .config("spark.executorEnv.PYTHONPATH", _CHECKOUT)
     )
     for k, v in _INVARIANT_CONFS.items():
         builder = builder.config(k, v)
