@@ -108,8 +108,10 @@ def main() -> None:
         "broadcast-nested-loop probe side is round-robin repartitioned "
         "(the single-file scan gave it 2 partitions — 16× at 20k "
         "vectors: >570 s timeout → 107 s for the raw pair scan), and the "
-        "pair table persists via the keyed pool because concomp's "
-        "symmetrizing union referenced the probe twice (218 s → 135 s). "
+        "pair table was pooled because concomp's symmetrizing union "
+        "referenced the probe twice (218 s → 135 s); concomp now "
+        "explodes its edges once into a table it persists itself, so "
+        "that pool entry is gone. "
         "At real scale the pair generator swaps to the IVF/LSH-bucketed "
         "candidates per the docstring; cluster/keep stages are unchanged. "
         "o4_global_sorted_write at 10× (1.5M orders): 1.5 s with the "

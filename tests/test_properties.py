@@ -253,6 +253,8 @@ def test_triangle_counts_match_bruteforce(spark, edges):
     from collections import Counter
     from itertools import combinations
 
+    import pandas as pd
+
     from x8313_etl_spark.operators.triangles import triangle_corner_counts
 
     canon = {(min(a, b), max(a, b)) for a, b in edges}
@@ -263,7 +265,11 @@ def test_triangle_counts_match_bruteforce(spark, edges):
             expected.update((x, y, z))
     if not canon:
         return
-    e = spark.createDataFrame(sorted(canon), "s1 long, s2 long")
+    # Arrow-backed: the operator reads e three times, and a list-built
+    # frame would send its rows through a Python worker each time
+    e = spark.createDataFrame(
+        pd.DataFrame(sorted(canon), columns=["s1", "s2"]), "s1 long, s2 long"
+    )
     got = {r.node: r.tri_cnt for r in triangle_corner_counts(e).collect()}
     assert got == dict(expected), (sorted(canon), got, dict(expected))
 

@@ -31,12 +31,13 @@ from x8313_etl_spark.audit import strip_cached
 #: Every entry was adjudicated in the r10 triage (ROADMAP.md scan-sweep
 #: section); new entries need the same written argument, not a bump.
 ALLOWED_REEXEC = {
-    # pruned seed/codebook scans (vec_id<16 / [16,32)) around the two
-    # genuine corpus passes (encode + probe); caching 16-row reads
-    # would cost more than the scans
+    # 8 scans: six pruned seed/codebook scans (four vec_id<16, two
+    # [16,32)) around the two genuine corpus passes (encode + probe);
+    # caching 16-row reads would cost more than the scans
     "sim_ivfpq_topk": "embeddings",
-    # stage-2 exact rerank legitimately re-reads vectors (probes pruned
-    # to the capped <2000 set; two of the scans read vec_id only)
+    # 3 scans: the stage-1 PQ pass over the corpus, then the stage-2
+    # exact rerank re-reads (vec_id, embedding) once for the probes and
+    # once for their capped candidate set
     "sim_rerank_two_stage": "embeddings",
     # queries slice (doc_id<10) + one corpus tokenize + late text fetch
     # by doc_id after ranking — carrying text through the shuffles is
@@ -45,24 +46,33 @@ ALLOWED_REEXEC = {
     # fixture-artifact: the CDC delta/change set derives from the base
     # table by row-local predicates; in production it is an external
     # delta-sized table and these collapse to one base scan each
+    # (3, 4 and 3 scans)
     "m1_merge_upsert": "customer",
     "m3_incremental_refresh": "customer",
     "m11_incremental_view_maintenance": "lineitem",
+    # 3 scans: one pass for every single-column check, the FK check's
+    # o_custkey-only anti-join scan and a column-free row count;
+    # caching the fact table to save two narrow scans is the wrong trade
     "dq3_constraint_audit": "orders",
     # deliberately row-level / brute-force baseline instruments
     "l10_knn_classify": "embeddings",
     # interned-name ER: the re-executed branches are narrow
     # (partkey, name) scans + a substr map; the distinct/groupBy
     # aggregations execute once — caching a full column of the fact
-    # table to save a pruned re-scan is the wrong trade
+    # table to save a pruned re-scan is the wrong trade (3 scans)
     "p_er_blocked_match": "part",
+    # 5 scans, each of one or two columns: the match's (partkey, name)
+    # scan, two key-only scans, and the (size, retailprice) and brand
+    # scans the survivorship aggregates join back by p_partkey
     "p_er_golden_record": "part",
     # bench-slice tokenize + one corpus tokenize + doc_id-only join
     # back for zero-gram docs (reads no text)
     "p_decontaminate": "documents",
     "p_contamination_overlap_score": "documents",
-    # the doubled corpus is the query's SEMANTICS (union with offset
-    # copy exercises dedup); third scan is the doc_id-only reinstate
+    # 3 scans: the quality-gated corpus twice, because the cleaned
+    # n-gram table reaches both the output and the contamination
+    # anti-join (gate, dedup and n-gram pass run twice), plus the bench
+    # slice the probe broadcasts
     "p_corpus_clean": "documents",
     # genuine two-pass algorithm: vocabulary train pass + encode pass,
     # plus a doc_id-only companion scan

@@ -17,8 +17,19 @@ def _tbl():
     return SnapshotTable(tempfile.mkdtemp(prefix="x8313-snap-"))
 
 
+def frame(spark, rows, ddl):
+    """An Arrow-backed frame under the DDL schema ``ddl``: no Python
+    worker per write, which a frame built from a list of rows needs.
+    Frames with a NULL in an integral column stay list-built, because
+    pandas would turn that column into a float."""
+    import pandas as pd
+
+    cols = [field.split()[0] for field in ddl.split(",")]
+    return spark.createDataFrame(pd.DataFrame(rows, columns=cols), ddl)
+
+
 def _df(spark, rows):
-    return spark.createDataFrame(rows, "k long, v string")
+    return frame(spark, rows, "k long, v string")
 
 
 def test_overwrite_and_append_lineage(spark):
@@ -68,7 +79,8 @@ def test_torn_write_is_invisible(spark):
 def test_apply_cdc_upsert_delete_insert(spark):
     t = _tbl()
     t.commit(_df(spark, [(1, "a"), (2, "b"), (3, "c")]))
-    changes = spark.createDataFrame(
+    changes = frame(
+        spark,
         [(2, "B2", "U"), (3, None, "D"), (7, "new", "U")],
         "k long, v string, cdc_op string",
     )
@@ -588,7 +600,7 @@ def test_apply_cdc_composes_with_eqdeletes_appends_and_time_travel(spark, tmp_pa
         spark, cdc([(5, -5, "U"), (20, -20, "U"), (30, None, "D"), (200, -200, "U")]), "k"
     )
     tbl.commit(  # v3: younger append, reusing key 20
-        spark.createDataFrame([(300, 600), (20, 40)], "k long, v long"), mode="append"
+        frame(spark, [(300, 600), (20, 40)], "k long, v long"), mode="append"
     )
     tbl.delete_eq(spark, spark.range(20, 21).select(F.col("id").alias("k")), on="k")  # v4
     tbl.apply_cdc(spark, cdc([(5, 55, "U")]), "k")  # v5
@@ -628,7 +640,7 @@ def test_lost_merge_race_reclaims_both_dirs(spark, tmp_path):
         spark.range(10, 12).select(F.col("id").alias("k")), mode="append"
     ) == 1
     before = set(os.listdir(base))
-    changes = spark.createDataFrame([(3, "U"), (4, "D")], "k long, cdc_op string")
+    changes = frame(spark, [(3, "U"), (4, "D")], "k long, cdc_op string")
     with pytest.raises(ConcurrentCommitError):
         loser.apply_cdc(spark, changes, "k")
     assert set(os.listdir(base)) == before, "the lost MERGE leaked a dir"
@@ -699,11 +711,6 @@ def test_read_plan_is_one_join_after_many_writes(spark, tmp_path):
     the vectors. Time travel to a middle version stays exact."""
     import re
 
-    import pandas as pd
-
-    def frame(rows, cols):  # Arrow-backed: no Python worker per write
-        return spark.createDataFrame(pd.DataFrame(rows, columns=cols))
-
     tbl = _dv_table(spark, tmp_path)  # v0: k -> 2k, k in 0..99
     state = {k: 2 * k for k in range(100)}
     want = {0: sorted(state.items())}
@@ -716,18 +723,20 @@ def test_read_plan_is_one_join_after_many_writes(spark, tmp_path):
         # fresh keys, plus the key the previous round's delete_eq took
         rows = [(k, -k) for k in range(lo, lo + 5)] + ([(10 * r - 10, r)] if r else [])
         state.update(rows)
-        wrote(tbl.commit(frame(rows, ["k", "v"]), mode="append"))
+        wrote(tbl.commit(frame(spark, rows, "k long, v long"), mode="append"))
         changes = [(lo, 1, "U"), (300 + r, r, "U"), (50 + r, 0, "D")]
         state.update({lo: 1, 300 + r: r})
         del state[50 + r]
-        wrote(tbl.apply_cdc(spark, frame(changes, ["k", "v", "cdc_op"]), "k"))
+        cdc = frame(spark, changes, "k long, v long, cdc_op string")
+        wrote(tbl.apply_cdc(spark, cdc, "k"))
         for k in range(60 + 5 * r, 62 + 5 * r):
             del state[k]
         wrote(tbl.delete_where(spark, F.col("k").between(60 + 5 * r, 61 + 5 * r)))
         doomed = [10 * r, 90 + r, lo]  # lo's live row is in the MERGE dir
         for k in doomed:
             del state[k]
-        wrote(tbl.delete_eq(spark, frame([(k,) for k in doomed], ["k"]), on="k"))
+        keys = frame(spark, [(k,) for k in doomed], "k long")
+        wrote(tbl.delete_eq(spark, keys, on="k"))
 
     assert len(want) == 17
     for version in (8, 16):

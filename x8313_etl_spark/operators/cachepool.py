@@ -44,7 +44,7 @@ def swap_persist(
     Every plan persisted here is also filed in the audit ledger
     (x8313_etl_spark/audit.py) under ``key``: a swap_persisted table may
     be consumed only inside later-``localCheckpoint``ed iterations
-    (p_semantic_dedup's pair graph feeding concomp), which truncate it
+    (g4's edge table feeding the label-propagation rounds), which truncate it
     out of the returned DataFrame's plan — the ledger is how the shuffle
     audit still sees it."""
     # unconditional (even on the reuse path): the ledger must hold an

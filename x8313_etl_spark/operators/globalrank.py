@@ -56,6 +56,7 @@ def with_global_rank(
         "__pid", F.spark_partition_id()
     )
     wloc = Window.partitionBy("__pid").orderBy(*order)
+    # two consumers: the per-partition count table and the offset join
     r = swap_persist(key, r.withColumn("__lrn", F.row_number().over(wloc) - 1))
     counts = r.groupBy("__pid").agg(F.count(F.lit(1)).alias("__c"))
     woff = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)

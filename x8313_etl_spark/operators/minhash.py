@@ -277,8 +277,8 @@ def near_dup_pairs(
     so this bounds latency, not volume).
 
     The sketch feeds four plan branches (both sides of the band join,
-    both sides of the verify join); ``cache`` persists the sig and sh
-    tables so each is computed once (measured 2.7× end-to-end). At
+    both sides of the verify join); ``cache`` persists the sh and
+    banded tables so each is computed once (measured 2.7× end-to-end). At
     100 TB, checkpoint those stages to parquet instead — same idea,
     spill-proof and resumable.
     """
@@ -306,11 +306,12 @@ def near_dup_pairs(
         # runs once while sh materializes, and the signature aggregate
         # reads the cached arrays, instead of each table re-shingling
         # the corpus from text (bit-identical signatures; measured on
-        # the l2 path, see OPTIMIZATION_r13.md).
+        # the l2 path, see OPTIMIZATION_r13.md). sig's one consumer is
+        # the pooled `banded`, so sig itself is not pooled.
         from .cachepool import swap_persist
 
         sh = swap_persist("minhash.sh", sh)
-        sigs = swap_persist("minhash.sigs", signature_from_shingles(sh))
+        sigs = signature_from_shingles(sh)
     else:
         sigs = signature_table(docs, id_col, text_col, k)
 
@@ -318,13 +319,10 @@ def near_dup_pairs(
         "doc_id",
         F.posexplode(band_keys(F.col("sig"))).alias("band", "key"),
     )
-    if cache and max_bucket_size is not None:
-        # The guard adds a third consumer of `banded` (the size agg, on
-        # top of the join's two sides). Persist the slim exploded table
-        # — (id, band, key) only, bands× rows but narrow — so band keys
-        # are computed once and the guard's extra pass reads cached rows.
-        from .cachepool import swap_persist
-
+    if cache:
+        # `banded` has two or more consumers in every mode (the band
+        # join's two sides, plus the guard's size agg): persist the slim
+        # (id, band, key) table so signatures and keys are computed once.
         banded = swap_persist("minhash.banded", banded)
     if on_hot not in ("drop", "salt"):
         raise ValueError(f"on_hot must be 'drop' or 'salt', got {on_hot!r}")

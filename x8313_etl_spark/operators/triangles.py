@@ -35,15 +35,13 @@ def triangle_corner_counts(e: DataFrame) -> DataFrame:
     Returns ``(node, tri_cnt)`` for every node in ≥1 triangle.
 
     Both ``e`` and the oriented table feed THREE consumers each (degree
-    union + rank joins; o1/o2/closing) — without a persist the caller's
-    edge-build lineage (in g3: the pair + count-distinct aggregate,
-    the dominant cost) re-executes per branch, the same
-    multi-consumer trap sim_ivf_topk hit (PERF.md). Persisted via the
-    keyed swap-pool so repeated invocations reuse instead of leak.
+    union + rank joins; o1/o2/closing), so both are materialized: the
+    caller checkpoints ``e`` (g3's edge table), and the oriented table
+    is persisted here via the keyed swap-pool so repeated invocations
+    reuse instead of leak.
     """
     from .cachepool import swap_persist
 
-    e = swap_persist("triangles.edges", e)
     deg = (
         e.select(F.col("s1").alias("node"))
         .unionAll(e.select(F.col("s2").alias("node")))

@@ -1,6 +1,7 @@
 """Versioned state-directory commits for foreachBatch sinks — the ONE
 implementation of the epoch commit/replay/prune discipline that
-operators/upsert_sink.py and operators/viewmaint.py share (review round
+operators/upsert_sink.py, operators/viewmaint.py and
+operators/ingestdedup.py share (review round
 6: the copied machinery had already drifted — viewmaint's seed version
 -1 was invisible to the copied ``isdigit`` parser, breaking restart
 recovery in the init-only window and exempting the seed from pruning).

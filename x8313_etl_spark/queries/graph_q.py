@@ -487,6 +487,7 @@ def g4_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
+    # read by the round-1 vote and by every later round's join
     ed = swap_persist(
         "g4.edges",
         # hash-partitioned by the per-round join key before the persist
@@ -748,6 +749,7 @@ def g6_path_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
+    # read by every hop round and every sigma round
     ed = swap_persist(
         "g6.edges",
         e.unionAll(e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))),
@@ -767,6 +769,8 @@ def g6_path_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("seed", "node")
             .agg(F.min("hop").alias("hop")),
         )
+    # checkpointed already, but every sigma and c level reads it twice:
+    # unpooled, the pass ran 6 more jobs and 3x the shuffle (sf0.01)
     hop = swap_persist("g6.hops", hop)
     sigma = audited_checkpoint(
         "g6.round",

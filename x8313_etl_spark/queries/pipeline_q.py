@@ -771,6 +771,7 @@ def p_ngram_lm_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = b.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("cnt"))
     from ..operators.cachepool import swap_persist
 
+    # read by ctx, cont, nt and the final filter
     c = swap_persist("pipeline.kn_bigrams", c)
     ctx = c.groupBy("w1").agg(
         F.sum("cnt").alias("c1"), F.count(F.lit(1)).alias("n1fwd")
@@ -872,6 +873,7 @@ def p_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ..operators.cachepool import swap_persist
 
+    # read by the bigram count and the per-doc NLL join
     b = swap_persist("pipeline.ppl_bigrams", b)
     c = b.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("cnt"))
     ctx = c.groupBy("w1").agg(F.sum("cnt").alias("c1"))
@@ -1293,6 +1295,7 @@ def p_er_blocked_multikey(spark: SparkSession, sf_dir: str) -> DataFrame:
             "(CASE WHEN p_partkey % 20 = 0 THEN 1 ELSE 2 END))"
         ).alias("dirty_name"),
     )
+    # both name tables feed both blockers (band and q-gram)
     dnames = swap_persist(
         "er_multikey.dnames", dirty.select("dirty_name").distinct()
     )
@@ -1852,7 +1855,8 @@ def p_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # identical (and the c_ab/c_i/c_o integers are the same counts by
     # construction: per-order sets ⇒ pair instances are distinct per
     # order ⇒ count(*) ≡ the old distinct-pair count, and exploding the
-    # sets regenerates bi exactly for the item counts).
+    # sets regenerates bi exactly for the item counts). Pooled: the item
+    # counts and the pair fan-out both read it.
     sets = swap_persist(
         "icf.sets",
         load_table(spark, sf_dir, "lineitem")
@@ -2349,14 +2353,10 @@ def p_budget_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-partition windows are over a bounded table (the dq4/dq8
     shape — ALLOWED entry in tests/test_shuffle_audit.py) and it
     broadcasts into the one corpus-wide pass; the only full shuffle is
-    the per-source top-quota rank."""
-    from ..operators.cachepool import swap_persist
-
+    the per-source top-quota rank. The per-source counts are not
+    pooled: the allocation windows are their one consumer."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
-    per_src = swap_persist(
-        "pba.src",
-        d.groupBy("source").agg(F.count(F.lit(1)).alias("cnt")),
-    )
+    per_src = d.groupBy("source").agg(F.count(F.lit(1)).alias("cnt"))
     wall = Window.partitionBy()
     a = per_src.select(
         "source",
@@ -2485,6 +2485,7 @@ def p_dedup_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     banded = sigs.select(
         "doc_id", F.posexplode(band_keys(F.col("sig"))).alias("band", "key")
     )
+    # read by n_cand and n_tp
     cand = swap_persist(
         "dedupeval.cand",
         guarded_band_self_join(
@@ -2505,6 +2506,7 @@ def p_dedup_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     jac = F.col("inter").cast("double") / (
         F.col("sa") + F.col("sb") - F.col("inter")
     )
+    # read by n_true and n_tp
     exact = swap_persist(
         "dedupeval.exact",
         inter.join(

@@ -462,18 +462,15 @@ def p_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vnorm").alias("nb"),
     )
     cos = dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-    from ..operators.cachepool import swap_persist
-
     # same stream-side parallelism fix as sim_neardup_exact: the n²
     # probe must fan out over the cores, not the scan's 1-2 partitions.
-    # The pair table is persisted via the keyed pool, which files the
-    # O(n²) pair scan under its own ledger key; concomp reads it once.
-    pairs = swap_persist(
-        "similarity.semantic_pairs",
+    # Not pooled: concomp reads the pairs once, into the edge table it
+    # persists and files under p_semantic_dedup.edges.
+    pairs = (
         a.repartition(default_parallelism())
         .join(b, F.col("vec_a") < F.col("vec_b"))
         .filter(cos >= _NEARDUP_TAU)
-        .select("vec_a", "vec_b"),
+        .select("vec_a", "vec_b")
     )
     comp = connected_components(
         e.select("vec_id"), pairs, node_col="vec_id", src="vec_a", dst="vec_b",
@@ -633,20 +630,16 @@ def p_semantic_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     structurally low for ANY sub-quadratic generator on barely-over-a-
     low-τ isotropic pairs — that regime belongs to the exact baseline).
     Every stage shuffles on bounded keys (band buckets, edge
-    endpoints); nothing is corpus×corpus."""
-    from ..operators.cachepool import swap_persist
-
-    pairs = swap_persist(
-        "similarity.lsh_dedup_pairs",
-        _lsh_verified_pairs(
-            spark,
-            sf_dir,
-            _NEARDUP_TAU,
-            planes=HYPERPLANES32,
-            n_bands=_DEDUP_BANDS,
-            pool_key="similarity.lsh32_sketch",
-        ).select("vec_a", "vec_b"),
-    )
+    endpoints); nothing is corpus×corpus. The pairs are not pooled:
+    concomp reads them once, into the edge table it persists."""
+    pairs = _lsh_verified_pairs(
+        spark,
+        sf_dir,
+        _NEARDUP_TAU,
+        planes=HYPERPLANES32,
+        n_bands=_DEDUP_BANDS,
+        pool_key="similarity.lsh32_sketch",
+    ).select("vec_a", "vec_b")
     ids = load_table(spark, sf_dir, "embeddings").select("vec_id")
     comp = connected_components(
         ids, pairs, node_col="vec_id", src="vec_a", dst="vec_b",

@@ -467,6 +467,7 @@ def ts_lttb(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(worder).alias("rk"),
         F.count(F.lit(1)).over(wseries).alias("n"),
     )
+    # read by the bucket averages, the first pick and every round
     bkt = swap_persist(
         "ts_lttb.bkt",
         base.withColumn(
@@ -489,6 +490,7 @@ def ts_lttb(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.count(F.lit(1))
         ).alias("ay"),
     )
+    # read by every selection round
     avgs = swap_persist("ts_lttb.avgs", avgs)
     sel = audited_checkpoint(
         "ts_lttb.round",
@@ -652,6 +654,7 @@ def _seasonal_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ..operators.cachepool import swap_persist
 
+    # read by the seasonal aggregate and the remainder join
     tr = swap_persist("timeseries.sd_trend", tr)
     hod = F.hour(F.col("hour"))
     seas0 = (
@@ -738,6 +741,7 @@ def dq2_anomaly_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     sd = _seasonal_table(spark, sf_dir).filter(F.col("remainder").isNotNull())
     from ..operators.cachepool import swap_persist
 
+    # read by the per-series moments and the flag join
     sd = swap_persist("timeseries.sd_table", sd)
     stats = sd.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),

@@ -1094,30 +1094,27 @@ def w19_rfm_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     global rank (operators/globalrank.py), so no value interpolation,
     no all-to-one exchange, and both engines agree exactly. q=4 is
     'best' on every axis (most recent / most frequent / highest
-    spend). The base table is pooled: it feeds three rank passes (keys
-    w19.*). The twin's whole-table row_number() windows are the
+    spend). Each rank pass pools its own table (keys w19.rank_*); the
+    unpooled base aggregate's one consumer is the first pass. The
+    twin's whole-table row_number() windows are the
     oracle-shape equivalent; the Spark side's only single-partition
     stages are the three bounded per-partition count tables (the o1
     globalrank shape — ALLOWED entries in tests/test_shuffle_audit.py).
     """
-    from ..operators.cachepool import swap_persist
     from ..operators.globalrank import with_global_rank
 
     o = load_table(spark, sf_dir, "orders")
-    base = swap_persist(
-        "w19.base",
-        o.groupBy("o_custkey").agg(
-            F.max(F.col("o_orderdate").cast("date")).alias("last_day"),
-            F.count(F.lit(1)).alias("frequency"),
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint")).alias(
-                "monetary_cents"
-            ),
-        ).select(
-            F.col("o_custkey").alias("c_custkey"),
-            "last_day",
-            "frequency",
-            "monetary_cents",
+    base = o.groupBy("o_custkey").agg(
+        F.max(F.col("o_orderdate").cast("date")).alias("last_day"),
+        F.count(F.lit(1)).alias("frequency"),
+        F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint")).alias(
+            "monetary_cents"
         ),
+    ).select(
+        F.col("o_custkey").alias("c_custkey"),
+        "last_day",
+        "frequency",
+        "monetary_cents",
     )
     r = with_global_rank(
         base,
