@@ -47,7 +47,7 @@ start-gate's blind spot: the r11 driver bench passed the start gate and
 still drifted uniformly 1.1-2.1x on every slot (sustained-compute host
 regime change mid-run). Every run's in-run host_norm DuckDB pin is
 divided by the recorded quiet-host reference pin
-(BASELINE_PROXY.json's ``host_pin``, recorded by
+(BASELINE_PROXY.json's ``host_pins[sf_dir]``, recorded by
 scripts/record_host_pin.py); the JSON ships ``"comparability":
 {"drift_factor": ..., "comparable_pins": bool}``. Cross-round readers
 divide per-query deltas by drift_factor before reading anything into
@@ -198,8 +198,8 @@ def _pin_drift(
     host-regime change the stamp exists to catch raises the floor
     itself.
 
-    Pins are PER SF DIRECTORY (``host_pins`` keyed by sf_dir, with the
-    legacy single ``host_pin`` as fallback): the r11 ~sf1 sweep showed
+    Pins are PER SF DIRECTORY (``host_pins`` keyed by sf_dir): the r11
+    ~sf1 sweep showed
     host regimes can be VOLUME-dependent — the sf1 DuckDB pin ran
     1.5-1.8x slower across rounds while the sf0.1 pin was stable — so
     an sf0.1 reference must never adjudicate an sf1 run. No pin
@@ -208,18 +208,7 @@ def _pin_drift(
         proxy = json.load(open(proxy_path))
     except (OSError, ValueError):
         proxy = {}
-    pin = (proxy.get("host_pins") or {}).get(sf_dir) if sf_dir else None
-    if pin is None:
-        legacy = proxy.get("host_pin") or {}
-        # the legacy single pin applies only to the sf_dir it RECORDED:
-        # a pin missing sf_dir metadata is treated as no-pin when the
-        # caller names one (r12 advice — the old `in (None, sf_dir)`
-        # let an old-format sf0.1 pin adjudicate an sf1 run, the exact
-        # cross-sf compare the per-sf pins exist to forbid)
-        if sf_dir is None or legacy.get("sf_dir") == sf_dir:
-            pin = legacy
-        else:
-            pin = {}
+    pin = (proxy.get("host_pins") or {}).get(sf_dir) or {}
     # minima compare ONLY when BOTH sides carry the floor sample —
     # min-vs-median mixing swings ~1.5x on its own (the measured
     # floor-vs-median gap on one quiet host), enough to flip the 1.15

@@ -86,14 +86,12 @@ def main() -> None:
     # carry the quiet-host reference pins over (recorded separately by
     # scripts/record_host_pin.py; bench.py's comparability stamp reads
     # them) — a proxy re-run must never silently drop or re-baseline
-    # EITHER the legacy single 'host_pin' OR the per-sf 'host_pins'
-    # map (r12 advice: dropping host_pins stamped every non-default-sf
+    # the per-sf 'host_pins' map (r12 advice: dropping it stamped every
     # run comparability None after any proxy re-run)
     if os.path.exists(path):
         prev_payload = json.load(open(path))
-        for key in ("host_pin", "host_pins"):
-            if prev_payload.get(key) is not None:
-                payload[key] = prev_payload[key]
+        if prev_payload.get("host_pins") is not None:
+            payload["host_pins"] = prev_payload["host_pins"]
     with open(path, "w") as f:
         json.dump(payload, f, indent=1, sort_keys=True)
     print(json.dumps({"total_sec": payload["total_sec"], "n": len(out)}))

@@ -6,8 +6,7 @@ its DuckDB twin, median of 3 / min of 5, warm, inside a live 32-thread
 session — so the recorded pin and every future run's in-run pin measure
 exactly the same thing. Writes the result into BASELINE_PROXY.json
 under ``host_pins[sf_dir]`` (merged in place; the per-query proxy
-numbers are untouched; the legacy single ``host_pin`` tracks the
-default bench sf for older readers). Refuses to record under ambient
+numbers are untouched). Refuses to record under ambient
 load: a pin captured in a drifted host regime would silently
 re-baseline every future comparability verdict — the exact failure the
 pin exists to catch.
@@ -54,11 +53,8 @@ def _write(norm: dict, sf_dir: str, loadavg: float | None = None) -> int:
     }
     # pins are PER SF DIRECTORY (bench._pin_drift: the r11 sf1 sweep
     # proved host regimes are volume-dependent — an sf0.1 pin must not
-    # adjudicate an sf1 run); the legacy single host_pin tracks the
-    # default bench sf for older readers
+    # adjudicate an sf1 run)
     proxy.setdefault("host_pins", {})[sf_dir] = pin
-    if sf_dir == DEFAULT_SF_DIR:
-        proxy["host_pin"] = pin
     json.dump(proxy, open(bench.PROXY_PATH, "w"), indent=1, sort_keys=True)
     print("recorded host_pin:", json.dumps(pin))
     return 0

@@ -152,10 +152,8 @@ def test_near_dup_pairs_on_hot_salt_recovers_dropped_pairs(spark):
     the full C(n,2) at Jaccard 1.0 — same answer the uncapped join
     gives."""
     docs = _identical_docs(spark, 200)
-    assert near_dup_pairs(docs, max_bucket_size=50, cache=False).count() == 0
-    salted = near_dup_pairs(
-        docs, max_bucket_size=50, cache=False, on_hot="salt"
-    ).collect()
+    assert near_dup_pairs(docs, max_bucket_size=50).count() == 0
+    salted = near_dup_pairs(docs, max_bucket_size=50, on_hot="salt").collect()
     assert len(salted) == 200 * 199 // 2
     assert all(r.jaccard == 1.0 for r in salted)
 

@@ -62,18 +62,21 @@ def test_gate_tolerates_missing_getloadavg(monkeypatch):
 # --- pin-relative comparability stamp (r12, r11 verdict item 1) ------------
 
 
+_SF = "/data/sf0.1"
+
+
 def _write_pin(tmp_path, pin):
     import json
 
     p = tmp_path / "proxy.json"
-    p.write_text(json.dumps({"queries": {}, "host_pin": pin}))
+    p.write_text(json.dumps({"queries": {}, "host_pins": {_SF: pin}}))
     return str(p)
 
 
 def test_pin_drift_comparable_within_band(tmp_path):
     path = _write_pin(tmp_path, {"q1_duckdb_sec": 0.10, "q1_spark_sec": 1.0})
     out = bench._pin_drift(
-        {"q1_duckdb_sec": 0.11, "q1_spark_sec": 1.2}, proxy_path=path
+        {"q1_duckdb_sec": 0.11, "q1_spark_sec": 1.2}, _SF, proxy_path=path
     )
     assert out["comparable_pins"] is True
     assert out["drift_factor"] == 1.1
@@ -85,7 +88,7 @@ def test_pin_drift_flags_sustained_regime(tmp_path):
     """The r11 failure shape: both engines ~1.2x slower mid-run while
     the start gate passed — the pin stamp must say non-comparable."""
     path = _write_pin(tmp_path, {"q1_duckdb_sec": 0.102, "q1_spark_sec": 1.09})
-    out = bench._pin_drift({"q1_duckdb_sec": 0.124}, proxy_path=path)
+    out = bench._pin_drift({"q1_duckdb_sec": 0.124}, _SF, proxy_path=path)
     assert out["comparable_pins"] is False
     assert out["drift_factor"] > bench.PIN_DRIFT_TOL
 
@@ -95,7 +98,7 @@ def test_pin_drift_flags_too_fast_too(tmp_path):
     non-comparable — a future quiet-era pin recorded under load would
     otherwise make every honest run look like a regression."""
     path = _write_pin(tmp_path, {"q1_duckdb_sec": 0.20})
-    out = bench._pin_drift({"q1_duckdb_sec": 0.10}, proxy_path=path)
+    out = bench._pin_drift({"q1_duckdb_sec": 0.10}, _SF, proxy_path=path)
     assert out["comparable_pins"] is False
 
 
@@ -106,17 +109,17 @@ def test_pin_drift_unknown_without_pin(tmp_path):
 
     p = tmp_path / "proxy.json"
     p.write_text(json.dumps({"queries": {}}))
-    out = bench._pin_drift({"q1_duckdb_sec": 0.1}, proxy_path=str(p))
+    out = bench._pin_drift({"q1_duckdb_sec": 0.1}, _SF, proxy_path=str(p))
     assert out["comparable_pins"] is None
     assert out["drift_factor"] is None
     path = _write_pin(tmp_path, {"q1_duckdb_sec": 0.10})
-    out2 = bench._pin_drift({}, proxy_path=path)
+    out2 = bench._pin_drift({}, _SF, proxy_path=path)
     assert out2["comparable_pins"] is None
 
 
 def test_pin_drift_tolerates_missing_proxy_file(tmp_path):
     out = bench._pin_drift(
-        {"q1_duckdb_sec": 0.1}, proxy_path=str(tmp_path / "nope.json")
+        {"q1_duckdb_sec": 0.1}, _SF, proxy_path=str(tmp_path / "nope.json")
     )
     assert out["comparable_pins"] is None
 
@@ -136,7 +139,6 @@ def test_pin_drift_is_per_sf_dir(tmp_path):
             "/data/replica10x": {"q1_duckdb_min_sec": 0.25,
                                  "sf_dir": "/data/replica10x"},
         },
-        "host_pin": {"q1_duckdb_min_sec": 0.10, "sf_dir": "/data/sf0.1"},
     }))
     # exact per-sf match: the sf1 run adjudicates against the sf1 pin
     out = bench._pin_drift(
@@ -144,7 +146,7 @@ def test_pin_drift_is_per_sf_dir(tmp_path):
         proxy_path=str(p),
     )
     assert out["comparable_pins"] is True and out["drift_factor"] == 1.04
-    # unknown sf_dir, legacy pin recorded for a DIFFERENT sf: no verdict
+    # unknown sf_dir (pins recorded only for OTHER sfs): no verdict
     out2 = bench._pin_drift(
         {"q1_duckdb_min_sec": 0.26}, sf_dir="/data/sf9", proxy_path=str(p)
     )
@@ -152,12 +154,16 @@ def test_pin_drift_is_per_sf_dir(tmp_path):
 
 
 def test_pin_drift_legacy_single_pin_still_applies_to_its_sf(tmp_path):
+    """The sf0.1 pin (once also stored as a single top-level
+    ``host_pin``) adjudicates the run that names its sf_dir."""
     import json
 
     p = tmp_path / "proxy.json"
     p.write_text(json.dumps({
         "queries": {},
-        "host_pin": {"q1_duckdb_min_sec": 0.10, "sf_dir": "/data/sf0.1"},
+        "host_pins": {
+            "/data/sf0.1": {"q1_duckdb_min_sec": 0.10, "sf_dir": "/data/sf0.1"},
+        },
     }))
     out = bench._pin_drift(
         {"q1_duckdb_min_sec": 0.11}, sf_dir="/data/sf0.1", proxy_path=str(p)
@@ -166,8 +172,8 @@ def test_pin_drift_legacy_single_pin_still_applies_to_its_sf(tmp_path):
 
 
 def test_pin_drift_legacy_pin_without_sf_metadata_is_no_pin(tmp_path):
-    """A legacy pin that never recorded its sf_dir must NOT adjudicate a
-    run that names one (r12 advice): the old `in (None, sf_dir)` let an
+    """A pin that never recorded its sf_dir must NOT adjudicate a run
+    at another sf (r12 advice): the old `in (None, sf_dir)` let an
     old-format sf0.1 pin judge an sf1 run — the exact cross-sf compare
     the per-sf pins forbid. Verdict None, not a guess."""
     path = _write_pin(tmp_path, {"q1_duckdb_min_sec": 0.10})
@@ -188,12 +194,13 @@ def test_pin_drift_never_mixes_min_and_median(tmp_path):
     path = _write_pin(
         tmp_path, {"q1_duckdb_min_sec": 0.08, "q1_duckdb_sec": 0.12}
     )
-    out = bench._pin_drift({"q1_duckdb_sec": 0.12}, proxy_path=str(path))
+    out = bench._pin_drift({"q1_duckdb_sec": 0.12}, _SF, proxy_path=str(path))
     assert out["comparable_pins"] is True and out["drift_factor"] == 1.0
     # and the mirror: run has min, pin has median only
     path2 = _write_pin(tmp_path, {"q1_duckdb_sec": 0.12})
     out2 = bench._pin_drift(
         {"q1_duckdb_min_sec": 0.08, "q1_duckdb_sec": 0.12},
+        _SF,
         proxy_path=str(path2),
     )
     assert out2["comparable_pins"] is True and out2["drift_factor"] == 1.0

@@ -122,7 +122,6 @@ def test_incremental_dedup_band_join_shapes(spark, sf_dir):
     out = incremental_near_dups(
         d.filter(F.col("doc_id") % 5 != 0),
         d.filter(F.col("doc_id") % 5 == 0),
-        cache=False,
     )
     plan = _plan(out)
     # batch x index is an equi-join on band keys; the hot-bucket guard

@@ -75,11 +75,14 @@ def test_precomputed_index_tables_match_recompute(spark, sf_dir):
     """The production contract (ADVICE r6): pass the persisted standing
     index via index_sig/index_sh and the verdicts must be identical to
     the recompute path — the index side is consumed as-is."""
-    from x8313_etl_spark.operators.minhash import shingle_table, signature_table
+    from x8313_etl_spark.operators.minhash import (
+        shingle_table,
+        signature_from_shingles,
+    )
 
     index, batch = _split(spark, sf_dir)
     base = incremental_near_dups(index, batch, threshold=_TAU).collect()
-    sig = signature_table(index, "doc_id", "text", 3)
+    sig = signature_from_shingles(shingle_table(index, "doc_id", "text", 3))
     sh = shingle_table(index, "doc_id", "text", 3)
     pre = incremental_near_dups(
         None, batch, threshold=_TAU, index_sig=sig, index_sh=sh
@@ -97,10 +100,13 @@ def test_precomputed_index_tables_match_recompute(spark, sf_dir):
 def test_index_tables_must_come_together(spark, sf_dir):
     import pytest
 
-    from x8313_etl_spark.operators.minhash import signature_table
+    from x8313_etl_spark.operators.minhash import (
+        shingle_table,
+        signature_from_shingles,
+    )
 
     index, batch = _split(spark, sf_dir)
-    sig = signature_table(index, "doc_id", "text", 3)
+    sig = signature_from_shingles(shingle_table(index, "doc_id", "text", 3))
     with pytest.raises(ValueError, match="together"):
         incremental_near_dups(index, batch, index_sig=sig)
     with pytest.raises(ValueError, match="index_docs or index_sig"):
@@ -112,10 +118,13 @@ def test_docs_and_precomputed_index_together_is_an_error(spark, sf_dir):
     index masquerade as the passed docs (review round 7)."""
     import pytest
 
-    from x8313_etl_spark.operators.minhash import shingle_table, signature_table
+    from x8313_etl_spark.operators.minhash import (
+        shingle_table,
+        signature_from_shingles,
+    )
 
     index, batch = _split(spark, sf_dir)
-    sig = signature_table(index, "doc_id", "text", 3)
+    sig = signature_from_shingles(shingle_table(index, "doc_id", "text", 3))
     sh = shingle_table(index, "doc_id", "text", 3)
     with pytest.raises(ValueError, match="not both"):
         incremental_near_dups(index, batch, index_sig=sig, index_sh=sh)

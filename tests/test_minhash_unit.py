@@ -16,7 +16,7 @@ def _docs(spark, texts):
 def test_exact_duplicates_found_with_jaccard_one(spark):
     base = "alpha beta gamma delta epsilon zeta eta theta"
     docs = _docs(spark, [base, base, "one two three four five six seven"])
-    got = {(r.doc_a, r.doc_b): r.jaccard for r in near_dup_pairs(docs, cache=False).collect()}
+    got = {(r.doc_a, r.doc_b): r.jaccard for r in near_dup_pairs(docs).collect()}
     assert got == {(0, 1): 1.0}
 
 
@@ -24,7 +24,7 @@ def test_near_duplicate_found_disjoint_not(spark):
     a = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     b = a + " lambda"  # one appended word → high shingle overlap
     c = "uno dos tres cuatro cinco seis siete ocho nueve diez"
-    got = {(r.doc_a, r.doc_b) for r in near_dup_pairs(_docs(spark, [a, b, c]), cache=False).collect()}
+    got = {(r.doc_a, r.doc_b) for r in near_dup_pairs(_docs(spark, [a, b, c])).collect()}
     assert (0, 1) in got
     assert all(2 not in pair for pair in got)
 
@@ -32,21 +32,26 @@ def test_near_duplicate_found_disjoint_not(spark):
 def test_short_docs_yield_no_pairs(spark):
     # < 3 words → empty shingle set → null signature → never a candidate
     docs = _docs(spark, ["one two", "one two", "x y"])
-    assert near_dup_pairs(docs, cache=False).count() == 0
+    assert near_dup_pairs(docs).count() == 0
 
 
 def test_native_signature_matches_hof_fold(spark):
-    """signature_table (the Arrow kernel sketch) must be bit-identical
-    to the shingle_stage HOF-fold reference on every doc with shingles."""
+    """signature_from_shingles(shingle_table(docs)) (the Arrow kernel
+    sketch) must be bit-identical to the shingle_stage HOF-fold
+    reference on every doc with shingles."""
     import pyspark.sql.functions as F
 
-    from x8313_etl_spark.operators.minhash import shingle_stage, signature_table
+    from x8313_etl_spark.operators.minhash import (
+        shingle_stage,
+        shingle_table,
+        signature_from_shingles,
+    )
 
     texts = [
         "alpha beta gamma delta epsilon zeta eta theta",
         "alpha beta gamma delta epsilon zeta eta thetb",
         "one two three four five six seven",
-        "one two",  # shingle-less: absent from signature_table
+        "one two",  # shingle-less: absent from the kernel output
         "repeat repeat repeat repeat repeat",
     ]
     docs = _docs(spark, texts)
@@ -55,7 +60,7 @@ def test_native_signature_matches_hof_fold(spark):
         .filter(F.size("sh") > 0)
         .select("doc_id", F.col("sig").alias("sig_ref"))
     )
-    fast = signature_table(docs, "doc_id", "text")
+    fast = signature_from_shingles(shingle_table(docs, "doc_id", "text"))
     joined = ref.join(fast, "doc_id", "full")
     assert joined.filter("sig_ref IS NULL OR sig IS NULL").count() == 0
     assert joined.filter("sig_ref != sig").count() == 0
@@ -118,32 +123,3 @@ def test_band_candidate_prob_is_a_monotone_cdf_shape():
     with pytest.raises(ValueError):
         tune_bands(1.0)
 
-
-def test_signature_from_shingles_matches_signature_table(spark):
-    """signature_from_shingles(shingle_table(docs)) must be bit-identical
-    to signature_table(docs) — the r13 single-regex-pass derivation used
-    by every sig+sh co-consumer (near_dup_pairs, incremental_near_dups,
-    p_dedup_recall_eval)."""
-    import pyspark.sql.functions as F
-
-    from x8313_etl_spark.operators.minhash import (
-        shingle_table,
-        signature_from_shingles,
-        signature_table,
-    )
-
-    texts = [
-        "alpha beta gamma delta epsilon zeta eta theta",
-        "alpha beta gamma delta epsilon zeta eta thetb",
-        "one two three four five six seven",
-        "one two",  # shingle-less: absent from both forms
-        "repeat repeat repeat repeat repeat",
-    ]
-    docs = _docs(spark, texts)
-    ref = signature_table(docs, "doc_id", "text").select(
-        "doc_id", F.col("sig").alias("sig_ref")
-    )
-    derived = signature_from_shingles(shingle_table(docs, "doc_id", "text"))
-    joined = ref.join(derived, "doc_id", "full")
-    assert joined.filter("sig_ref IS NULL OR sig IS NULL").count() == 0
-    assert joined.filter("sig_ref != sig").count() == 0

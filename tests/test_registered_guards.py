@@ -661,7 +661,10 @@ def test_incremental_dedup_index_roundtrip(spark, sf_oracle_dir, tmp_path):
 
     from x8313_etl_spark.io import load_table
     from x8313_etl_spark.operators.increment import incremental_near_dups
-    from x8313_etl_spark.operators.minhash import shingle_table, signature_table
+    from x8313_etl_spark.operators.minhash import (
+        shingle_table,
+        signature_from_shingles,
+    )
 
     d = load_table(spark, sf_oracle_dir, "documents")
     cuts = d.agg(
@@ -676,7 +679,9 @@ def test_incremental_dedup_index_roundtrip(spark, sf_oracle_dir, tmp_path):
     sig_dir = os.path.join(str(tmp_path), "sig")
     sh_dir = os.path.join(str(tmp_path), "sh")
     # standing index v0: sketched once, persisted as parquet
-    signature_table(idx0, "doc_id", "text", 3).write.parquet(sig_dir)
+    signature_from_shingles(shingle_table(idx0, "doc_id", "text", 3)).write.parquet(
+        sig_dir
+    )
     shingle_table(idx0, "doc_id", "text", 3).write.parquet(sh_dir)
 
     # ingest batch 1 against the persisted index (the production path:
@@ -690,7 +695,9 @@ def test_incremental_dedup_index_roundtrip(spark, sf_oracle_dir, tmp_path):
 
     # ROUND TRIP: append batch 1's own sketches — the ingest's output
     # index state — so they become batch 2's input index
-    signature_table(b1, "doc_id", "text", 3).write.mode("append").parquet(sig_dir)
+    signature_from_shingles(shingle_table(b1, "doc_id", "text", 3)).write.mode(
+        "append"
+    ).parquet(sig_dir)
     shingle_table(b1, "doc_id", "text", 3).write.mode("append").parquet(sh_dir)
 
     v2 = incremental_near_dups(
@@ -698,7 +705,7 @@ def test_incremental_dedup_index_roundtrip(spark, sf_oracle_dir, tmp_path):
         index_sig=spark.read.parquet(sig_dir),
         index_sh=spark.read.parquet(sh_dir),
     )
-    ref = incremental_near_dups(idx0.unionByName(b1), b2, cache=False)
+    ref = incremental_near_dups(idx0.unionByName(b1), b2)
 
     key = lambda r: (r["doc_id"],)
     got = sorted(map(tuple, v2.collect()), key=lambda t: t[0])

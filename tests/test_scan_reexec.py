@@ -69,11 +69,6 @@ ALLOWED_REEXEC = {
     # back for zero-gram docs (reads no text)
     "p_decontaminate": "documents",
     "p_contamination_overlap_score": "documents",
-    # 3 scans: the quality-gated corpus twice, because the cleaned
-    # n-gram table reaches both the output and the contamination
-    # anti-join (gate, dedup and n-gram pass run twice), plus the bench
-    # slice the probe broadcasts
-    "p_corpus_clean": "documents",
     # genuine two-pass algorithm: vocabulary train pass + encode pass,
     # plus a doc_id-only companion scan
     "p_unigram_encode": "documents",

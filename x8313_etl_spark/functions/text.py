@@ -1,7 +1,7 @@
 """Text-analysis expression helpers (SURVEY.md §2.10 L1/L5-L7 + pipeline ops).
 
-All Column expressions (no UDFs): tokenization, shingling, normalization,
-quality metrics, a marker-word language-ID score, a rolling-hash
+All Column expressions (no UDFs): tokenization, shingling, quality
+metrics, a marker-word language-ID score, a rolling-hash
 fingerprint, and SimHash. Each has a documented DuckDB-SQL twin shape
 used by the oracle queries in queries/llm.py / queries/pipeline_q.py.
 
@@ -35,30 +35,10 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 BPE_TOKEN_RE = r"\w+|[^\w\s]"
 
 
-def normalize_text(c: Column) -> Column:
-    """lower + trim + whitespace-collapse (exact-dedup normalization).
-
-    SQL twin: regexp_replace(trim(lower(x)), '\\s+', ' ', 'g')
-    """
-    return F.regexp_replace(F.trim(F.lower(c)), r"\s+", " ")
-
-
 def tokens(c: Column) -> Column:
     """Whitespace tokens. SQL twin: string_split(x, ' ') (fixture texts
     are single-spaced; use string_split_regex for general input)."""
     return F.split(c, " ")
-
-
-def shingles(c: Column, k: int = 3) -> Column:
-    """Distinct k-gram word shingles as an array<string>.
-
-    Docs shorter than k words yield an empty array.
-    SQL twin: generate_series + list indexing (queries/llm.py).
-
-    PERF: prefer ``shingles_from_words`` on a materialized words column
-    (see module docstring).
-    """
-    return shingles_from_words(tokens(c), k)
 
 
 def shingles_from_words(w: Column, k: int = 3) -> Column:
@@ -93,10 +73,6 @@ def shingles_rx(text: Column, k: int = 3) -> Column:
     return F.array_distinct(
         F.regexp_extract_all(text, F.lit(gram_pattern(k)), F.lit(1))
     )
-
-
-def word_count(w: Column) -> Column:
-    return F.size(w)
 
 
 def char_ratio(c: Column, pattern: str) -> Column:

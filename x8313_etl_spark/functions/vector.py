@@ -59,10 +59,6 @@ def dot_fixed(a: Column, b: Column, dim: int) -> Column:
     return out
 
 
-def norm_fixed(a: Column, dim: int) -> Column:
-    return F.sqrt(dot_fixed(a, a, dim))
-
-
 def cosine(a: Column, b: Column) -> Column:
     """cos(a,b) = dot/(|a||b|) — all IEEE double ops, cross-engine exact.
 

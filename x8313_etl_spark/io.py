@@ -91,11 +91,6 @@ def validate_table_schema(spark: SparkSession, sf_dir: str, name: str) -> None:
         )
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    use = names or TABLE_NAMES
-    return {n: load_table(spark, sf_dir, n) for n in use}
-
-
 def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
     """S6: register every fixture table as a temp view for the SQL entry point."""
     for n in TABLE_NAMES:
@@ -118,18 +113,10 @@ def read_csv(
     return spark.read.csv(path, schema=schema, header=header, sep=sep)
 
 
-def write_csv(df: DataFrame, path: str, header: bool = True, sep: str = ",") -> None:
-    df.write.mode("overwrite").csv(path, header=header, sep=sep)
-
-
 def read_jsonl(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
     """S4: JSON-lines ingest, schema-pinned (inference is a full extra scan)."""
     ensure_session_invariants(spark)
     return spark.read.schema(schema).json(path)
-
-
-def write_jsonl(df: DataFrame, path: str) -> None:
-    df.write.mode("overwrite").json(path)
 
 
 def write_parquet_partitioned(df: DataFrame, path: str, *partition_cols: str) -> None:

@@ -27,6 +27,10 @@ candidate pairs still exist — full recall is exactly B² work, there is
 no cheaper complete answer — but land spread over K(K+1)/2 join tasks
 of ≤ block² pairs each instead of one degenerate straggler task.
 
+``hot_buckets`` is the one definition of "over the cap": the guard
+(``drop_hot_buckets``, which the MinHash batch-vs-index probe and the
+streaming sink call directly) and the salted join both read it.
+
 The exclusion is a broadcast ANTI-join against the HOT bucket set only
 — never a join against the full size table (which has ~one row per
 distinct bucket and must not be assumed broadcastable). The hot set is
@@ -51,9 +55,6 @@ logger = logging.getLogger(__name__)
 #: that one bucket can contribute at most ~25M candidate pairs.
 DEFAULT_MAX_BUCKET_SIZE = 5_000
 
-_SIZE_COL = "__x8313_bucket_size"
-
-
 def hot_buckets(
     banded: DataFrame, bucket_cols: Sequence[str], max_bucket_size: int
 ) -> DataFrame:
@@ -64,6 +65,19 @@ def hot_buckets(
         .agg(F.count(F.lit(1)).alias("bucket_size"))
         .filter(F.col("bucket_size") > max_bucket_size)
     )
+
+
+def drop_hot_buckets(
+    banded: DataFrame, bucket_cols: Sequence[str], max_bucket_size: int | None
+) -> DataFrame:
+    """``banded`` without the rows of over-cap buckets: a broadcast
+    anti-join against ``hot_buckets`` (≤ N/max_bucket_size rows by
+    pigeonhole → always broadcastable). ``None`` returns ``banded``
+    unchanged."""
+    if max_bucket_size is None:
+        return banded
+    hot = hot_buckets(banded, bucket_cols, max_bucket_size).select(*bucket_cols)
+    return banded.join(F.broadcast(hot), list(bucket_cols), "left_anti")
 
 
 def guarded_band_self_join(
@@ -89,28 +103,23 @@ def guarded_band_self_join(
     pay ~nothing) and WARNs with the worst offenders; default is lazy so
     registered queries stay pure plan builders.
     """
-    if max_bucket_size is not None:
-        hot = (
-            banded.groupBy(*bucket_cols)
-            .agg(F.count(F.lit(1)).alias(_SIZE_COL))
-            .filter(F.col(_SIZE_COL) > max_bucket_size)
+    if log_dropped and max_bucket_size is not None:
+        top = (
+            hot_buckets(banded, bucket_cols, max_bucket_size)
+            .orderBy(F.col("bucket_size").desc())
+            .limit(5)
+            .collect()
         )
-        if log_dropped:
-            top = hot.orderBy(F.col(_SIZE_COL).desc()).limit(5).collect()
-            if top:
-                logger.warning(
-                    "%s: dropping buckets over max_bucket_size=%d "
-                    "(worst: %s) — near-dup recall is reduced for rows "
-                    "confined to these buckets",
-                    log_label,
-                    max_bucket_size,
-                    [(tuple(r[c] for c in bucket_cols), r[_SIZE_COL]) for r in top],
-                )
-        # ≤ N/max_bucket_size rows by pigeonhole → always broadcastable
-        banded = banded.join(
-            F.broadcast(hot.select(*bucket_cols)), list(bucket_cols), "left_anti"
-        )
-
+        if top:
+            logger.warning(
+                "%s: dropping buckets over max_bucket_size=%d "
+                "(worst: %s) — near-dup recall is reduced for rows "
+                "confined to these buckets",
+                log_label,
+                max_bucket_size,
+                [(tuple(r[c] for c in bucket_cols), r["bucket_size"]) for r in top],
+            )
+    banded = drop_hot_buckets(banded, bucket_cols, max_bucket_size)
     return _pair_self_join(banded, id_col, bucket_cols, carry, out_suffixes)
 
 
@@ -177,19 +186,13 @@ def salted_band_self_join(
     volume divided by salt_block — strictly cheaper than the pairs it
     produces.
     """
-    hot = (
-        banded.groupBy(*bucket_cols)
-        .agg(F.count(F.lit(1)).alias(_SIZE_COL))
-        .filter(F.col(_SIZE_COL) > max_bucket_size)
-        .withColumn(
-            _NBLK,
-            F.ceil(F.col(_SIZE_COL) / F.lit(salt_block)).cast("int"),
-        )
-        .select(*bucket_cols, _NBLK)
+    hot = hot_buckets(banded, bucket_cols, max_bucket_size).select(
+        *bucket_cols,
+        F.ceil(F.col("bucket_size") / F.lit(salt_block)).cast("int").alias(_NBLK),
     )
     tagged = banded.join(F.broadcast(hot), list(bucket_cols), "left")
     cold = tagged.filter(F.col(_NBLK).isNull()).drop(_NBLK)
-    # dedup=False on both branches: the one distinct after the union
+    # no distinct on either branch: the one distinct after the union
     # below collapses cross-band duplicates AND diagonal orientations
     cold_pairs = _pair_self_join(
         cold, id_col, bucket_cols, carry, out_suffixes, dedup=False
@@ -227,18 +230,15 @@ def salted_band_self_join(
         [*bucket_cols, _SALT_I, _SALT_J],
         carry,
         out_suffixes,
-        dedup=False,
     )
     return cold_pairs.unionByName(hot_pairs).distinct()
 
 
-def _pair_join_normalized(
-    a_df, b_df, id_col, key_cols, carry, out_suffixes, dedup=True
-):
+def _pair_join_normalized(a_df, b_df, id_col, key_cols, carry, out_suffixes):
     """Join a_df×b_df on key equality + id inequality, emitting each
     pair id-ordered regardless of which side it arrived on (carry
-    columns swap together with their id). ``dedup=False`` defers the
-    distinct to a caller that distincts the combined output."""
+    columns swap together with their id). No distinct: the caller
+    distincts the combined output."""
     sa, sb = out_suffixes
     stem = id_col[:-3] if id_col.endswith("_id") else id_col
     a, b = a_df.alias("a"), b_df.alias("b")
@@ -256,11 +256,10 @@ def _pair_join_normalized(
         *[pick(c, True).alias(f"{c}{sa}") for c in carry],
         *[pick(c, False).alias(f"{c}{sb}") for c in carry],
     ]
-    pairs = a.join(
+    return a.join(
         b,
         on=[
             *[F.col(f"a.{c}") == F.col(f"b.{c}") for c in key_cols],
             F.col(f"a.{id_col}") != F.col(f"b.{id_col}"),
         ],
     ).select(*cols)
-    return pairs.distinct() if dedup else pairs

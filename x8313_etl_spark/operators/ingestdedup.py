@@ -52,8 +52,14 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from .bandjoin import DEFAULT_MAX_BUCKET_SIZE
-from .minhash import band_keys, shingle_table, signature_table
+from .bandjoin import DEFAULT_MAX_BUCKET_SIZE, drop_hot_buckets
+from .increment import top1_verdict
+from .minhash import (
+    band_table,
+    jaccard_verify,
+    shingle_table,
+    signature_from_shingles,
+)
 from .verdir import VersionedStateDir
 
 _VERD_SCHEMA = "doc_id long, is_dup boolean, dup_of long, jaccard double"
@@ -75,17 +81,15 @@ class IngestDedupSink(VersionedStateDir):
         self.k = k
         self.max_bucket_size = max_bucket_size
 
-    def init_index(
-        self, index_docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-    ) -> None:
-        """Seed epoch (version -1): the pre-existing corpus index."""
+    def init_index(self, index_docs: DataFrame) -> None:
+        """Seed epoch (version -1): the pre-existing corpus index, a
+        (doc_id, text) frame like every batch."""
         if self.current is not None:
             return  # restart path
         spark = index_docs.sparkSession
-        sig = signature_table(index_docs, id_col, text_col, self.k)
-        sh = shingle_table(index_docs, id_col, text_col, self.k)
+        sh = shingle_table(index_docs, "doc_id", "text", self.k)
         verd = spark.createDataFrame([], _VERD_SCHEMA)
-        self._commit_state(-1, sig, sh, verd)
+        self._commit_state(-1, signature_from_shingles(sh), sh, verd)
 
     def _commit_state(self, batch_id: int, sig, sh, verd) -> None:
         def write(tmp: str) -> None:
@@ -106,51 +110,28 @@ class IngestDedupSink(VersionedStateDir):
         verd_old = spark.read.parquet(os.path.join(self.current, "VERD"))
 
         batch = batch.localCheckpoint(eager=True)  # pin the epoch's rows
-        bsig = signature_table(batch, "doc_id", "text", self.k)
         bsh = shingle_table(batch, "doc_id", "text", self.k)
+        bsig = signature_from_shingles(bsh)
 
-        banded_new = bsig.select(
-            F.col("doc_id").alias("new_id"),
-            F.posexplode(band_keys(F.col("sig"))).alias("band", "key"),
+        bucket = ("band", "key")
+        banded_new = band_table(bsig, "new_id")
+        banded_seen = drop_hot_buckets(
+            band_table(sig_old, "old_id"), bucket, self.max_bucket_size
         )
-        banded_seen = sig_old.select(
-            F.col("doc_id").alias("old_id"),
-            F.posexplode(band_keys(F.col("sig"))).alias("band", "key"),
-        )
-        if self.max_bucket_size is not None:
-            hot = (
-                banded_seen.groupBy("band", "key")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .filter(F.col("n") > self.max_bucket_size)
-                .select("band", "key")
-            )
-            banded_seen = banded_seen.join(
-                F.broadcast(hot), ["band", "key"], "left_anti"
-            )
         cross = banded_new.join(banded_seen, ["band", "key"]).select(
             "new_id", "old_id"
         )
-        banded_new_rhs = banded_new.select(
-            F.col("new_id").alias("old_id"), "band", "key"
-        )
-        if self.max_bucket_size is not None:
-            # the same DROP posture as the index side: one hot band key
-            # INSIDE a micro-batch pairs quadratically too (a crawl
-            # burst of boilerplate arriving in one batch). Over-cap
-            # buckets are dropped ENTIRELY from the candidate-supplying
-            # side (0 pairs from them — on_hot="drop", not a capped
-            # sample), so a doc whose only collisions are hot buckets
-            # is reported non-dup; the docstring's one-shot-twin caveat
-            # covers exactly this divergence when the cap fires
-            hot_new = (
-                banded_new.groupBy("band", "key")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .filter(F.col("n") > self.max_bucket_size)
-                .select("band", "key")
-            )
-            banded_new_rhs = banded_new_rhs.join(
-                F.broadcast(hot_new), ["band", "key"], "left_anti"
-            )
+        # the same DROP posture as the index side: one hot band key
+        # INSIDE a micro-batch pairs quadratically too (a crawl burst of
+        # boilerplate arriving in one batch). Over-cap buckets are
+        # dropped ENTIRELY from the candidate-supplying side (0 pairs
+        # from them — on_hot="drop", not a capped sample), so a doc
+        # whose only collisions are hot buckets is reported non-dup; the
+        # docstring's one-shot-twin caveat covers exactly this
+        # divergence when the cap fires
+        banded_new_rhs = drop_hot_buckets(
+            banded_new, bucket, self.max_bucket_size
+        ).select(F.col("new_id").alias("old_id"), "band", "key")
         within = (
             banded_new.alias("a")
             .join(banded_new_rhs.alias("b"), ["band", "key"])
@@ -159,50 +140,15 @@ class IngestDedupSink(VersionedStateDir):
         )
         cand = cross.unionByName(within).distinct()
 
-        sh_all_old = sh_old.unionByName(bsh)
-        jac = (
-            F.size(F.array_intersect(F.col("sa"), F.col("sb"))).cast("double")
-            / F.size(F.array_distinct(F.concat(F.col("sa"), F.col("sb"))))
-        )
-        verified = (
-            cand.join(
-                bsh.select(F.col("doc_id").alias("new_id"), F.col("sh").alias("sa")),
-                "new_id",
-            )
-            .join(
-                sh_all_old.select(
-                    F.col("doc_id").alias("old_id"), F.col("sh").alias("sb")
-                ),
-                "old_id",
-            )
-            .select("new_id", "old_id", jac.alias("jaccard"))
-            .filter(F.col("jaccard") >= self.threshold)
-        )
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("new_id").orderBy(
-            F.col("jaccard").desc(), F.col("old_id").asc()
-        )
-        best = (
-            verified.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-        )
-        verd_batch = (
-            batch.select(F.col("doc_id"))
-            .join(best.withColumnRenamed("new_id", "doc_id"), "doc_id", "left")
-            .select(
-                "doc_id",
-                F.col("old_id").isNotNull().alias("is_dup"),
-                F.col("old_id").alias("dup_of"),
-                "jaccard",
-            )
+        sh_all = sh_old.unionByName(bsh)
+        verified = jaccard_verify(
+            cand, bsh, sh_all, "new_id", "old_id", self.threshold
         )
         self._commit_state(
             batch_id,
             sig_old.unionByName(bsig),
-            sh_old.unionByName(bsh),
-            verd_old.unionByName(verd_batch),
+            sh_all,
+            verd_old.unionByName(top1_verdict(batch.select("doc_id"), verified)),
         )
 
     def read_verdicts(self, spark) -> DataFrame:

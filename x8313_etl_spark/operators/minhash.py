@@ -2,10 +2,10 @@
 
 Classic shingle → minhash → band-bucket → candidate-join pipeline
 (the production sketch path is the integer-exact Arrow kernel in
-``signature_from_shingles`` — see ``signature_table`` — with the
+``signature_from_shingles`` over ``shingle_table`` — with the
 higher-order-function fold kept as the cross-checked reference form):
 
-1. k-word shingles per doc (functions/text.py `shingles`).
+1. k-word shingles per doc (functions/text.py `shingles_rx`).
 2. Each shingle hashed to a 31-bit integer via md5 (cross-engine
    reproducible — see functions/text.py `fingerprint` for the trick).
 3. ``N_HASHES`` universal-hash permutations ``(A_i * h + B_i) mod P``;
@@ -15,6 +15,12 @@ higher-order-function fold kept as the cross-checked reference form):
    shuffle-join on the band key — O(candidates), never O(n²)).
 5. Candidates are verified with exact shingle-set Jaccard and filtered
    at the caller's threshold.
+
+Steps 4 and 5 are shared by every arrival shape of the dedup family:
+``band_table`` and ``jaccard_verify`` here, the hot-bucket guard in
+operators/bandjoin.py, and the top-1 verdict in operators/increment.py
+(the batch-vs-index probe and the streaming sink in
+operators/ingestdedup.py both call it).
 
 Scale notes (100 TB): the only shuffles are (a) the band-key self-join,
 whose fan-in is bounded by band-bucket sizes — a bucket with B docs
@@ -72,8 +78,9 @@ def shingle_stage(
     re-evaluates split() per element_at and md5 per permutation (32×) —
     staging through column attributes computes each exactly once per row.
 
-    This is the HOF-fold reference form; ``signature_table`` below is
-    the production sketch path (identical signatures).
+    This is the HOF-fold reference form;
+    ``signature_from_shingles(shingle_table(...))`` is the production
+    sketch path (identical signatures).
     """
     return (
         docs.select(
@@ -100,18 +107,6 @@ def shingle_table(
     ).filter(F.size("sh") > 0)
 
 
-def signature_table(
-    docs: DataFrame, id_col: str, text_col: str, k: int = _SHINGLE_K
-) -> DataFrame:
-    """(doc_id, sig): ``shingle_table`` then the ``signature_from_shingles``
-    numpy kernel (map-only, no exchange at all — see its docstring).
-    Docs with < k words produce no rows (same semantics as filtering
-    empty shingle arrays). Bit-identical to the ``shingle_stage`` HOF
-    fold (``minhash_signature``), the reference form it is asserted
-    against in tests/test_minhash_unit.py."""
-    return signature_from_shingles(shingle_table(docs, id_col, text_col, k))
-
-
 def signature_from_shingles(sh: DataFrame) -> DataFrame:
     """(doc_id, sig) from an EXISTING ``shingle_table`` output — reads
     the already-computed shingle arrays instead of re-running the regex
@@ -133,11 +128,12 @@ def signature_from_shingles(sh: DataFrame) -> DataFrame:
     int64-exact, same bound the module header documents) and a
     per-doc segment-min (``np.minimum.reduceat``). Every value is an
     exact integer, so numpy reproduces the JVM/DuckDB bigints
-    bit-for-bit — asserted against ``signature_table`` on every fixture
-    doc in tests/test_minhash_unit.py. Rows with empty shingle arrays
+    bit-for-bit — asserted against the ``shingle_stage`` HOF fold on
+    every fixture doc in tests/test_minhash_unit.py. Rows with empty
+    shingle arrays
     are dropped exactly as exploding an empty array emits no rows
     (``shingle_table`` already filters them; the kernel re-filters
-    defensively so both entry points agree).
+    defensively for callers that pass their own shingle arrays).
 
     Scale shape: map-only — the old groupBy exchange is gone; no
     shuffle at any corpus size. Per-task state is the batch's shingle
@@ -244,13 +240,47 @@ def band_keys(sig: Column, bands: int = BANDS, rows: int = ROWS_PER_BAND) -> Col
     )
 
 
+def band_table(sig: DataFrame, out_id: str) -> DataFrame:
+    """(out_id, band, key): one row per (doc, band) of a (doc_id, sig)
+    table — the exploded form every band join and hot-bucket guard
+    reads."""
+    return sig.select(
+        F.col("doc_id").alias(out_id),
+        F.posexplode(band_keys(F.col("sig"))).alias("band", "key"),
+    )
+
+
+def jaccard_verify(
+    cand: DataFrame,
+    sh_a: DataFrame,
+    sh_b: DataFrame,
+    a: str,
+    b: str,
+    threshold: float,
+) -> DataFrame:
+    """(a, b, jaccard) for the candidate pairs ``cand`` (columns ``a``,
+    ``b``) whose exact shingle-set Jaccard is ≥ ``threshold``. ``sh_a``
+    and ``sh_b`` are (doc_id, sh) tables holding the a- and b-side docs;
+    both are non-empty per row (``shingle_table`` drops empty arrays),
+    so the division never reads 0/0."""
+    jac = (
+        F.size(F.array_intersect(F.col("sa"), F.col("sb"))).cast("double")
+        / F.size(F.array_distinct(F.concat(F.col("sa"), F.col("sb"))))
+    )
+    return (
+        cand.join(sh_a.select(F.col("doc_id").alias(a), F.col("sh").alias("sa")), a)
+        .join(sh_b.select(F.col("doc_id").alias(b), F.col("sh").alias("sb")), b)
+        .select(a, b, jac.alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
+    )
+
+
 def near_dup_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.3,
     k: int = _SHINGLE_K,
-    cache: bool = True,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
     log_dropped: bool = False,
     on_hot: str = "drop",
@@ -277,53 +307,42 @@ def near_dup_pairs(
     so this bounds latency, not volume).
 
     The sketch feeds four plan branches (both sides of the band join,
-    both sides of the verify join); ``cache`` persists the sh and
-    banded tables so each is computed once (measured 2.7× end-to-end). At
-    100 TB, checkpoint those stages to parquet instead — same idea,
-    spill-proof and resumable.
+    both sides of the verify join), so the sh and banded tables go
+    through the keyed swap-pool and each is computed once (measured
+    2.7× end-to-end). At 100 TB, checkpoint those stages to parquet
+    instead — same idea, spill-proof and resumable.
     """
     # Shingling/hashing is CPU-dense per byte — spread it across the
     # cluster even when the input is a single small split (see
     # queries/corpus_q.py for the same pattern + measurements).
     docs = docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
-    # signature_table emits no row for shingle-less docs (< k words) —
+    # shingle_table emits no row for shingle-less docs (< k words) —
     # they cannot be near-dups under this metric, and their all-null
     # signatures would otherwise collapse every band key to "" and
     # cross-match (and the verify Jaccard would divide 0/0, an ANSI
     # error). Matches the SQL twin's NULL-comparison semantics.
-    sh = shingle_table(docs, id_col, text_col, k)
-    if cache:
-        # Through the keyed swap-pool, not raw persist: raw persists
-        # here are never released (the returned plan still references
-        # them), so every invocation leaked cache entries for the
-        # session lifetime, and they bypassed the materialization
-        # ledger (found via the r10 re-execution gate's ambient-cache
-        # flake). One live table per key; repeat invocations on the
-        # same corpus reuse them, a new corpus swaps them out.
-        #
-        # sig derives from the PERSISTED sh (r13 optimization round):
-        # the regex shingling pass — the CPU-dense half of the sketch —
-        # runs once while sh materializes, and the signature aggregate
-        # reads the cached arrays, instead of each table re-shingling
-        # the corpus from text (bit-identical signatures; measured on
-        # the l2 path, see OPTIMIZATION_r13.md). sig's one consumer is
-        # the pooled `banded`, so sig itself is not pooled.
-        from .cachepool import swap_persist
+    #
+    # Through the keyed swap-pool, not raw persist: raw persists here
+    # are never released (the returned plan still references them), so
+    # every invocation leaked cache entries for the session lifetime,
+    # and they bypassed the materialization ledger (found via the r10
+    # re-execution gate's ambient-cache flake). One live table per key;
+    # repeat invocations on the same corpus reuse them, a new corpus
+    # swaps them out.
+    from .cachepool import swap_persist
 
-        sh = swap_persist("minhash.sh", sh)
-        sigs = signature_from_shingles(sh)
-    else:
-        sigs = signature_table(docs, id_col, text_col, k)
-
-    banded = sigs.select(
-        "doc_id",
-        F.posexplode(band_keys(F.col("sig"))).alias("band", "key"),
+    # sig derives from the PERSISTED sh (r13 optimization round): the
+    # regex shingling pass — the CPU-dense half of the sketch — runs
+    # once while sh materializes, and the signature kernel reads the
+    # cached arrays (measured on the l2 path, see OPTIMIZATION_r13.md).
+    # sig's one consumer is the pooled `banded`, so sig is not pooled.
+    sh = swap_persist("minhash.sh", shingle_table(docs, id_col, text_col, k))
+    # `banded` has two or more consumers in every mode (the band join's
+    # two sides, plus the guard's size agg): persist the slim
+    # (id, band, key) table so signatures and keys are computed once.
+    banded = swap_persist(
+        "minhash.banded", band_table(signature_from_shingles(sh), "doc_id")
     )
-    if cache:
-        # `banded` has two or more consumers in every mode (the band
-        # join's two sides, plus the guard's size agg): persist the slim
-        # (id, band, key) table so signatures and keys are computed once.
-        banded = swap_persist("minhash.banded", banded)
     if on_hot not in ("drop", "salt"):
         raise ValueError(f"on_hot must be 'drop' or 'salt', got {on_hot!r}")
     if on_hot == "salt" and max_bucket_size is not None:
@@ -345,16 +364,7 @@ def near_dup_pairs(
             log_label="minhash-lsh",
         )
 
-    jac = (
-        F.size(F.array_intersect(F.col("sa"), F.col("sb"))).cast("double")
-        / F.size(F.array_distinct(F.concat(F.col("sa"), F.col("sb"))))
-    )
-    return (
-        cand.join(sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sa")), "doc_a")
-        .join(sh.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sb")), "doc_b")
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return jaccard_verify(cand, sh, sh, "doc_a", "doc_b", threshold)
 
 
 def band_candidate_prob(s: float, bands: int, rows: int) -> float:

@@ -100,11 +100,6 @@ FRAME_SCHEMA = (
     "doc_id bigint, frame_idx int, frame_offset_ms bigint, frame_md5 string"
 )
 
-RESIZE_SCHEMA = (
-    "doc_id bigint, width int, height int, out_width int, out_height int, "
-    "scale_num int, scale_den int"
-)
-
 
 def sample_frames(mm: DataFrame, n_frames: int = 4) -> DataFrame:
     """Frame sampling plumbing: each media row fans out to ``n_frames``

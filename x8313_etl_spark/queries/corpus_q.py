@@ -163,7 +163,7 @@ DUP_3GRAM_MAX = 0.45
 
 def _ngrams(w: Column, n: int) -> Column:
     """NON-distinct word n-grams (repetition is the signal here, unlike
-    functions/text.py shingles which deduplicate for MinHash)."""
+    functions/text.py ``shingles_rx``, which deduplicates for MinHash)."""
     return F.when(
         F.size(w) >= n,
         F.transform(
@@ -1023,10 +1023,11 @@ def p_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape at 100 TB: the quality predicates reach the parquet
     scan; dedup is one hash-shuffle on the 32-byte digest (never full
     text); the benchmark side of decontamination is fixed-size so its
-    distinct 5-grams broadcast, and only (doc, gram) hits shuffle for
-    the distinct-hit anti-join; token counting is map-only arithmetic
-    on the already-split words. Net: one scan of the corpus, two
-    bounded shuffles, zero corpus-vs-corpus joins. The fixture corpus
+    distinct 5-grams broadcast, and each doc's (doc, gram) rows probe
+    them in the same pass that keeps the doc, then one group-by on the
+    doc counts its hits; token counting is map-only arithmetic on the
+    already-split words. Net: one scan of the corpus, two bounded
+    shuffles, zero corpus-vs-corpus joins. The fixture corpus
     is unioned with an id-offset copy (l1's trick) so the dedup stage
     provably removes rows at every sf."""
     d0 = load_table(spark, sf_dir, "documents")
@@ -1076,18 +1077,24 @@ def p_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    corpus_grams = dg.select("doc_id", F.explode("grams").alias("gram"))
-    contaminated = (
+    # Contamination is decided in the pass that keeps the doc: each
+    # doc's grams (explode_outer keeps gram-less docs as one NULL row)
+    # left-join the broadcast bench grams, and a doc survives with zero
+    # hits. An anti-join against a separate `contaminated` table would
+    # read `dg` twice, re-running the gate, dedup and n-gram pass.
+    keep = ["doc_id", "lang", "n_chars", "n_tokens"]
+    corpus_grams = dg.select(*keep, F.explode_outer("grams").alias("gram"))
+    return (
         corpus_grams.join(
             F.broadcast(bench),
             (corpus_grams["gram"] == bench["gram"])
             & (corpus_grams["doc_id"] != bench["bench_id"]),
+            "left",
         )
-        .select(corpus_grams["doc_id"])
-        .distinct()
-    )
-    return dg.join(contaminated, "doc_id", "left_anti").select(
-        "doc_id", "lang", "n_chars", "n_tokens"
+        .groupBy(*keep)
+        .agg(F.count("bench_id").alias("hits"))
+        .filter(F.col("hits") == 0)
+        .select(*keep)
     )
 
 

@@ -803,7 +803,6 @@ def p_ngram_lm_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
 # LM-perplexity quality filter — the consumer of the bigram LM.
 # ---------------------------------------------------------------------------
 
-_PPL_KEEP_MAX = 60.0
 #: keep threshold in 1e-6 nll units: floor(ln(60)·1e6 + 0.5), computed
 #: ONCE in Python and inlined as the same integer literal on BOTH
 #: sides, so the engines never evaluate ln(60) independently (ln(60)·1e6
@@ -2468,23 +2467,17 @@ def p_dedup_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_shuffle_audit.py)."""
     from ..operators.bandjoin import guarded_band_self_join
     from ..operators.cachepool import swap_persist
-    from ..operators.minhash import band_keys, shingle_table, signature_from_shingles
+    from ..operators.minhash import band_table, shingle_table, signature_from_shingles
 
     d = load_table(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism
     )
-    sh = swap_persist(
-        "dedupeval.sh",
-        shingle_table(d, "doc_id", "text", 3).filter(F.size("sh") > 0),
-    )
+    sh = swap_persist("dedupeval.sh", shingle_table(d, "doc_id", "text", 3))
     # sig derives from the pooled sh — one regex shingling pass per
     # corpus, not two (signature_from_shingles, r13 optimization round);
     # repartition above spreads that pass over the cores (single-file
     # scan = 1 partition otherwise)
-    sigs = signature_from_shingles(sh)
-    banded = sigs.select(
-        "doc_id", F.posexplode(band_keys(F.col("sig"))).alias("band", "key")
-    )
+    banded = band_table(signature_from_shingles(sh), "doc_id")
     # read by n_cand and n_tp
     cand = swap_persist(
         "dedupeval.cand",

@@ -408,7 +408,6 @@ def s16_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _S17_ROWS = 10_000
-_S17_PARTS = 8
 _S17_SENSORS = 50
 
 
