@@ -1,11 +1,13 @@
 #!/usr/bin/env python3
 """Emulate the grading driver: vanilla SparkSession + __spark_entry__ contract.
 
-Usage: python scripts/driver_emu.py [sf_dir]
+Usage: python scripts/driver_emu.py [sf_dir] [query ...]
 
 This is the repo's end-to-end verification surface (see
 .claude/skills/verify/SKILL.md): a session WITHOUT our confs, the real
 entry/queries/oracle_sql contract, strict value compare vs DuckDB.
+Named queries limit the compare to those (in the given order); with
+none, every registered query runs.
 """
 
 from __future__ import annotations
@@ -22,6 +24,7 @@ from pyspark.sql import SparkSession  # noqa: E402
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    names = sys.argv[2:]
     spark = (
         SparkSession.builder.master("local[8]")
         .appName("driver-emu")
@@ -41,8 +44,9 @@ def main() -> int:
     specs = registry()
     qs = e.queries()
     assert set(qs) == set(specs)
+    names = names or sorted(specs)
     failures = []
-    for name in sorted(specs):
+    for name in names:
         t0 = time.perf_counter()
         res = compare_query(spark, specs[name], sf_dir)
         status = "OK " if res.ok else "FAIL"
@@ -53,7 +57,7 @@ def main() -> int:
     if failures:
         print(f"FAILURES: {failures}")
         return 1
-    print(f"all {len(specs)} queries OK vs DuckDB at {sf_dir}")
+    print(f"all {len(names)} queries OK vs DuckDB at {sf_dir}")
     return 0
 
 

@@ -12,19 +12,7 @@ import pyspark.sql.functions as F
 import pytest
 from pyspark.sql import Window
 
-from x8313_etl_spark import audit
 from x8313_etl_spark.io import load_table
-
-
-@pytest.fixture(autouse=True, scope="module")
-def _scrub_ledger_keys():
-    """The cap-sufficiency replay checkpoints its edges under its own
-    test-only ledger keys; forget everything this module introduced so
-    the materialization gate still audits registered queries only."""
-    before = set(audit.ledger())
-    yield
-    for key in set(audit.ledger()) - before:
-        audit.forget(key)
 
 
 def test_g8_light_round_cap_suffices_on_fixtures(spark, sf_dir, sf_oracle_dir):

@@ -566,6 +566,19 @@ def test_hidden_bnlj_under_persist_fails_the_gate(spark):
             pass
 
 
+def test_cold_plans_start_from_an_empty_ledger(spark, sf_dir):
+    """record_plan is first-write-wins, so a key filed earlier in the
+    session (a warm build at another sf, a test's own recording) would
+    shadow the sweep's cold recording: the sweep empties the ledger
+    before its first query."""
+    audit._LEDGER["g4.round"] = {"__sentinel__": 1}
+    for _name, plan in audit.cold_plans(
+        spark, sf_dir, names=["g4_label_propagation"]
+    ):
+        assert isinstance(plan, str), plan
+    assert "__sentinel__" not in audit.ledger().get("g4.round", {})
+
+
 def test_allowlist_has_no_stale_entries(audit_hits):
     """Every allowlisted (query, flag) pair must still fire — per FLAG,
     so a planner improvement dropping one of an entry's flags can't
@@ -608,3 +621,208 @@ def test_pool_sites_are_capped_per_module():
         "with two or more consumers, named in the site's comment; lower "
         f"it when a site goes. got {dict(sorted(got.items()))}"
     )
+
+
+#: "<module under x8313_etl_spark/>::<function>(<parameter>)" -> (the test
+#: module that sets it, why only a test does). These are the defaulted
+#: parameters no package, script, bench or perfbench call sets; each
+#: reaches behaviour the default cannot show on the fixtures.
+TEST_ONLY_PARAMS: dict[str, tuple[str, str]] = {
+    "operators/bandjoin.py::salted_band_self_join(salt_block)": (
+        "tests/test_bandjoin.py",
+        "small salt blocks split a fixture-sized hot bucket into blocks",
+    ),
+    "operators/bandjoin.py::salted_band_self_join(carry)": (
+        "tests/test_bandjoin.py",
+        "carry columns must swap with their id in the normalized hot pairs",
+    ),
+    "operators/concomp.py::connected_components(max_iter)": (
+        "tests/test_concomp.py",
+        "a cap below the fixpoint round must raise ConvergenceError",
+    ),
+    "operators/increment.py::incremental_near_dups(max_bucket_size)": (
+        "tests/test_increment.py",
+        "cap 0 makes the hot-bucket guard drop every index bucket",
+    ),
+    "operators/increment.py::incremental_near_dups(index_sig)": (
+        "tests/test_increment.py",
+        "the precomputed-index path must match the recompute path",
+    ),
+    "operators/increment.py::incremental_near_dups(index_sh)": (
+        "tests/test_increment.py",
+        "the precomputed-index path must match the recompute path",
+    ),
+    "operators/ingestdedup.py::IngestDedupSink.__init__(max_bucket_size)": (
+        "tests/test_ingestdedup.py",
+        "a cap of 1 must drop a hot bucket inside one micro-batch",
+    ),
+    "operators/minhash.py::near_dup_pairs(max_bucket_size)": (
+        "tests/test_bandjoin.py",
+        "a low cap makes a fixture-sized cluster hot",
+    ),
+    "operators/minhash.py::near_dup_pairs(log_dropped)": (
+        "tests/test_bandjoin.py",
+        "the dropped-bucket warning must name the cap",
+    ),
+    "operators/minhash.py::near_dup_pairs(on_hot)": (
+        "tests/test_bandjoin.py",
+        "salt mode keeps the pairs that drop mode loses (full recall)",
+    ),
+    "operators/minhash.py::tune_bands(n_hashes)": (
+        "tests/test_minhash_unit.py",
+        "the tuner's picks must be divisor pairs of the hash count",
+    ),
+    "operators/skew.py::salted_join(how)": (
+        "tests/test_skew_demo.py",
+        "outer salted joins must match the unsalted join",
+    ),
+    "operators/snapshots.py::SnapshotTable.read(as_of_ts)": (
+        "tests/test_snapshots.py",
+        "time travel by commit timestamp",
+    ),
+    "operators/snapshots.py::SnapshotTable.vacuum(keep_last)": (
+        "tests/test_snapshots.py",
+        "vacuum must keep exactly the dirs the surviving versions name",
+    ),
+    "operators/substrdedup.py::duplicated_spans(min_occurrences)": (
+        "tests/test_substrdedup.py",
+        "a higher occurrence floor must drop the twice-seen grams",
+    ),
+    "operators/unigram.py::train_unigram(max_piece_len)": (
+        "tests/test_unigram.py",
+        "short pieces keep the brute-force Viterbi reference small",
+    ),
+    "operators/unigram.py::encode_corpus(max_piece_len)": (
+        "tests/test_unigram.py",
+        "short pieces keep the brute-force Viterbi reference small",
+    ),
+}
+
+
+def _call_name(fn) -> str | None:
+    import ast
+
+    if isinstance(fn, ast.Name):
+        return fn.id
+    return fn.attr if isinstance(fn, ast.Attribute) else None
+
+
+def _calls(paths) -> dict[str, list[tuple[int, set, bool]]]:
+    """Call name -> (positional count, keyword names, spreads ``*``/``**``)
+    per call; ``functools.partial(f, ...)`` counts as a call of ``f``."""
+    import ast
+    from collections import defaultdict
+
+    out = defaultdict(list)
+    for path in paths:
+        for n in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(n, ast.Call):
+                continue
+            fn, args = n.func, n.args
+            if _call_name(fn) == "partial" and args:
+                fn, args = args[0], args[1:]
+            name = _call_name(fn)
+            if name:
+                kws = {k.arg for k in n.keywords}
+                spread = None in kws or any(isinstance(a, ast.Starred) for a in args)
+                out[name].append((len(args), kws - {None}, spread))
+    return out
+
+
+def _defaulted_params(pkg):
+    """(key, call names, parameter, positional index or None, is_method)
+    for every defaulted parameter of every function in the package. An
+    ``__init__`` is called by its class's name, its subclasses' names
+    (unless they define their own) and ``super().__init__``."""
+    import ast
+
+    trees = {p: ast.parse(p.read_text()) for p in sorted(pkg.rglob("*.py"))}
+    classes = [
+        n for t in trees.values() for n in ast.walk(t) if isinstance(n, ast.ClassDef)
+    ]
+    #: classes without an ``__init__`` of their own -> their base names
+    inherits = {
+        c.name: {_call_name(b) for b in c.bases}
+        for c in classes
+        if not any(isinstance(f, ast.FunctionDef) and f.name == "__init__" for f in c.body)
+    }
+
+    def ctor_names(cls):
+        names = {cls, "__init__"}
+        while grown := {c for c, bs in inherits.items() if bs & names} - names:
+            names |= grown
+        return names
+
+    out = []
+
+    def walk(node, rel, cls):
+        for ch in ast.iter_child_nodes(node):
+            if isinstance(ch, ast.ClassDef):
+                walk(ch, rel, ch.name)
+            elif isinstance(ch, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                a = ch.args
+                pos = [x.arg for x in a.posonlyargs + a.args]
+                method = cls is not None and pos[:1] in (["self"], ["cls"])
+                names = ctor_names(cls) if ch.name == "__init__" else {ch.name}
+                qual = f"{cls}.{ch.name}" if cls else ch.name
+                first = len(pos) - len(a.defaults)
+                params = [(p, i) for i, p in enumerate(pos) if i >= first]
+                params += [
+                    (k.arg, None) for k, d in zip(a.kwonlyargs, a.kw_defaults) if d
+                ]
+                for p, i in params:
+                    out.append((f"{rel}::{qual}({p})", names, p, i, method))
+                walk(ch, rel, None)
+            else:
+                walk(ch, rel, cls)
+
+    for path, tree in trees.items():
+        walk(tree, path.relative_to(pkg).as_posix(), None)
+    return out
+
+
+def _is_set(calls, names, param, idx, method) -> bool:
+    shift = 1 if method else 0  # a bound call leaves ``self`` implicit
+    return any(
+        spread or param in kws or (idx is not None and idx < npos + shift)
+        for name in names
+        for npos, kws, spread in calls.get(name, ())
+    )
+
+
+def test_every_defaulted_parameter_has_a_caller():
+    """A defaulted parameter that no caller sets is a constant with a
+    knob on it: fold it into its constant. The census reads the AST of
+    the package and its callers (package, scripts/, bench.py,
+    perfbench/, __spark_entry__.py); a call sets a parameter by keyword,
+    by position, or through ``*``/``**`` spreading. Parameters only a
+    test sets live in TEST_ONLY_PARAMS, and an entry goes stale when a
+    real caller appears, the parameter goes, or its test stops setting
+    it."""
+    from pathlib import Path
+
+    pkg = Path(audit.__file__).parent
+    root = pkg.parent
+    callers = [
+        *sorted(pkg.rglob("*.py")),
+        *sorted((root / "scripts").glob("*.py")),
+        *sorted((root / "perfbench").glob("*.py")),
+        root / "bench.py",
+        root / "__spark_entry__.py",
+    ]
+    calls = _calls(callers)
+    params = {key: rest for key, *rest in _defaulted_params(pkg)}
+    unset = sorted(
+        key for key, rest in params.items()
+        if not _is_set(calls, *rest) and key not in TEST_ONLY_PARAMS
+    )
+    assert not unset, f"defaulted parameters no caller sets — fold into constants: {unset}"
+    stale = []
+    for key, (test, _why) in TEST_ONLY_PARAMS.items():
+        if key not in params:
+            stale.append((key, "no such defaulted parameter"))
+        elif _is_set(calls, *params[key]):
+            stale.append((key, "a non-test call sets it now"))
+        elif not _is_set(_calls([root / test]), *params[key]):
+            stale.append((key, f"{test} does not set it"))
+    assert not stale, f"stale TEST_ONLY_PARAMS entries — delete them: {stale}"

@@ -583,7 +583,7 @@ def test_t15_restart_recovers_state_pointer(spark, tmp_path):
     }
     assert final == {100: (2, 5.0, "click"), 200: (2, 10.0, "purchase")}
 
-    # retention: keep_versions=2 -> v0 pruned after v2 committed
+    # retention keeps 2 versions -> v0 pruned after v2 committed
     import os
 
     left = sorted(d for d in os.listdir(root) if d.startswith("v"))

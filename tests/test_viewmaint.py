@@ -140,7 +140,7 @@ def test_seed_version_is_pruned_once_unreferenced(spark, tmp_path):
     import os
 
     root = str(tmp_path / "seedprune")
-    sink = JoinViewSink(root, keep_versions=2)
+    sink = JoinViewSink(root)
     sink.init_bases(_a(spark, [(1, 10, 100.0)]), _b(spark, [(11, 1, 1.0)]))
     for i in range(3):
         sink.apply_batch(_batch(spark, [("B", 20 + i, 1, 1.0, 1)]), i)

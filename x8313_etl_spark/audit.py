@@ -126,9 +126,11 @@ def cold_plans(
       interacts with the fns' internal persist() calls (observed:
       l2_near_dup_pairs printed 16 bare scans mid-suite but is clean
       cold);
-    - the ledger is forgotten once at the start and then KEPT, so at
+    - the ledger is emptied once at the start and then KEPT, so at
       sweep end ``ledger()`` holds exactly the cold first-build
-      recordings the ledger gates audit.
+      recordings the ledger gates audit (record_plan is
+      first-write-wins, so a key filed earlier in the session by a
+      warm build or a test would otherwise shadow the cold one).
     """
     from .operators.cachepool import clear_pool
     from .registry import registry
@@ -136,6 +138,7 @@ def cold_plans(
     reg = registry()
     specs = reg if names is None else {n: reg[n] for n in names}
     clear_pool()
+    _LEDGER.clear()
     for name, spec in specs.items():
         if spec.category in skip:
             continue

@@ -68,22 +68,20 @@ def sql_davg(expr: str) -> str:
     return f"(CAST(SUM(CAST(({expr}) AS DECIMAL(25,6))) AS DOUBLE) / COUNT(*))"
 
 
-def dsum_cents(c: Column | str, scale: int = 100) -> Column:
-    """Exact sum for a column known to sit on a 1/scale grid (2-dp money,
-    integer-ish quantities): scale to int64, sum longs, divide once.
+def dsum_cents(c: Column | str) -> Column:
+    """Exact sum for a column known to sit on a 1/100 grid (2-dp money,
+    integer-ish quantities): scale to int64 cents, sum longs, divide once.
 
     ~2× cheaper than the decimal path (pure long adds in the hash agg)
     and equally order-independent. ROUND absorbs the ≤1-ulp error of
-    x*scale identically in both engines (values are never near .5 after
+    x*100 identically in both engines (values are never near .5 after
     a grid-true scale). Valid while the group's scaled sum < 2^53
     (~$90T in cents) — far beyond any fixture or 100 TB group here; use
     dsum() when in doubt.
     """
-    scaled = F.round(_col(c) * scale, 0).cast("bigint")
-    return F.sum(scaled).cast("double") / F.lit(float(scale))
+    scaled = F.round(_col(c) * 100, 0).cast("bigint")
+    return F.sum(scaled).cast("double") / F.lit(100.0)
 
 
-def sql_dsum_cents(expr: str, scale: int = 100) -> str:
-    return (
-        f"(CAST(SUM(CAST(ROUND(({expr}) * {scale}) AS BIGINT)) AS DOUBLE) / {scale}.0)"
-    )
+def sql_dsum_cents(expr: str) -> str:
+    return f"(CAST(SUM(CAST(ROUND(({expr}) * 100) AS BIGINT)) AS DOUBLE) / 100.0)"

@@ -106,11 +106,10 @@ def read_csv(
     path: str,
     schema: StructType,
     header: bool = True,
-    sep: str = ",",
 ) -> DataFrame:
-    """S3: delimited ingest with explicit schema (no sampling pass at scale)."""
+    """S3: comma-separated ingest with explicit schema (no sampling pass at scale)."""
     ensure_session_invariants(spark)
-    return spark.read.csv(path, schema=schema, header=header, sep=sep)
+    return spark.read.csv(path, schema=schema, header=header)
 
 
 def read_jsonl(spark: SparkSession, path: str, schema: StructType) -> DataFrame:

@@ -38,21 +38,16 @@ def _seq_norms(mat):
     return np.sqrt(acc)
 
 
-def cosine_probe_scan(
-    corpus: DataFrame,
-    probes: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_self: bool = True,
-) -> DataFrame:
-    """(id, probe_id, cos_sim) for every corpus×probe pair.
+def cosine_probe_scan(corpus: DataFrame, probes: DataFrame) -> DataFrame:
+    """(vec_id, probe_id, cos_sim) for every corpus×probe pair with
+    vec_id != probe_id; both sides carry (vec_id, embedding).
 
     ``probes`` must be bounded (it is collected into the task closure);
     ``corpus`` streams. cos = seq-dot / (seq-norm · seq-norm).
     """
     import numpy as np
 
-    prows = probes.select(id_col, vec_col).collect()
+    prows = probes.select("vec_id", "embedding").collect()
     pids = np.array([r[0] for r in prows], dtype=np.int64)
     pmat = np.vstack([np.asarray(r[1], dtype=np.float64) for r in prows])
     pnorms = _seq_norms(pmat)
@@ -61,7 +56,7 @@ def cosine_probe_scan(
         import pandas as pd
 
         for pdf in batches:
-            mb = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
+            mb = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
             acc = np.zeros((len(mb), len(pmat)))
             for d in range(mb.shape[1]):
                 acc = acc + np.outer(mb[:, d], pmat[:, d])
@@ -70,46 +65,37 @@ def cosine_probe_scan(
             b, p = cos.shape
             yield pd.DataFrame(
                 {
-                    id_col: np.repeat(pdf[id_col].to_numpy(), p),
+                    "vec_id": np.repeat(pdf["vec_id"].to_numpy(), p),
                     "probe_id": np.tile(pids, b),
                     "cos_sim": cos.ravel(),
                 }
             )
 
-    out = corpus.select(id_col, vec_col).mapInPandas(
-        scan, f"{id_col} long, probe_id long, cos_sim double"
+    return (
+        corpus.select("vec_id", "embedding")
+        .mapInPandas(scan, "vec_id long, probe_id long, cos_sim double")
+        .filter(F.col("vec_id") != F.col("probe_id"))
     )
-    if exclude_self:
-        out = out.filter(F.col(id_col) != F.col("probe_id"))
-    return out
 
 
-def cosine_probe_topk(
-    corpus: DataFrame,
-    probes: DataFrame,
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def cosine_probe_topk(corpus: DataFrame, probes: DataFrame, k: int) -> DataFrame:
     """Exact top-k per probe: scan + rank window (cos desc, id asc
     tiebreak) — WindowGroupLimit keeps the shuffle at k rows per probe
     per input partition."""
-    scored = cosine_probe_scan(corpus, probes, id_col, vec_col)
-    w = Window.partitionBy("probe_id").orderBy(F.col("cos_sim").desc(), F.col(id_col))
+    scored = cosine_probe_scan(corpus, probes)
+    w = Window.partitionBy("probe_id").orderBy(
+        F.col("cos_sim").desc(), F.col("vec_id")
+    )
     return (
         scored.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
     )
 
 
-def hyperplane_sketch(
-    corpus: DataFrame,
-    planes: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, sk bigint, vnorm double): bit j of sk = 1 iff the
-    dimension-sequential dot with plane j is > 0. Same numpy fold
+def hyperplane_sketch(corpus: DataFrame, planes: list[list[float]]) -> DataFrame:
+    """(vec_id, sk bigint, vnorm double) per (vec_id, embedding) row:
+    bit j of sk = 1 iff the dimension-sequential dot with plane j is
+    > 0. Same numpy fold
     discipline as cosine_probe_scan, so the sketch bits (and the norms
     reused by the verify stage) are bit-identical to the expression/SQL
     forms."""
@@ -122,19 +108,19 @@ def hyperplane_sketch(
         import pandas as pd
 
         for pdf in batches:
-            mb = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
+            mb = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
             acc = np.zeros((len(mb), len(pm)))
             for d in range(mb.shape[1]):
                 acc = acc + np.outer(mb[:, d], pm[:, d])
             sk = ((acc > 0).astype(np.int64) * weights).sum(axis=1)
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col].to_numpy(),
+                    "vec_id": pdf["vec_id"].to_numpy(),
                     "sk": sk,
                     "vnorm": _seq_norms(mb),
                 }
             )
 
-    return corpus.select(id_col, vec_col).mapInPandas(
-        scan, f"{id_col} long, sk bigint, vnorm double"
+    return corpus.select("vec_id", "embedding").mapInPandas(
+        scan, "vec_id long, sk bigint, vnorm double"
     )

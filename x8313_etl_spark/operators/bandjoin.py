@@ -87,16 +87,17 @@ def guarded_band_self_join(
     *,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
     carry: Sequence[str] = (),
-    out_suffixes: tuple[str, str] = ("_a", "_b"),
     log_dropped: bool = False,
     log_label: str = "band-join",
 ) -> DataFrame:
     """Candidate pairs from a banded table, hot buckets excluded.
 
     ``banded``: one row per (row, band) with the bucket key in
-    ``bucket_cols``. Returns distinct pairs ``(id<a>, id<b>, carry...)``
-    with ``id<a> < id<b>``; each ``carry`` column rides along from its
-    own side (it must be functionally dependent on ``id_col``).
+    ``bucket_cols``. Returns distinct pairs ``(<stem>_a, <stem>_b,
+    carry...)`` with ``<stem>_a < <stem>_b``, where ``<stem>`` is
+    ``id_col`` less a trailing ``_id``; each ``carry`` column rides
+    along from its own side as ``<c>_a``/``<c>_b`` (it must be
+    functionally dependent on ``id_col``).
 
     ``log_dropped=True`` eagerly counts the excluded buckets (one small
     job over the size aggregate — callers that persist the banded stage
@@ -120,21 +121,24 @@ def guarded_band_self_join(
                 [(tuple(r[c] for c in bucket_cols), r["bucket_size"]) for r in top],
             )
     banded = drop_hot_buckets(banded, bucket_cols, max_bucket_size)
-    return _pair_self_join(banded, id_col, bucket_cols, carry, out_suffixes)
+    return _pair_self_join(banded, id_col, bucket_cols, carry)
 
 
-def _pair_cols(id_col, carry, out_suffixes):
-    sa, sb = out_suffixes
-    stem = id_col[:-3] if id_col.endswith("_id") else id_col
+def _stem(id_col):
+    return id_col[:-3] if id_col.endswith("_id") else id_col
+
+
+def _pair_cols(id_col, carry):
+    stem = _stem(id_col)
     return [
-        F.col(f"a.{id_col}").alias(f"{stem}{sa}"),
-        F.col(f"b.{id_col}").alias(f"{stem}{sb}"),
-        *[F.col(f"a.{c}").alias(f"{c}{sa}") for c in carry],
-        *[F.col(f"b.{c}").alias(f"{c}{sb}") for c in carry],
+        F.col(f"a.{id_col}").alias(f"{stem}_a"),
+        F.col(f"b.{id_col}").alias(f"{stem}_b"),
+        *[F.col(f"a.{c}").alias(f"{c}_a") for c in carry],
+        *[F.col(f"b.{c}").alias(f"{c}_b") for c in carry],
     ]
 
 
-def _pair_self_join(banded, id_col, bucket_cols, carry, out_suffixes, dedup=True):
+def _pair_self_join(banded, id_col, bucket_cols, carry, dedup=True):
     """``dedup=False`` skips the per-branch distinct — callers that
     union this output with another pair source and distinct THAT must
     not pay three shuffle+dedup rounds where one suffices."""
@@ -145,7 +149,7 @@ def _pair_self_join(banded, id_col, bucket_cols, carry, out_suffixes, dedup=True
             *[F.col(f"a.{c}") == F.col(f"b.{c}") for c in bucket_cols],
             F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
         ],
-    ).select(*_pair_cols(id_col, carry, out_suffixes))
+    ).select(*_pair_cols(id_col, carry))
     return pairs.distinct() if dedup else pairs
 
 
@@ -161,7 +165,6 @@ def salted_band_self_join(
     max_bucket_size: int = DEFAULT_MAX_BUCKET_SIZE,
     salt_block: int = 1_024,
     carry: Sequence[str] = (),
-    out_suffixes: tuple[str, str] = ("_a", "_b"),
 ) -> DataFrame:
     """RECALL-COMPLETE variant of ``guarded_band_self_join``: hot
     buckets are salted (split + block-pair join) instead of dropped.
@@ -194,9 +197,7 @@ def salted_band_self_join(
     cold = tagged.filter(F.col(_NBLK).isNull()).drop(_NBLK)
     # no distinct on either branch: the one distinct after the union
     # below collapses cross-band duplicates AND diagonal orientations
-    cold_pairs = _pair_self_join(
-        cold, id_col, bucket_cols, carry, out_suffixes, dedup=False
-    )
+    cold_pairs = _pair_self_join(cold, id_col, bucket_cols, carry, dedup=False)
 
     # Triangular block pairing. Role assignment in task (i, j) follows
     # SALT order (a-side holds the block-i rows, b-side the block-j
@@ -229,18 +230,16 @@ def salted_band_self_join(
         id_col,
         [*bucket_cols, _SALT_I, _SALT_J],
         carry,
-        out_suffixes,
     )
     return cold_pairs.unionByName(hot_pairs).distinct()
 
 
-def _pair_join_normalized(a_df, b_df, id_col, key_cols, carry, out_suffixes):
+def _pair_join_normalized(a_df, b_df, id_col, key_cols, carry):
     """Join a_df×b_df on key equality + id inequality, emitting each
     pair id-ordered regardless of which side it arrived on (carry
     columns swap together with their id). No distinct: the caller
     distincts the combined output."""
-    sa, sb = out_suffixes
-    stem = id_col[:-3] if id_col.endswith("_id") else id_col
+    stem = _stem(id_col)
     a, b = a_df.alias("a"), b_df.alias("b")
     lt = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
 
@@ -251,10 +250,10 @@ def _pair_join_normalized(a_df, b_df, id_col, key_cols, carry, out_suffixes):
         )
 
     cols = [
-        pick(id_col, True).alias(f"{stem}{sa}"),
-        pick(id_col, False).alias(f"{stem}{sb}"),
-        *[pick(c, True).alias(f"{c}{sa}") for c in carry],
-        *[pick(c, False).alias(f"{c}{sb}") for c in carry],
+        pick(id_col, True).alias(f"{stem}_a"),
+        pick(id_col, False).alias(f"{stem}_b"),
+        *[pick(c, True).alias(f"{c}_a") for c in carry],
+        *[pick(c, False).alias(f"{c}_b") for c in carry],
     ]
     return a.join(
         b,

@@ -29,12 +29,10 @@ from pyspark.sql import DataFrame, Window
 PAIR_COLS = ("dirty_name", "p_name", "cand_id")
 
 
-def band_block_pairs(
-    dnames: DataFrame, cnames: DataFrame, length_delta: int = 1
-) -> DataFrame:
-    """First-token equality + second-token length band of exactly
-    ``+length_delta`` — the drop-k-trailing-characters corruption
-    model (the registered query uses delta=1)."""
+def band_block_pairs(dnames: DataFrame, cnames: DataFrame) -> DataFrame:
+    """First-token equality + a catalog second token exactly one
+    character longer — the drop-one-trailing-character corruption
+    model."""
     d = dnames.select(
         "dirty_name",
         F.element_at(F.split("dirty_name", " "), 1).alias("b1"),
@@ -47,25 +45,24 @@ def band_block_pairs(
         F.length(F.element_at(F.split("p_name", " "), 2)).alias("cb2"),
     )
     return d.join(
-        c, (d.b1 == c.cb1) & (c.cb2 == d.b2 + F.lit(length_delta))
+        c, (d.b1 == c.cb1) & (c.cb2 == d.b2 + F.lit(1))
     ).select(*PAIR_COLS)
 
 
-def qgram_block_pairs(
-    dnames: DataFrame, cnames: DataFrame, q: int = 3
-) -> DataFrame:
-    """Shared character-q-gram blocking: a candidate pair exists iff the
-    two names share at least one q-gram — corruption-model-agnostic
-    (recovers length shifts, infix edits) at the cost of bigger blocks.
-    Names are PADDED with q−1 boundary markers on each side (the
-    standard positional-q-gram trick): without padding, a dirty name
-    shorter than q characters produces only sub-length grams that can
-    never equal a full-length gram from the catalog, so exactly the
-    most-corrupted probes would silently get zero candidates; padded,
-    a 2-char remnant still shares its '##a'-style edge grams with its
-    source name. The explode→equi-join→distinct shape is the l2c
-    inverted-index pattern; hot grams are the usual cap-or-salt
-    mega-bucket story."""
+def qgram_block_pairs(dnames: DataFrame, cnames: DataFrame) -> DataFrame:
+    """Shared character-3-gram blocking: a candidate pair exists iff the
+    two names share at least one q-gram (q = 3) —
+    corruption-model-agnostic (recovers length shifts, infix edits) at
+    the cost of bigger blocks. Names are PADDED with q−1 boundary
+    markers on each side (the standard positional-q-gram trick): without
+    padding, a dirty name shorter than q characters produces only
+    sub-length grams that can never equal a full-length gram from the
+    catalog, so exactly the most-corrupted probes would silently get
+    zero candidates; padded, a 2-char remnant still shares its
+    '##a'-style edge grams with its source name. The
+    explode→equi-join→distinct shape is the l2c inverted-index pattern;
+    hot grams are the usual cap-or-salt mega-bucket story."""
+    q = 3
     pad = "#" * (q - 1)
 
     def grams(col: str, out: str) -> F.Column:

@@ -33,13 +33,9 @@ from ..audit import record_plan
 _POOL: dict[str, DataFrame] = {}
 
 
-def swap_persist(
-    key: str,
-    df: DataFrame,
-    level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
-) -> DataFrame:
-    """Persist ``df`` under ``key``; reuse the key's previous table when
-    the plan is unchanged, release it when it isn't.
+def swap_persist(key: str, df: DataFrame) -> DataFrame:
+    """Persist ``df`` (MEMORY_AND_DISK) under ``key``; reuse the key's
+    previous table when the plan is unchanged, release it when it isn't.
 
     Every plan persisted here is also filed in the audit ledger
     (x8313_etl_spark/audit.py) under ``key``: a swap_persisted table may
@@ -59,7 +55,7 @@ def swap_persist(
             prev.unpersist(blocking=False)
         except Exception:
             _POOL.pop(key, None)  # stale session — fall through, repersist
-    _POOL[key] = df.persist(level)
+    _POOL[key] = df.persist(StorageLevel.MEMORY_AND_DISK)
     return _POOL[key]
 
 

@@ -57,11 +57,10 @@ def quantized_vec(vec, qscale: int = DEFAULT_QSCALE):
 
 def dim_comoment(
     emb: DataFrame,
-    vec_col: str = "embedding",
     dim: int = 64,
     qscale: int = DEFAULT_QSCALE,
 ) -> DataFrame:
-    """(i, j, n, cov_num) for 1 ≤ i ≤ j ≤ dim, with
+    """(i, j, n, cov_num) over ``emb.embedding`` for 1 ≤ i ≤ j ≤ dim, with
     ``cov_num = n·Σ(qi·qj) − Σqi·Σqj`` in quantized integer units
     (divide by n·(n−1)·qscale² for the sample covariance — left to the
     caller precisely so the table stays integer-exact and mergeable).
@@ -73,7 +72,7 @@ def dim_comoment(
     silently wrapping (module docstring). The guard uses the OBSERVED
     per-cell maxima, not the worst case, so well-scaled data keeps the
     full documented headroom."""
-    q = quantized_vec(F.col(vec_col), qscale)
+    q = quantized_vec(F.col("embedding"), qscale)
     idx = F.sequence(F.lit(1), F.lit(dim))
     pairs = F.flatten(
         F.transform(

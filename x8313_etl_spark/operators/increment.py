@@ -54,8 +54,6 @@ from .minhash import (
     signature_from_shingles,
 )
 
-_SHINGLE_K = 3
-
 
 def top1_verdict(ids: DataFrame, verified: DataFrame) -> DataFrame:
     """(doc_id, is_dup, dup_of, jaccard): one row per ``ids`` doc_id.
@@ -87,10 +85,7 @@ def top1_verdict(ids: DataFrame, verified: DataFrame) -> DataFrame:
 def incremental_near_dups(
     index_docs: DataFrame | None,
     batch_docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     threshold: float = 0.3,
-    k: int = _SHINGLE_K,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
     index_sig: DataFrame | None = None,
     index_sh: DataFrame | None = None,
@@ -100,7 +95,7 @@ def incremental_near_dups(
     ``dup_of`` is the index doc with the highest verified Jaccard
     (ties → min index id); NULL (with ``is_dup = false``) when no
     index doc collides on any band with Jaccard ≥ ``threshold``.
-    Batch docs with fewer than ``k`` words have no shingles and are
+    Batch docs with fewer than 3 words have no shingles and are
     never dups under this metric (same contract as
     ``minhash.near_dup_pairs``).
 
@@ -131,7 +126,7 @@ def incremental_near_dups(
     # round): sig derives from sh via signature_from_shingles —
     # bit-identical signatures, but the CPU-dense shingling runs once
     # while sh materializes instead of once per table.
-    sh_new = shingle_table(batch_docs, id_col, text_col, k)
+    sh_new = shingle_table(batch_docs, "doc_id", "text")
     if index_sig is None:
         from .cachepool import swap_persist
 
@@ -161,7 +156,7 @@ def incremental_near_dups(
         # persist (sf0.1: same jobs and tasks, executor CPU 1.19 →
         # 1.01 s).
         sh_old = swap_persist(
-            "increment.sh_old", shingle_table(index_docs, id_col, text_col, k)
+            "increment.sh_old", shingle_table(index_docs, "doc_id", "text")
         )
         sig_old = signature_from_shingles(sh_old)
 
@@ -171,4 +166,4 @@ def incremental_near_dups(
     )
     cand = b_new.join(b_old, ["band", "key"]).select("new_id", "old_id").distinct()
     verified = jaccard_verify(cand, sh_new, sh_old, "new_id", "old_id", threshold)
-    return top1_verdict(batch_docs.select(F.col(id_col).alias("doc_id")), verified)
+    return top1_verdict(batch_docs.select("doc_id"), verified)

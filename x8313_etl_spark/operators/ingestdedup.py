@@ -72,13 +72,10 @@ class IngestDedupSink(VersionedStateDir):
         self,
         state_root: str,
         threshold: float = 0.3,
-        k: int = 3,
         max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
-        keep_versions: int = 2,
     ) -> None:
-        super().__init__(state_root, keep_versions)
+        super().__init__(state_root)
         self.threshold = threshold
-        self.k = k
         self.max_bucket_size = max_bucket_size
 
     def init_index(self, index_docs: DataFrame) -> None:
@@ -87,7 +84,7 @@ class IngestDedupSink(VersionedStateDir):
         if self.current is not None:
             return  # restart path
         spark = index_docs.sparkSession
-        sh = shingle_table(index_docs, "doc_id", "text", self.k)
+        sh = shingle_table(index_docs, "doc_id", "text")
         verd = spark.createDataFrame([], _VERD_SCHEMA)
         self._commit_state(-1, signature_from_shingles(sh), sh, verd)
 
@@ -110,7 +107,7 @@ class IngestDedupSink(VersionedStateDir):
         verd_old = spark.read.parquet(os.path.join(self.current, "VERD"))
 
         batch = batch.localCheckpoint(eager=True)  # pin the epoch's rows
-        bsh = shingle_table(batch, "doc_id", "text", self.k)
+        bsh = shingle_table(batch, "doc_id", "text")
         bsig = signature_from_shingles(bsh)
 
         bucket = ("band", "key")

@@ -91,12 +91,11 @@ def ivfpq_index(
     m: int = 8,
     sub: int = 8,
     k_code: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> IvfPqIndex:
-    """Build the index: coarse assignment, per-block residual
-    codebooks, and the M-byte-per-vector code table."""
-    v = vecs.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
+    """Build the index over ``vecs`` (vec_id, embedding): coarse
+    assignment, per-block residual codebooks, and the
+    M-byte-per-vector code table."""
+    v = vecs.select("vec_id", F.col("embedding").alias("v"))
     cents = v.filter(F.col("vec_id") < k_coarse).select(
         F.col("vec_id").alias("cent_id"), F.col("v").alias("cvec")
     )
@@ -159,15 +158,13 @@ def ivfpq_search(
     *,
     nprobe: int = 4,
     topk: int = 5,
-    id_col: str = "probe_id",
-    vec_col: str = "embedding",
     exclude_self: bool = False,
-    broadcast_dtable: bool = True,
 ) -> DataFrame:
     """(probe_id, vec_id, adc_d2, rn ≤ topk): asymmetric-distance top-k
-    over the probed buckets. The per-query work is one distance table
-    (nprobe · M · k_code entries — broadcast-sized) and one aggregation
-    over its bucket candidates; raw vectors never participate.
+    of ``queries`` (probe_id, embedding) over the probed buckets. The
+    per-query work is one distance table (nprobe · M · k_code entries —
+    broadcast-sized) and one aggregation over its bucket candidates; raw
+    vectors never participate.
 
     The ADC total is an m-ORDERED fixed add chain over per-block
     conditional aggregates (the sim_pq_topk fold discipline), NOT a
@@ -178,15 +175,12 @@ def ivfpq_search(
     ranking (the corpus-probe convention where probes are corpus
     members).
 
-    ``broadcast_dtable`` (default True) assumes the BOUNDED-PROBE
-    contract (the l10_knn_ivf fixed-budget posture): the distance
-    table is probes × nprobe × M × k_code rows — linear in the probe
-    count, NOT constant — so an unbounded probe set must pass False
-    and take the plain shuffle join on (cent_id, m, code) instead of
-    an over-limit broadcast."""
-    q = queries.select(
-        F.col(id_col).alias("probe_id"), F.col(vec_col).alias("qv")
-    )
+    The distance table is broadcast, which assumes the BOUNDED-PROBE
+    contract (the l10_knn_ivf fixed-budget posture): it is probes ×
+    nprobe × M × k_code rows — linear in the probe count, NOT
+    constant — so an unbounded probe set needs the plain shuffle join
+    on (cent_id, m, code) instead of an over-limit broadcast."""
+    q = queries.select("probe_id", F.col("embedding").alias("qv"))
     probed = _argmin_assign(
         q,
         index.centroids,
@@ -229,8 +223,7 @@ def ivfpq_search(
         )
     )
     w = Window.partitionBy("probe_id").orderBy("adc_d2", "vec_id")
-    dt = F.broadcast(dtable) if broadcast_dtable else dtable
-    cand = index.codes.join(dt, ["cent_id", "m", "code"])
+    cand = index.codes.join(F.broadcast(dtable), ["cent_id", "m", "code"])
     if exclude_self:
         cand = cand.filter(F.col("vec_id") != F.col("probe_id"))
     blocks_sum = cand.groupBy("probe_id", "vec_id").agg(

@@ -45,18 +45,18 @@ from pyspark.sql import DataFrame
 KMEANS_SCALE = 10**6
 
 
-def quantize_vectors(vectors: DataFrame, scale: int = KMEANS_SCALE) -> DataFrame:
+def quantize_vectors(vectors: DataFrame) -> DataFrame:
     """(vec_id, qv array<bigint>) — fixed-grid integer quantization,
-    ``floor(x·scale + 0.5)`` per component (floor(+0.5), not round():
+    ``floor(x·KMEANS_SCALE + 0.5)`` per component (floor(+0.5), not round():
     the engines disagree on round-half semantics while floor is
     IEEE-exact in both)."""
     return vectors.select(
         "vec_id",
         F.transform(
             F.col("embedding"),
-            lambda x: F.floor(x.cast("double") * F.lit(float(scale)) + F.lit(0.5)).cast(
-                "bigint"
-            ),
+            lambda x: F.floor(
+                x.cast("double") * F.lit(float(KMEANS_SCALE)) + F.lit(0.5)
+            ).cast("bigint"),
         ).alias("qv"),
     )
 
@@ -147,8 +147,7 @@ def lloyd_kmeans(
     vectors: DataFrame,
     k: int,
     rounds: int,
-    scale: int = KMEANS_SCALE,
-    ledger_key: str | None = None,
+    ledger_key: str = "kmeans",
 ) -> tuple[DataFrame, DataFrame]:
     """Run ``rounds`` Lloyd iterations; returns ``(assign, centroids)``
     where assign is (vec_id, cid) under the FINAL centroids and
@@ -162,33 +161,20 @@ def lloyd_kmeans(
     Cache lifetime: the quantized-vector cache is internal — the final
     assignment is materialized (checkpointed) and the cache UNPERSISTED
     before returning, so repeated calls (parameter sweeps, IVF training
-    loops) don't accumulate executor storage until eviction."""
+    loops) don't accumulate executor storage until eviction. Every
+    checkpoint is an ``audited_checkpoint`` under ``ledger_key`` +
+    ``.seed``/``.round``/``.final``."""
     from pyspark import StorageLevel
 
     from ..audit import audited_checkpoint
 
-    qvecs = vectors.transform(lambda d: quantize_vectors(d, scale)).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    cents = _seed_centroids(qvecs, k)
-    cents = (
-        audited_checkpoint(f"{ledger_key}.seed", cents)
-        if ledger_key
-        else cents.localCheckpoint(eager=True)
-    )
+    qvecs = quantize_vectors(vectors).persist(StorageLevel.MEMORY_AND_DISK)
+    cents = audited_checkpoint(f"{ledger_key}.seed", _seed_centroids(qvecs, k))
     for r in range(rounds):
         assign = _assign(qvecs, cents)
-        cents = _update(qvecs, assign, cents)
-        cents = (
-            audited_checkpoint(f"{ledger_key}.round", cents)
-            if ledger_key
-            else cents.localCheckpoint(eager=True)
+        cents = audited_checkpoint(
+            f"{ledger_key}.round", _update(qvecs, assign, cents)
         )
-    final_assign = _assign(qvecs, cents)
-    final_assign = (
-        audited_checkpoint(f"{ledger_key}.final", final_assign)
-        if ledger_key
-        else final_assign.localCheckpoint(eager=True)
-    )
+    final_assign = audited_checkpoint(f"{ledger_key}.final", _assign(qvecs, cents))
     qvecs.unpersist()
     return final_assign, cents

@@ -69,9 +69,7 @@ def shingle_hashes(sh: Column) -> Column:
     )
 
 
-def shingle_stage(
-    docs: DataFrame, id_col: str, text_col: str, k: int = _SHINGLE_K
-) -> DataFrame:
+def shingle_stage(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(doc_id, sh, sig) with each intermediate MATERIALIZED as its own
     projection column. Catalyst inlines expression trees into
     higher-order lambdas, so composing these as one nested expression
@@ -84,7 +82,8 @@ def shingle_stage(
     """
     return (
         docs.select(
-            F.col(id_col).alias("doc_id"), shingles_rx(F.col(text_col), k).alias("sh")
+            F.col(id_col).alias("doc_id"),
+            shingles_rx(F.col(text_col), _SHINGLE_K).alias("sh"),
         )
         .withColumn("h", shingle_hashes(F.col("sh")))
         .select("doc_id", "sh", minhash_signature(F.col("h")).alias("sig"))
@@ -200,20 +199,20 @@ def _perm_b(i: Column) -> Column:
     return F.pmod(i * F.lit(40_503) + 17, F.lit(MINHASH_P))
 
 
-def minhash_signature(hashes: Column, n_hashes: int = N_HASHES) -> Column:
+def minhash_signature(hashes: Column) -> Column:
     """array<bigint> signature: sig[i] = min over shingles of perm_i(h).
 
-    Computed as a FOLD over shingles with an n_hashes-wide accumulator
+    Computed as a FOLD over shingles with an N_HASHES-wide accumulator
     (element-wise least), not as a transform-per-permutation: Catalyst
     inlines referenced columns into lambda bodies, so the per-permutation
-    form re-evaluates the md5 shingle hashing n_hashes times (measured
+    form re-evaluates the md5 shingle hashing N_HASHES times (measured
     10× slower). The fold touches each hash exactly once.
 
     Empty shingle arrays yield an all-null signature (matches the
     DuckDB twin's list_min([]) = NULL semantics).
     """
-    idx = F.sequence(F.lit(0), F.lit(n_hashes - 1))
-    init = F.array_repeat(F.lit(MINHASH_P).cast("bigint"), n_hashes)
+    idx = F.sequence(F.lit(0), F.lit(N_HASHES - 1))
+    init = F.array_repeat(F.lit(MINHASH_P).cast("bigint"), N_HASHES)
     folded = F.aggregate(
         hashes,
         init,
@@ -230,10 +229,11 @@ def minhash_signature(hashes: Column, n_hashes: int = N_HASHES) -> Column:
     )
 
 
-def band_keys(sig: Column, bands: int = BANDS, rows: int = ROWS_PER_BAND) -> Column:
+def band_keys(sig: Column) -> Column:
     """array<string>: one join key per band — the band's signature slice."""
+    rows = ROWS_PER_BAND
     return F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
+        F.sequence(F.lit(0), F.lit(BANDS - 1)),
         lambda b: F.concat_ws(
             "-", F.transform(F.slice(sig, b * rows + 1, rows), lambda x: x.cast("string"))
         ),
@@ -280,7 +280,6 @@ def near_dup_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.3,
-    k: int = _SHINGLE_K,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
     log_dropped: bool = False,
     on_hot: str = "drop",
@@ -336,7 +335,7 @@ def near_dup_pairs(
     # once while sh materializes, and the signature kernel reads the
     # cached arrays (measured on the l2 path, see OPTIMIZATION_r13.md).
     # sig's one consumer is the pooled `banded`, so sig is not pooled.
-    sh = swap_persist("minhash.sh", shingle_table(docs, id_col, text_col, k))
+    sh = swap_persist("minhash.sh", shingle_table(docs, id_col, text_col))
     # `banded` has two or more consumers in every mode (the band join's
     # two sides, plus the guard's size agg): persist the slim
     # (id, band, key) table so signatures and keys are computed once.
@@ -374,17 +373,15 @@ def band_candidate_prob(s: float, bands: int, rows: int) -> float:
     return 1.0 - (1.0 - s**rows) ** bands
 
 
-def tune_bands(
-    threshold: float, n_hashes: int = N_HASHES, steps: int = 1000
-) -> tuple[int, int]:
+def tune_bands(threshold: float, n_hashes: int = N_HASHES) -> tuple[int, int]:
     """Pick (bands, rows) with bands*rows == n_hashes minimizing the
     S-curve's total error mass around ``threshold``: the integral of
     P(candidate) below the threshold (false-positive area, paid in
     verify-join work) plus the integral of P(miss) above it
     (false-negative area, paid in recall). Candidates are the divisor
     pairs of n_hashes, so the search space is tiny and exact; the
-    integrals are midpoint sums over ``steps`` cells, deterministic for
-    a given steps.
+    integrals are midpoint sums over 1000 cells, so the pick is
+    deterministic.
 
     Why it matters at 100 TB: the fixed (8, 4) default centers the
     curve at (1/8)^(1/4) ≈ 0.595. A pipeline hunting t = 0.9 near-exact
@@ -394,6 +391,7 @@ def tune_bands(
     trade explicit instead of hard-coded."""
     if not 0.0 < threshold < 1.0:
         raise ValueError(f"threshold must be in (0,1): {threshold}")
+    steps = 1000
     best: tuple[float, int, int] | None = None
     for rows in range(1, n_hashes + 1):
         if n_hashes % rows:

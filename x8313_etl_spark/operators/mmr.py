@@ -36,24 +36,21 @@ def mmr_select(
     cand: DataFrame,
     pairsim: DataFrame,
     k: int,
-    group_col: str = "probe_id",
-    id_col: str = "vec_id",
-    rel_col: str = "rel",
-    ledger_key: str | None = None,
+    ledger_key: str = "mmr",
 ) -> DataFrame:
     """Greedy MMR over per-group candidates.
 
-    ``cand``: (group, id, rel). ``pairsim``: (group, a, b, sim) with a
-    row for EVERY ordered pair of distinct candidates in the group
-    (symmetric input; only a→b with b selected is consulted).
-    Returns (group, sel_rank 1..k, id, rel, score) where round 1's
-    score is ``rel`` and later rounds' is ``rel − max(sim to
+    ``cand``: (probe_id, vec_id, rel). ``pairsim``: (probe_id, a, b,
+    sim) with a row for EVERY ordered pair of distinct candidates in
+    the group (symmetric input; only a→b with b selected is consulted).
+    Returns (probe_id, sel_rank 1..k, vec_id, rel, score) where round
+    1's score is ``rel`` and later rounds' is ``rel − max(sim to
     selected)``. Groups with fewer than k candidates return all of
     them in MMR order.
 
-    Each round checkpoints the selection set (``ledger_key`` routes it
-    through the audited ledger; None → plain ``localCheckpoint``) —
-    the kmeans per-round discipline. Without it the unrolled loop
+    Each round checkpoints the selection set through
+    ``audited_checkpoint`` under ``ledger_key`` + ``.round`` — the
+    kmeans per-round discipline. Without it the unrolled loop
     references ``out`` three times per round (anti-join, maxsim join,
     union), so the logical plan grows ~3^k and every round re-executes
     the whole prior selection chain — fatal for the documented k≈100
@@ -61,48 +58,45 @@ def mmr_select(
     """
     from ..audit import audited_checkpoint
 
-    def _pin(df: DataFrame) -> DataFrame:
-        if ledger_key:
-            return audited_checkpoint(f"{ledger_key}.round", df)
-        return df.localCheckpoint(eager=True)
-    w1 = Window.partitionBy(group_col).orderBy(
-        F.col(rel_col).desc(), F.col(id_col)
+    key = f"{ledger_key}.round"
+    w1 = Window.partitionBy("probe_id").orderBy(
+        F.col("rel").desc(), F.col("vec_id")
     )
     sel = (
         cand.withColumn("rn", F.row_number().over(w1))
         .filter(F.col("rn") == 1)
         .select(
-            group_col,
-            id_col,
-            rel_col,
-            F.col(rel_col).alias("score"),
+            "probe_id",
+            "vec_id",
+            "rel",
+            F.col("rel").alias("score"),
             F.lit(1).alias("sel_rank"),
         )
     )
-    out = _pin(sel)
+    out = audited_checkpoint(key, sel)
     for r in range(2, k + 1):
         rem = cand.join(
-            out.select(group_col, id_col), [group_col, id_col], "left_anti"
+            out.select("probe_id", "vec_id"), ["probe_id", "vec_id"], "left_anti"
         )
         mx = (
             pairsim.join(
-                out.select(group_col, F.col(id_col).alias("b")),
-                [group_col, "b"],
+                out.select("probe_id", F.col("vec_id").alias("b")),
+                ["probe_id", "b"],
             )
-            .groupBy(group_col, F.col("a").alias(id_col))
+            .groupBy("probe_id", F.col("a").alias("vec_id"))
             .agg(F.max("sim").alias("maxsim"))
         )
-        wr = Window.partitionBy(group_col).orderBy(
-            F.col("score").desc(), F.col(id_col)
+        wr = Window.partitionBy("probe_id").orderBy(
+            F.col("score").desc(), F.col("vec_id")
         )
         pick = (
-            rem.join(mx, [group_col, id_col])
-            .withColumn("score", F.col(rel_col) - F.col("maxsim"))
+            rem.join(mx, ["probe_id", "vec_id"])
+            .withColumn("score", F.col("rel") - F.col("maxsim"))
             .withColumn("rn", F.row_number().over(wr))
             .filter(F.col("rn") == 1)
             .select(
-                group_col, id_col, rel_col, "score", F.lit(r).alias("sel_rank")
+                "probe_id", "vec_id", "rel", "score", F.lit(r).alias("sel_rank")
             )
         )
-        out = _pin(out.unionByName(pick))
-    return out.select(group_col, "sel_rank", id_col, rel_col, "score")
+        out = audited_checkpoint(key, out.unionByName(pick))
+    return out.select("probe_id", "sel_rank", "vec_id", "rel", "score")

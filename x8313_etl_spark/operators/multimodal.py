@@ -2,11 +2,11 @@
 binary columns + typed metadata, processed with Arrow-batched Pandas
 UDFs over mapInPandas).
 
-The container ships no image/audio codecs, so the DECODE step is split:
+The container ships no image/audio codecs, so the DECODE step is a
+stand-in: a deployment swaps a real codec (PIL/ffmpeg) into the
+per-batch extractor of ``media_features`` without touching any Spark
+plumbing.
 
-- ``decode_media`` — the real decoder hook. Raises NotImplementedError
-  with instructions; a deployment drops in PIL/ffmpeg there without
-  touching any Spark plumbing.
 - ``media_features`` — the Spark-side pipeline that IS real and tested:
   schema handling, Arrow batch iteration, per-batch vectorized work, and
   a deterministic byte-level feature extractor (size + md5 + md5-derived
@@ -24,7 +24,6 @@ partition of large blobs still fits. Feature extraction is map-only.
 from __future__ import annotations
 
 from collections.abc import Iterator
-from typing import Any
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
@@ -51,17 +50,6 @@ def attach_binary(df: DataFrame, id_col: str, text_col: str, modality: str = "im
         F.struct(
             F.length(F.col(text_col)).cast("bigint").alias("n_chars_meta")
         ).alias("meta"),
-    )
-
-
-def decode_media(content: bytes, modality: str) -> dict[str, Any]:
-    """Real decoder hook — wire PIL (image) / soundfile (audio) /
-    pyav (video) here in a deployment. Deliberately NotImplemented in
-    this container (no codec libraries); media_features uses the
-    deterministic byte-level fallback instead."""
-    raise NotImplementedError(
-        f"no codec for modality={modality!r} in this environment; "
-        "install PIL/soundfile/pyav and implement decode_media"
     )
 
 
@@ -141,7 +129,7 @@ def resize_plan(features: DataFrame, max_side: int = 32) -> DataFrame:
     """Resize planning over extracted dimensions: compute the integer
     target box (longest side → ``max_side``, aspect preserved via exact
     integer arithmetic — no float rounding ambiguity cross-engine). The
-    pixel resample itself belongs in decode_media's codec; this is the
+    pixel resample itself belongs to the codec; this is the
     distributed part that decides what every worker does."""
     w, h = F.col("width"), F.col("height")
     longest = F.greatest(w, h)

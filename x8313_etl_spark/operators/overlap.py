@@ -22,16 +22,9 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 
-def interval_overlap_join(
-    a: DataFrame,
-    b: DataFrame,
-    block_width: int,
-    a_start: str = "s0",
-    a_end: str = "s1",
-    b_start: str = "i0",
-    b_end: str = "i1",
-) -> DataFrame:
-    """All (a, b) row pairs whose closed integer intervals overlap.
+def interval_overlap_join(a: DataFrame, b: DataFrame, block_width: int) -> DataFrame:
+    """All (a, b) row pairs whose closed integer intervals overlap:
+    ``a``'s interval is [s0, s1], ``b``'s is [i0, i1].
 
     Interval bounds are non-negative integers (epoch µs in j14); the
     floor divisions below rely on that sign. Output: all columns of
@@ -39,17 +32,14 @@ def interval_overlap_join(
     pair, no duplicates.
     """
     blk = lambda c: F.expr(f"{c} div {block_width}")  # noqa: E731
-    ab = a.withColumn("__blk", F.explode(F.sequence(blk(a_start), blk(a_end))))
-    bb = b.withColumn("__blk", F.explode(F.sequence(blk(b_start), blk(b_end))))
+    ab = a.withColumn("__blk", F.explode(F.sequence(blk("s0"), blk("s1"))))
+    bb = b.withColumn("__blk", F.explode(F.sequence(blk("i0"), blk("i1"))))
     return (
         ab.join(bb, "__blk")
         .filter(
-            (F.col(a_start) <= F.col(b_end))
-            & (F.col(b_start) <= F.col(a_end))
-            & (
-                F.col("__blk")
-                == F.expr(f"greatest({a_start}, {b_start}) div {block_width}")
-            )
+            (F.col("s0") <= F.col("i1"))
+            & (F.col("i0") <= F.col("s1"))
+            & (F.col("__blk") == F.expr(f"greatest(s0, i0) div {block_width}"))
         )
         .drop("__blk")
     )

@@ -11,9 +11,9 @@ iterated floating point cannot be oracled, the g1 module lesson), and
 per round ONE edge⋈rank equi-shuffle on src (identical key each round,
 co-partitioning reused), a map-side-combined integer sum, and a left
 join onto the node frame so nodes receiving no mass keep their base.
-The only difference is the base vector: ``scale·(den−num)/(den·|S|)``
-on seed nodes, ZERO elsewhere — one broadcast seed-flag join, no new
-shuffle.
+The only difference is the base vector:
+``PPR_SCALE·(DAMP_DEN−DAMP_NUM)/(DAMP_DEN·|S|)`` on seed nodes, ZERO
+elsewhere — one broadcast seed-flag join, no new shuffle.
 
 Dangling nodes (no out-edges) leak their mass — the usual simplified
 model, fine for ranking BY seed-proximity where only relative order
@@ -21,12 +21,12 @@ matters; redistributing dangling mass adds one scalar aggregate per
 round if exact probability mass is ever needed (documented, not
 implemented — g1 sidesteps it the same way via its symmetric graph).
 
-Lineage: per-round EAGER checkpoint on both paths (a per-round persist
-neither truncates the growing lineage nor is ever released — the
-cache-lifetime leak class recorded in bounded_sssp's docstring); a
-registered query threads ``ledger_key`` through audited_checkpoint so
-the shuffle audit sees each round. The node frame's internal caches
-are unpersisted before returning (the lloyd_kmeans discipline).
+Lineage: per-round EAGER ``audited_checkpoint`` under ``ledger_key`` (a
+per-round persist neither truncates the growing lineage nor is ever
+released — the cache-lifetime leak class recorded in bounded_sssp's
+docstring), so the shuffle audit sees each round. The node frame's
+internal caches are unpersisted before returning (the lloyd_kmeans
+discipline).
 """
 
 from __future__ import annotations
@@ -35,21 +35,20 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 PPR_SCALE = 10**12
+#: damping factor DAMP_NUM/DAMP_DEN = 0.85, kept as an integer ratio
+DAMP_NUM, DAMP_DEN = 85, 100
 
 
 def personalized_pagerank(
     edges: DataFrame,
     seeds: DataFrame,
     rounds: int,
-    damp_num: int = 85,
-    damp_den: int = 100,
-    scale: int = PPR_SCALE,
-    ledger_key: str | None = None,
+    ledger_key: str = "ppr.round",
 ) -> DataFrame:
     """(node, rank_pico) after ``rounds`` integer power iterations.
 
     ``edges``: (src, dst) directed; ``seeds``: (node). Initial rank =
-    the base vector itself (scale/|S| on seeds — starting from the
+    the base vector itself (PPR_SCALE/|S| on seeds — starting from the
     teleport distribution, the standard PPR power iteration)."""
     from pyspark import StorageLevel
 
@@ -86,10 +85,12 @@ def personalized_pagerank(
     ).crossJoin(F.broadcast(ns))
     base = F.when(
         F.col("is_seed").isNotNull(),
-        F.expr(f"({scale} * {damp_den - damp_num}) div ({damp_den} * n_seeds)"),
+        F.expr(
+            f"({PPR_SCALE} * {DAMP_DEN - DAMP_NUM}) div ({DAMP_DEN} * n_seeds)"
+        ),
     ).otherwise(F.lit(0))
     init = F.when(
-        F.col("is_seed").isNotNull(), F.expr(f"{scale} div n_seeds")
+        F.col("is_seed").isNotNull(), F.expr(f"{PPR_SCALE} div n_seeds")
     ).otherwise(F.lit(0))
     frame = seeded.select("node", base.alias("base"), init.alias("r")).persist(
         StorageLevel.MEMORY_AND_DISK
@@ -116,21 +117,16 @@ def personalized_pagerank(
                     (
                         F.col("base")
                         + F.expr(
-                            f"({damp_num} * coalesce(msum, 0)) div {damp_den}"
+                            f"({DAMP_NUM} * coalesce(msum, 0)) div {DAMP_DEN}"
                         )
                     ).alias("r"),
                 )
             )
-            # checkpoint, not persist, on BOTH paths: a per-round
-            # persist neither truncates the growing lineage nor is ever
-            # released — the cache-lifetime leak class bounded_sssp's
-            # docstring records (and lloyd_kmeans fixed) from review
-            # rounds 6/7
-            ranks = (
-                audited_checkpoint(ledger_key, merged)
-                if ledger_key
-                else merged.localCheckpoint(eager=True)
-            )
+            # checkpoint, not persist: a per-round persist neither
+            # truncates the growing lineage nor is ever released — the
+            # cache-lifetime leak class bounded_sssp's docstring records
+            # (and lloyd_kmeans fixed) from review rounds 6/7
+            ranks = audited_checkpoint(ledger_key, merged)
         return ranks.select("node", F.col("r").cast("bigint").alias("rank_pico"))
     finally:
         # the final ranks are checkpointed (materialized, rounds ≥ 1),

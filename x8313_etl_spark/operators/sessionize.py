@@ -19,19 +19,16 @@ from pyspark.sql import DataFrame, Window
 
 
 def with_session_seq(
-    df: DataFrame,
-    partition_cols: Sequence[str],
-    gap_us: int,
-    um_col: str = "um",
+    df: DataFrame, partition_cols: Sequence[str], gap_us: int
 ) -> DataFrame:
     """Add a bigint ``session_seq`` (1-based per partition) to ``df``.
 
-    ``um_col`` must be an integer-microseconds column; ties in it are
+    ``df.um`` must be an integer-microseconds column; ties in it are
     session-equivalent (gap 0), so ordering among tied rows cannot
     change the numbering.
     """
-    w = Window.partitionBy(*partition_cols).orderBy(um_col)
-    gap = F.col(um_col) - F.lag(um_col).over(w)
+    w = Window.partitionBy(*partition_cols).orderBy("um")
+    gap = F.col("um") - F.lag("um").over(w)
     brk = F.when(gap.isNull() | (gap > gap_us), 1).otherwise(0)
     return (
         df.withColumn("__brk", brk)

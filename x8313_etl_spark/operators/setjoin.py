@@ -43,16 +43,10 @@ from pyspark.sql import DataFrame
 PAIR_COLS = ("doc_a", "doc_b", "inter", "uni", "jaccard")
 
 
-def token_sets(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_k: int | None = None,
-) -> DataFrame:
-    """(doc_id, toks): DISTINCT tokens per doc, df-rank-sorted
-    ascending (rarest first), plus n = |toks|. The sort key is
-    (df, token) — a TOTAL order, so every engine and every run
+def token_sets(docs: DataFrame, *, shingle_k: int | None = None) -> DataFrame:
+    """(doc_id, toks): DISTINCT tokens of each (doc_id, text) doc,
+    df-rank-sorted ascending (rarest first), plus n = |toks|. The sort
+    key is (df, token) — a TOTAL order, so every engine and every run
     produces the identical prefix.
 
     ``shingle_k`` switches the set universe from single words to
@@ -66,13 +60,12 @@ def token_sets(
     if shingle_k is not None:
         from ..functions.text import shingles_rx
 
-        tok_arr = shingles_rx(F.col(text_col), shingle_k)
+        tok_arr = shingles_rx(F.col("text"), shingle_k)
     else:
-        tok_arr = F.array_distinct(F.split(F.col(text_col), " "))
-    t = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(tok_arr).alias("tok"),
-    ).filter(F.col("tok") != "")
+        tok_arr = F.array_distinct(F.split(F.col("text"), " "))
+    t = docs.select("doc_id", F.explode(tok_arr).alias("tok")).filter(
+        F.col("tok") != ""
+    )
     df_tab = t.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     return (
         t.join(F.broadcast(df_tab), "tok")
@@ -125,12 +118,11 @@ def similarity_join(
     t_num: int,
     t_den: int,
     *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     shingle_k: int | None = None,
-    ledger_key: str | None = None,
+    ledger_key: str = "setjoin",
 ) -> DataFrame:
-    """All pairs with Jaccard ≥ t_num/t_den over distinct token sets:
+    """All pairs of (doc_id, text) docs with Jaccard ≥ t_num/t_den over
+    distinct token sets:
     (doc_a, doc_b, inter, uni, jaccard). Membership is decided by the
     integer cross-multiplication ``inter·t_den ≥ t_num·uni`` — exact,
     engine-independent; the double-typed ``jaccard`` column is derived
@@ -142,9 +134,7 @@ def similarity_join(
     negative (a runtime slice error, not an empty answer)."""
     if not 0 < t_num <= t_den:
         raise ValueError(f"threshold must be in (0, 1]: {t_num}/{t_den}")
-    sets = token_sets(
-        docs, text_col=text_col, id_col=id_col, shingle_k=shingle_k
-    )
+    sets = token_sets(docs, shingle_k=shingle_k)
     # INTERN identical token sets before any pairing (the r6 ER
     # lesson, re-learned here by measurement: on an exact-copy 10x
     # replica the un-interned join went 16.9s -> 1195s, ~71x — every
@@ -168,15 +158,10 @@ def similarity_join(
     # within) and nothing downstream shrinks it — without
     # materialization every branch re-derived the whole shingle +
     # df-rank + collect_list chain (14 corpus scans measured in the r10
-    # plan sweep; 2 after). Checkpoint through the audited ledger when
-    # the caller supplies a key (registered queries), plain eager
-    # localCheckpoint otherwise (unit/property tests on crafted frames).
-    if ledger_key is not None:
-        from ..audit import audited_checkpoint
+    # plan sweep; 2 after). Checkpoint through the audited ledger.
+    from ..audit import audited_checkpoint
 
-        groups = audited_checkpoint(f"{ledger_key}.groups", groups)
-    else:
-        groups = groups.localCheckpoint(eager=True)
+    groups = audited_checkpoint(f"{ledger_key}.groups", groups)
     dsets = groups.select(F.col("gid").alias("doc_id"), "toks", "n")
     cand = prefix_candidates(dsets, t_num, t_den)
     sa = dsets.select(

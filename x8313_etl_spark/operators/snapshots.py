@@ -102,8 +102,9 @@ class SnapshotTable:
                     out.append(m)
         return out
 
-    def latest_version(self, branch: str = "main") -> int | None:
-        vs = self.versions(branch)
+    def latest_version(self) -> int | None:
+        """The newest version on ``main``, or None before the first commit."""
+        vs = self.versions("main")
         return vs[-1]["version"] if vs else None
 
     def _resolve(
@@ -427,16 +428,10 @@ class SnapshotTable:
 
     # -- MERGE (CDC apply) --------------------------------------------
 
-    def apply_cdc(
-        self,
-        spark: SparkSession,
-        changes: DataFrame,
-        on: str,
-        op_col: str = "cdc_op",
-    ) -> int:
+    def apply_cdc(self, spark: SparkSession, changes: DataFrame, on: str) -> int:
         """MERGE-statement semantics producing a new version from a CDC
         change set: ``changes`` carries the target's columns plus
-        ``op_col`` ∈ {'U','D'} — 'D' removes the key, 'U' upserts the
+        ``cdc_op`` ∈ {'U','D'} — 'D' removes the key, 'U' upserts the
         full row (update when the key exists, insert when it doesn't).
 
         Merge-on-read: ``delete_eq``'s positional DV over every key
@@ -447,7 +442,7 @@ class SnapshotTable:
         m, version = self._main_head()
         schema = self._schema(m)
         dv = self._write_dv(self._key_positions(spark, m, changes, on))
-        upserts = changes.filter(F.col(op_col) == "U").select(
+        upserts = changes.filter(F.col("cdc_op") == "U").select(
             *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
         )
         ddir = self._write_dir(upserts, "d")

@@ -29,7 +29,7 @@ def bounded_sssp(
     edges: DataFrame,
     seeds: DataFrame,
     rounds: int,
-    ledger_key: str | None = None,
+    ledger_key: str = "sssp.round",
 ) -> DataFrame:
     """Multi-source shortest distances over ≤ ``rounds`` edges.
 
@@ -39,15 +39,15 @@ def bounded_sssp(
     every node reached within ``rounds`` edges; unreached nodes are
     absent (callers left-join and coalesce to their sentinel).
 
-    Each round ends in an EAGER localCheckpoint, not a persist: persist
+    Each round ends in an EAGER checkpoint, not a persist: persist
     only caches — it neither truncates the growing union-of-rounds
     lineage nor gets released at the end of the invocation (a per-round
     persist leaked ``rounds`` cached tables per call for the session
     lifetime — review round 6; the same reason delta_stepping's
-    min_merge checkpoints). Callers with a registered query pass
-    ``ledger_key`` so the shuffle audit still sees each round's
-    truncated plan (audited_checkpoint; the repo's standing
-    iterative-operator invariant)."""
+    min_merge checkpoints). The checkpoint is ``audited_checkpoint``
+    under ``ledger_key``, so the shuffle audit still sees each round's
+    truncated plan (the repo's standing iterative-operator
+    invariant)."""
     from ..audit import audited_checkpoint
 
     dist = seeds.select("node", F.lit(0).cast("bigint").alias("dist"))
@@ -61,11 +61,7 @@ def bounded_sssp(
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
         )
-        dist = (
-            audited_checkpoint(ledger_key, merged)
-            if ledger_key
-            else merged.localCheckpoint(eager=True)
-        )
+        dist = audited_checkpoint(ledger_key, merged)
     return dist
 
 
@@ -75,7 +71,7 @@ def delta_stepping(
     delta: int,
     max_buckets: int,
     light_rounds: int | None = None,
-    ledger_key: str | None = None,
+    ledger_key: str = "sssp.delta",
 ) -> DataFrame:
     """Delta-stepping SSSP (Meyer & Sanders) — the bucketed-priority
     upgrade of ``bounded_sssp``, processing tentative distances in
@@ -112,10 +108,9 @@ def delta_stepping(
     exact Dijkstra distances on every fixture sf by
     tests/test_registered_guards.py::test_g8_light_round_cap_suffices_on_fixtures).
 
-    ``ledger_key``: routes every per-merge checkpoint through
-    audited_checkpoint (the registered-query invariant — the shuffle
-    audit must see each round's truncated plan); None keeps the plain
-    localCheckpoint for library use.
+    Every per-merge checkpoint is an ``audited_checkpoint`` under
+    ``ledger_key`` + ``.round`` (the iterative-operator invariant — the
+    shuffle audit must see each round's truncated plan).
     """
     if delta < 1:
         raise ValueError("delta must be >= 1")
@@ -130,25 +125,22 @@ def delta_stepping(
     tent = seeds.select("node", F.lit(0).cast("bigint").alias("dist"))
     settled = None
 
+    from ..audit import audited_checkpoint
+
     def min_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-        # localCheckpoint, not persist: the schedule runs
+        # checkpoint, not persist: the schedule runs
         # max_buckets·(Δ+1) merges and a persist-only chain makes every
         # later plan re-embed all earlier ones — analysis time grows
         # quadratically (measured: the property test went from stuck to
         # seconds). Checkpointing truncates lineage per merge, the
-        # standard iterative-on-Spark discipline (g1/g5); a registered
-        # query passes ledger_key so the shuffle-audit ledger sees each
-        # round's plan.
+        # standard iterative-on-Spark discipline (g1/g5), and the
+        # ledger sees each round's plan.
         merged = (
             a.unionByName(b)
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
         )
-        if ledger_key:
-            from ..audit import audited_checkpoint
-
-            return audited_checkpoint(f"{ledger_key}.round", merged)
-        return merged.localCheckpoint(eager=True)
+        return audited_checkpoint(f"{ledger_key}.round", merged)
 
     for b in range(max_buckets):
         lo, hi = b * delta, (b + 1) * delta

@@ -37,10 +37,9 @@ space), not a 64-bit hash. A hash key would shave shuffle bytes but
 makes the answer collision-dependent and engine-dependent (Spark
 xxhash64 vs any oracle's hash disagree); the string key is exact,
 engine-neutral, and the gram column is dropped before the window stage
-so the per-doc state is (pos) only. A production run at 100 TB would
-flip ``join_on_hash=True`` after the oracle gate: same plan, 8-byte
-keys, and a 2^-64 per-pair collision risk documented here rather than
-hidden.
+so the per-doc state is (pos) only. A production run at 100 TB could
+key on a hash after the oracle gate: same plan, 8-byte keys, and a
+2^-64 per-pair collision risk documented here rather than hidden.
 """
 
 from __future__ import annotations
@@ -54,25 +53,17 @@ SPAN_COLS = ("doc_id", "span_start", "span_end", "n_dup_grams")
 from ..functions.text import gram_pattern  # one shared regex definition
 
 
-def position_grams(
-    docs: DataFrame,
-    k: int,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """(id, pos, gram): every word K-gram with its 0-based token start.
+def position_grams(docs: DataFrame, k: int) -> DataFrame:
+    """(doc_id, pos, gram): every word K-gram of each (doc_id, text) doc
+    with its 0-based token start.
 
     One word-boundary-anchored lookahead regex pass (the shingles_rx
     idiom — codegen, no higher-order transform), posexploded so ``pos``
     is the token index of the gram's first word. Assumes the corpus
     contract of single-space tokenization (every oracle twin pins the
     same split semantics)."""
-    grams = F.regexp_extract_all(F.col(text_col), F.lit(gram_pattern(k)), F.lit(1))
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(grams).alias("pos", "gram"),
-    )
+    grams = F.regexp_extract_all(F.col("text"), F.lit(gram_pattern(k)), F.lit(1))
+    return docs.select("doc_id", F.posexplode(grams).alias("pos", "gram"))
 
 
 def duplicated_grams(
@@ -119,14 +110,12 @@ def duplicated_spans(
     k: int,
     *,
     min_occurrences: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Maximal duplicated token spans per doc: (doc_id, span_start,
     span_end, n_dup_grams), span bounds in token indices, end exclusive.
     Exactly the spans a corpus suffix array reports for "substring of
     >= k tokens occurring >= min_occurrences times"."""
-    pg = position_grams(docs, k, text_col=text_col, id_col=id_col)
+    pg = position_grams(docs, k)
     dup = duplicated_grams(pg, min_occurrences=min_occurrences)
     marked = pg.join(dup.select("gram"), "gram", "left_semi").select(
         "doc_id", "pos"
@@ -134,22 +123,14 @@ def duplicated_spans(
     return merge_marked_windows(marked, k)
 
 
-def contaminated_spans(
-    docs: DataFrame,
-    probes: DataFrame,
-    k: int,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    probe_text_col: str = "text",
-) -> DataFrame:
+def contaminated_spans(docs: DataFrame, probes: DataFrame, k: int) -> DataFrame:
     """Span-level decontamination marker: maximal token spans of
     ``docs`` covered by k-grams that occur ANYWHERE in the ``probes``
-    corpus (the benchmark / eval set). The doc-level posture
-    (p_decontaminate) throws away a whole document over one shared
-    n-gram; the span posture — what large pretraining pipelines
-    actually ship — localizes the overlap so ``clip_spans`` can excise
-    just the contaminated text.
+    corpus (the benchmark / eval set; both sides carry ``text``). The
+    doc-level posture (p_decontaminate) throws away a whole document
+    over one shared n-gram; the span posture — what large pretraining
+    pipelines actually ship — localizes the overlap so ``clip_spans``
+    can excise just the contaminated text.
 
     Same growth law as ``duplicated_spans`` minus the corpus-wide
     count: the probe gram set is DISTINCT k-grams of the benchmark
@@ -157,13 +138,11 @@ def contaminated_spans(
     semi join broadcasts under AQE and the corpus side never shuffles
     at all; the only wide stage is the per-doc interval-merge window.
     ``n_dup_grams`` counts the marked windows inside each span."""
-    pg = position_grams(docs, k, text_col=text_col, id_col=id_col)
+    pg = position_grams(docs, k)
     probe_grams = (
         probes.select(
             F.explode(
-                F.regexp_extract_all(
-                    F.col(probe_text_col), F.lit(gram_pattern(k)), F.lit(1)
-                )
+                F.regexp_extract_all(F.col("text"), F.lit(gram_pattern(k)), F.lit(1))
             ).alias("gram")
         )
         .distinct()
@@ -172,25 +151,20 @@ def contaminated_spans(
     return merge_marked_windows(marked, k)
 
 
-def clip_spans(
-    docs: DataFrame,
-    spans: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Rewrite each doc with every duplicated span's tokens removed
-    (the aggressive remove-all-copies posture; the paper's keep-one
-    posture needs a canonical-occurrence election and is a separate,
-    more expensive op). Spans aggregate to a per-doc array<struct> —
-    bounded by doc length / k, never corpus-sized — and the token
-    filter is a per-row HOF over that array; docs with no spans keep
-    their text byte-identical (left join, null guard)."""
+def clip_spans(docs: DataFrame, spans: DataFrame) -> DataFrame:
+    """Rewrite each (doc_id, text) doc as ``clean_text`` with every
+    duplicated span's tokens removed (the aggressive remove-all-copies
+    posture; the paper's keep-one posture needs a canonical-occurrence
+    election and is a separate, more expensive op). Spans aggregate to a
+    per-doc array<struct> — bounded by doc length / k, never
+    corpus-sized — and the token filter is a per-row HOF over that
+    array; docs with no spans keep their text byte-identical (left join,
+    null guard)."""
     sp = spans.groupBy("doc_id").agg(
         F.collect_list(F.struct("span_start", "span_end")).alias("sp")
     )
-    joined = docs.join(sp, docs[id_col] == sp["doc_id"], "left").drop(sp["doc_id"])
-    w = F.split(F.col(text_col), " ")
+    joined = docs.join(sp, "doc_id", "left")
+    w = F.split(F.col("text"), " ")
     kept = F.filter(
         w,
         lambda tok, i: ~F.exists(
@@ -200,7 +174,7 @@ def clip_spans(
     )
     return joined.withColumn(
         "clean_text",
-        F.when(F.col("sp").isNull(), F.col(text_col)).otherwise(
+        F.when(F.col("sp").isNull(), F.col("text")).otherwise(
             F.concat_ws(" ", kept)
         ),
     ).drop("sp")

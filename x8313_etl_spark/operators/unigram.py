@@ -49,11 +49,12 @@ MAX_PIECE_LEN = 8
 COST_SCALE = 1_000_000  # micro-nats
 
 
-def distinct_words(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """(word, freq): the interned corpus dictionary. The ONLY pass over
-    the full corpus; everything downstream is dictionary-sized."""
+def distinct_words(docs: DataFrame) -> DataFrame:
+    """(word, freq): the interned dictionary of ``docs.text``. The ONLY
+    pass over the full corpus; everything downstream is
+    dictionary-sized."""
     return (
-        docs.select(F.explode(F.split(F.col(text_col), " ")).alias("word"))
+        docs.select(F.explode(F.split(F.col("text"), " ")).alias("word"))
         .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
@@ -155,29 +156,25 @@ def train_unigram(
     vocab_size: int,
     rounds: int = 4,
     max_piece_len: int = MAX_PIECE_LEN,
-    seed_factor: int = 4,
-    shrink: float = 0.75,
 ) -> tuple[dict[str, int], dict[str, int]]:
     """Viterbi-EM over the interned word table; returns (counts,
     costs), each vocab-sized. The per-round Spark work is one
     segmentation pass + one groupBy bounded by the current vocabulary;
     the vocabulary itself lives on the driver between rounds (bounded
-    by seed_factor × vocab_size — the annscan bounded-collect
-    contract).
+    by 4 × vocab_size — the annscan bounded-collect contract).
 
     Pruning is GRADUAL (the SentencePiece schedule): EM starts on the
-    full seed_factor × vocab_size seed and each round keeps
-    ``shrink``× the survivors, landing on vocab_size at the final
-    round. Pruning the seed up front instead converges to a fragment
-    vocabulary: raw substring frequency overweights short infixes
-    ("er" occurring inside half the dictionary out-counts any whole
-    word), so the words EM would have promoted are gone before the
-    first E-step ever scores them — measured on the sf0.01 fixture,
-    up-front pruning segments "table" as (ta,b,l,e) while the gradual
-    schedule keeps whole words as single pieces."""
+    full 4 × vocab_size seed and each round keeps 0.75× the survivors,
+    landing on vocab_size at the final round. Pruning the seed up front
+    instead converges to a fragment vocabulary: raw substring frequency
+    overweights short infixes ("er" occurring inside half the dictionary
+    out-counts any whole word), so the words EM would have promoted are
+    gone before the first E-step ever scores them — measured on the
+    sf0.01 fixture, up-front pruning segments "table" as (ta,b,l,e)
+    while the gradual schedule keeps whole words as single pieces."""
     counts = {
         r["piece"]: int(r["count"])
-        for r in seed_vocab(words, vocab_size * seed_factor, max_piece_len).collect()
+        for r in seed_vocab(words, vocab_size * 4, max_piece_len).collect()
     }
     for r in range(rounds):
         costs = _costs_from_counts(counts)
@@ -197,7 +194,7 @@ def train_unigram(
         target = (
             vocab_size
             if r == rounds - 1
-            else max(vocab_size, int(len(counts) * shrink))
+            else max(vocab_size, int(len(counts) * 0.75))
         )
         counts = _prune(observed, target)
     return counts, _costs_from_counts(counts)
@@ -218,18 +215,15 @@ def encode_corpus(
     docs: DataFrame,
     costs: dict[str, int],
     *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_piece_len: int = MAX_PIECE_LEN,
 ) -> DataFrame:
-    """(doc_id, pieces): whole-doc subword stream under a trained
-    vocabulary. Segments the DISTINCT words only, then rebuilds each
-    doc by joining the dictionary back to the exploded token stream and
-    reassembling in position order — corpus text is never pushed
-    through Python."""
+    """(doc_id, pieces): whole-doc subword stream of each (doc_id, text)
+    doc under a trained vocabulary. Segments the DISTINCT words only,
+    then rebuilds each doc by joining the dictionary back to the
+    exploded token stream and reassembling in position order — corpus
+    text is never pushed through Python."""
     toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "word"),
+        "doc_id", F.posexplode(F.split(F.col("text"), " ")).alias("pos", "word")
     ).filter(F.col("word") != "")
     dic = segment_words(
         toks.select("word").distinct().withColumn("freq", F.lit(1)),
@@ -250,7 +244,7 @@ def encode_corpus(
     # left join back to the full id set: a doc with empty /
     # whitespace-only text must come back with an EMPTY pieces array,
     # not vanish from the output (the clip_spans preserve-docs rule).
-    ids = docs.select(F.col(id_col).alias("doc_id"))
+    ids = docs.select("doc_id")
     return ids.join(agg, "doc_id", "left").select(
         "doc_id",
         F.coalesce("pieces", F.array().cast("array<string>")).alias("pieces"),

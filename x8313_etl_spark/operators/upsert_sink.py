@@ -63,9 +63,8 @@ class KeyedUpsertSink(VersionedStateDir):
         key: str,
         delta_fn: Callable[[DataFrame], DataFrame],
         merge_exprs: dict[str, MergeExpr],
-        keep_versions: int = 2,
     ) -> None:
-        super().__init__(state_root, keep_versions)
+        super().__init__(state_root)
         self.key = key
         self.delta_fn = delta_fn
         self.merge_exprs = merge_exprs

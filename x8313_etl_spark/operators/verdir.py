@@ -15,7 +15,7 @@ Contract (documented at length in upsert_sink's module docstring):
   the next merge build on pre-replay state);
 - a restarted driver recovers the pointer from the highest version on
   disk (negative seed versions included);
-- retention keeps ``keep_versions`` newest commits — the newest is
+- retention keeps the 2 newest commits — the newest is
   live, one predecessor preserves the replay token across the
   crash-between-commits window.
 """
@@ -30,10 +30,9 @@ class VersionedStateDir:
     replay detection, and pruning. Subclasses write their payload via
     ``_write_version(tmp_dir, ...)`` and call ``_commit``."""
 
-    def __init__(self, state_root: str, keep_versions: int = 2) -> None:
+    def __init__(self, state_root: str) -> None:
         os.makedirs(state_root, exist_ok=True)
         self.state_root = state_root
-        self.keep_versions = keep_versions
         done = self._versions_on_disk()
         self.current: str | None = (
             os.path.join(state_root, f"v{done[-1]}") if done else None
@@ -74,5 +73,5 @@ class VersionedStateDir:
         import shutil
 
         done = self._versions_on_disk()
-        for v in done[: -self.keep_versions]:
+        for v in done[:-2]:
             shutil.rmtree(self._version_dir(v), ignore_errors=True)

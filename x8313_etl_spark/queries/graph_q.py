@@ -33,7 +33,8 @@ SCALE = 10**12
 ITERATIONS = 5
 
 
-def _pagerank_oracle(iterations: int = ITERATIONS) -> str:
+def _pagerank_oracle() -> str:
+    iterations = ITERATIONS
     ctes = [
         """e AS (
   SELECT DISTINCT 'S' || CAST(l.l_suppkey AS VARCHAR) AS src,
@@ -165,7 +166,8 @@ BFS_HOPS = 4
 _SEEDS = "('S0','S1','S2','S3','S4')"
 
 
-def _bfs_oracle(hops: int = BFS_HOPS) -> str:
+def _bfs_oracle() -> str:
+    hops = BFS_HOPS
     ctes = [
         """e AS (
   SELECT DISTINCT 'S' || CAST(l.l_suppkey AS VARCHAR) AS src,
@@ -409,7 +411,8 @@ def _cosupply_edges(
 _LPA_ROUNDS = 3
 
 
-def _lpa_oracle(rounds: int = _LPA_ROUNDS) -> str:
+def _lpa_oracle() -> str:
+    rounds = _LPA_ROUNDS
     ctes = [
         """e AS MATERIALIZED (
   SELECT DISTINCT 'S' || CAST(l.l_suppkey AS VARCHAR) AS src,
@@ -538,7 +541,8 @@ _KCORE_ROUNDS = 4
 _KCORE_QUANTILE = 0.05
 
 
-def _kcore_oracle(rounds: int = _KCORE_ROUNDS) -> str:
+def _kcore_oracle() -> str:
+    rounds = _KCORE_ROUNDS
     ctes = [
         """pairs AS (
   SELECT a.l_suppkey AS s1, b.l_suppkey AS s2, a.l_orderkey AS ok
@@ -641,7 +645,8 @@ _G6_SEEDS = ("S0", "S1", "S2")
 _G6_HOPS = 4
 
 
-def _g6_oracle(hops: int = _G6_HOPS) -> str:
+def _g6_oracle() -> str:
+    hops = _G6_HOPS
     seeds = ", ".join(f"('{s}')" for s in _G6_SEEDS)
     ctes = [
         """e AS MATERIALIZED (
@@ -844,7 +849,8 @@ _SSSP_SEED_MOD = 7
 _SSSP_QUANTILE = _TRI_QUANTILE  # g3/g5's co-supply threshold — ONE source: the Spark side thresholds via _cosupply_edges, which reads _TRI_QUANTILE
 
 
-def _sssp_oracle(rounds: int = _SSSP_ROUNDS) -> str:
+def _sssp_oracle() -> str:
+    rounds = _SSSP_ROUNDS
     ctes = [
         """pairs AS MATERIALIZED (
   SELECT s1, s2, count(DISTINCT ok) AS shared FROM (

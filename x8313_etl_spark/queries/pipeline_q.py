@@ -207,8 +207,9 @@ h AS (SELECT doc_id, {sql_word_hashes('w')} AS h FROM w),
 s AS (SELECT doc_id, {sql_simhash('h')} AS sh FROM h)"""
 
 
-def simhash_table_native(docs, id_col: str = "doc_id", text_col: str = "text"):
-    """(doc_id, sh) — the production SimHash sketch path.
+def simhash_table_native(docs):
+    """(doc_id, sh) of each (doc_id, text) doc — the production SimHash
+    sketch path.
 
     REWORKED r14 (optimization round 2, guide §4): one Arrow-batched
     numpy pass replaces the explode → 31 per-bit ``sum(±1)``
@@ -281,9 +282,9 @@ def simhash_table_native(docs, id_col: str = "doc_id", text_col: str = "text"):
                 {"doc_id": pdf["doc_id"].to_numpy(), "sh": sh}
             )
 
-    return docs.select(
-        F.col(id_col).alias("doc_id"), tokens(F.col(text_col)).alias("toks")
-    ).mapInPandas(go, "doc_id long, sh long")
+    return docs.select("doc_id", tokens(F.col("text")).alias("toks")).mapInPandas(
+        go, "doc_id long, sh long"
+    )
 
 
 def _simhash_table(spark: SparkSession, sf_dir: str):
@@ -899,14 +900,14 @@ def p_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bpe_encode_oracle(k: int = _BPE_ROUNDS) -> str:
-    base = _bpe_oracle(k)
+def _bpe_encode_oracle() -> str:
+    base = _bpe_oracle(_BPE_ROUNDS)
     head = base[: base.rindex("\nSELECT")]
     return head + f"""
 SELECT w, CAST(freq AS BIGINT) AS freq,
        string_agg(sym, ' ' ORDER BY pos) AS tokens,
        CAST(count(*) AS BIGINT) AS n_tokens
-FROM t{k} GROUP BY w, freq"""
+FROM t{_BPE_ROUNDS} GROUP BY w, freq"""
 
 
 @register(

@@ -342,10 +342,9 @@ def banded_verified_pairs(
     planes: list[list[float]],
     n_bands: int,
     pool_key: str,
-    band_bits: int = 8,
 ) -> DataFrame:
     """(vec_a, vec_b, cos_sim) for every vector pair sharing one of
-    ``n_bands`` LSH bands (``band_bits`` sketch bits each) with exact
+    ``n_bands`` LSH bands (``band_bits`` = 8 sketch bits each) with exact
     cosine ≥ ``tau`` — the candidate+verify core of sim_lsh_neardup and
     p_semantic_dedup_lsh. Sketching is an Arrow-batched map-only pass
     (bit-identical to the SQL twin's expression form —
@@ -364,6 +363,7 @@ def banded_verified_pairs(
     from ..operators.bandjoin import guarded_band_self_join
     from ..operators.cachepool import swap_persist
 
+    band_bits = 8
     assert len(planes) >= n_bands * band_bits, "sketch too narrow for banding"
     e = swap_persist(pool_key, hyperplane_sketch(raw, planes))
     mask = (1 << band_bits) - 1

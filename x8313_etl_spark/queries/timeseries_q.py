@@ -358,8 +358,8 @@ def ts_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LTTB_BUCKETS = 12  # first + 10 area-selected + last, per series
 
 
-def _lttb_oracle(n_buckets: int = _LTTB_BUCKETS) -> str:
-    mid = n_buckets - 2
+def _lttb_oracle() -> str:
+    n_buckets, mid = _LTTB_BUCKETS, _LTTB_BUCKETS - 2
     area = (
         "CAST(CAST(abs((p.x - a.ax) * (b.y - p.y) - (p.x - b.x) * (a.ay - p.y)) "
         "AS DECIMAL(25,4)) AS DOUBLE)"

@@ -220,9 +220,10 @@ FROM documents
 def x7_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal pipeline: text → binary content column → Arrow-batched
     feature extraction over mapInPandas (operators/multimodal.py). The
-    codec is a deterministic byte-level stand-in (real decoders slot
-    into decode_media); the Spark plumbing — binary columns, pinned UDF
-    schema, batch iteration — is the real thing and oracle-checked."""
+    codec is a deterministic byte-level stand-in (a real decoder slots
+    into the per-batch extractor); the Spark plumbing — binary columns,
+    pinned UDF schema, batch iteration — is the real thing and
+    oracle-checked."""
     d = load_table(spark, sf_dir, "documents")
     mm = attach_binary(d, "doc_id", "text", modality="image")
     return media_features(mm)

@@ -123,6 +123,8 @@ def has_state_server_deps() -> bool:
 #: core count; the checkpoint pins the value at the first batch, so this
 #: is a per-query-start decision, exactly like here.
 STREAM_STATE_PARTITIONS = 8
+#: how long a bounded (availableNow) query may run before it is stopped
+STREAM_TIMEOUT_SEC = 180
 
 
 class _stream_state_partitions:
@@ -149,7 +151,6 @@ def run_to_memory(
     sdf: DataFrame,
     name: str,
     output_mode: str,
-    timeout_sec: int = 180,
 ) -> DataFrame:
     """Run a streaming DataFrame to completion (availableNow) into a
     memory sink and return the final sink table.
@@ -167,10 +168,12 @@ def run_to_memory(
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(timeout_sec)
+        q.awaitTermination(STREAM_TIMEOUT_SEC)
     if q.isActive:  # pragma: no cover - defensive: hung query
         q.stop()
-        raise TimeoutError(f"streaming query {name} did not finish in {timeout_sec}s")
+        raise TimeoutError(
+            f"streaming query {name} did not finish in {STREAM_TIMEOUT_SEC}s"
+        )
     return spark.table(name)
 
 
@@ -178,7 +181,6 @@ def stateful_merge_counter(
     spark: SparkSession,
     stream: DataFrame,
     key: str = "user_id",
-    timeout_sec: int = 180,
 ) -> DataFrame:
     """Custom cross-batch stateful per-key counters WITHOUT the Python
     state-server: state lives as a compacted parquet table that each
@@ -221,10 +223,10 @@ def stateful_merge_counter(
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(timeout_sec)
+        q.awaitTermination(STREAM_TIMEOUT_SEC)
     if q.isActive:  # pragma: no cover
         q.stop()
-        raise TimeoutError(f"stateful merge did not finish in {timeout_sec}s")
+        raise TimeoutError(f"stateful merge did not finish in {STREAM_TIMEOUT_SEC}s")
     assert latest["dir"] is not None, "stream produced no batches"
     return spark.read.parquet(latest["dir"])
 
