@@ -19,6 +19,8 @@ in ALLOWED for the artifact even though this test does not reach it.
 
 from __future__ import annotations
 
+import ast
+
 import pytest
 
 from x8313_etl_spark import audit
@@ -700,8 +702,6 @@ TEST_ONLY_PARAMS: dict[str, tuple[str, str]] = {
 
 
 def _call_name(fn) -> str | None:
-    import ast
-
     if isinstance(fn, ast.Name):
         return fn.id
     return fn.attr if isinstance(fn, ast.Attribute) else None
@@ -710,7 +710,6 @@ def _call_name(fn) -> str | None:
 def _calls(paths) -> dict[str, list[tuple[int, set, bool]]]:
     """Call name -> (positional count, keyword names, spreads ``*``/``**``)
     per call; ``functools.partial(f, ...)`` counts as a call of ``f``."""
-    import ast
     from collections import defaultdict
 
     out = defaultdict(list)
@@ -734,8 +733,6 @@ def _defaulted_params(pkg):
     for every defaulted parameter of every function in the package. An
     ``__init__`` is called by its class's name, its subclasses' names
     (unless they define their own) and ``super().__init__``."""
-    import ast
-
     trees = {p: ast.parse(p.read_text()) for p in sorted(pkg.rglob("*.py"))}
     classes = [
         n for t in trees.values() for n in ast.walk(t) if isinstance(n, ast.ClassDef)

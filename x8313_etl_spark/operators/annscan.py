@@ -95,10 +95,9 @@ def cosine_probe_topk(corpus: DataFrame, probes: DataFrame, k: int) -> DataFrame
 def hyperplane_sketch(corpus: DataFrame, planes: list[list[float]]) -> DataFrame:
     """(vec_id, sk bigint, vnorm double) per (vec_id, embedding) row:
     bit j of sk = 1 iff the dimension-sequential dot with plane j is
-    > 0. Same numpy fold
-    discipline as cosine_probe_scan, so the sketch bits (and the norms
-    reused by the verify stage) are bit-identical to the expression/SQL
-    forms."""
+    > 0. Same numpy fold discipline as cosine_probe_scan, so the sketch
+    bits (and the norms reused by the verify stage) are bit-identical
+    to the expression/SQL forms."""
     import numpy as np
 
     pm = np.asarray(planes, dtype=np.float64)  # J x D
