@@ -112,6 +112,8 @@ def delta_stepping(
     ``ledger_key`` + ``.round`` (the iterative-operator invariant — the
     shuffle audit must see each round's truncated plan).
     """
+    from ..audit import audited_checkpoint
+
     if delta < 1:
         raise ValueError("delta must be >= 1")
     if max_buckets < 1:
@@ -124,8 +126,6 @@ def delta_stepping(
     heavy = edges.filter(F.col("w") > delta)
     tent = seeds.select("node", F.lit(0).cast("bigint").alias("dist"))
     settled = None
-
-    from ..audit import audited_checkpoint
 
     def min_merge(a: DataFrame, b: DataFrame) -> DataFrame:
         # checkpoint, not persist: the schedule runs
