@@ -9,7 +9,6 @@ from x8313_etl_spark.operators.increment import incremental_near_dups
 from x8313_etl_spark.operators.minhash import near_dup_pairs
 
 _MOD = 5
-_TAU = 0.3
 
 
 def _split(spark, sf_dir):
@@ -28,12 +27,10 @@ def test_incremental_equals_full_restricted_to_cross_pairs(spark, sf_dir):
     index, batch = _split(spark, sf_dir)
     inc = {
         r["doc_id"]: (r["is_dup"], r["dup_of"], r["jaccard"])
-        for r in incremental_near_dups(index, batch, threshold=_TAU).collect()
+        for r in incremental_near_dups(index, batch).collect()
     }
 
-    full = near_dup_pairs(
-        load_table(spark, sf_dir, "documents"), threshold=_TAU
-    ).collect()
+    full = near_dup_pairs(load_table(spark, sf_dir, "documents")).collect()
     cross = {}
     for r in full:
         a, b, j = r["doc_a"], r["doc_b"], r["jaccard"]
@@ -81,12 +78,10 @@ def test_precomputed_index_tables_match_recompute(spark, sf_dir):
     )
 
     index, batch = _split(spark, sf_dir)
-    base = incremental_near_dups(index, batch, threshold=_TAU).collect()
-    sig = signature_from_shingles(shingle_table(index, "doc_id", "text", 3))
-    sh = shingle_table(index, "doc_id", "text", 3)
-    pre = incremental_near_dups(
-        None, batch, threshold=_TAU, index_sig=sig, index_sh=sh
-    ).collect()
+    base = incremental_near_dups(index, batch).collect()
+    sig = signature_from_shingles(shingle_table(index, "doc_id", "text"))
+    sh = shingle_table(index, "doc_id", "text")
+    pre = incremental_near_dups(None, batch, index_sig=sig, index_sh=sh).collect()
 
     def key(rows):
         return sorted(
@@ -106,7 +101,7 @@ def test_index_tables_must_come_together(spark, sf_dir):
     )
 
     index, batch = _split(spark, sf_dir)
-    sig = signature_from_shingles(shingle_table(index, "doc_id", "text", 3))
+    sig = signature_from_shingles(shingle_table(index, "doc_id", "text"))
     with pytest.raises(ValueError, match="together"):
         incremental_near_dups(index, batch, index_sig=sig)
     with pytest.raises(ValueError, match="index_docs or index_sig"):
@@ -124,7 +119,7 @@ def test_docs_and_precomputed_index_together_is_an_error(spark, sf_dir):
     )
 
     index, batch = _split(spark, sf_dir)
-    sig = signature_from_shingles(shingle_table(index, "doc_id", "text", 3))
-    sh = shingle_table(index, "doc_id", "text", 3)
+    sig = signature_from_shingles(shingle_table(index, "doc_id", "text"))
+    sh = shingle_table(index, "doc_id", "text")
     with pytest.raises(ValueError, match="not both"):
         incremental_near_dups(index, batch, index_sig=sig, index_sh=sh)

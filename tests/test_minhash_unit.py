@@ -92,7 +92,7 @@ def test_tune_bands_divides_and_tracks_threshold():
 
     prev_rows = 0
     for t in (0.1, 0.3, 0.5, 0.7, 0.9):
-        b, r = tune_bands(t, 32)
+        b, r = tune_bands(t)
         assert b * r == 32
         assert r >= prev_rows  # higher threshold -> longer rows (sharper AND)
         prev_rows = r
@@ -104,7 +104,7 @@ def test_tune_bands_pins_pipeline_default():
     # threshold — the default is optimal, not arbitrary.
     from x8313_etl_spark.operators.minhash import BANDS, ROWS_PER_BAND, tune_bands
 
-    assert tune_bands(0.5, 32) == (BANDS, ROWS_PER_BAND)
+    assert tune_bands(0.5) == (BANDS, ROWS_PER_BAND)
 
 
 def test_band_candidate_prob_is_a_monotone_cdf_shape():

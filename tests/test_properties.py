@@ -102,7 +102,7 @@ def test_salted_join_equals_plain_join(spark, big, small):
     sdf = spark.createDataFrame(small, "k int, v string")
     got = sorted(
         (r.k, r.uid, r.v)
-        for r in salted_join(bdf, sdf, on="k", salt_by="uid", n_salts=4).collect()
+        for r in salted_join(bdf, sdf, on="k", salt_by="uid").collect()
     )
     want = sorted((r.k, r.uid, r.v) for r in bdf.join(sdf, "k").collect())
     assert got == want

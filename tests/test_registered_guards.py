@@ -667,10 +667,10 @@ def test_incremental_dedup_index_roundtrip(spark, sf_oracle_dir, tmp_path):
     sig_dir = os.path.join(str(tmp_path), "sig")
     sh_dir = os.path.join(str(tmp_path), "sh")
     # standing index v0: sketched once, persisted as parquet
-    signature_from_shingles(shingle_table(idx0, "doc_id", "text", 3)).write.parquet(
+    signature_from_shingles(shingle_table(idx0, "doc_id", "text")).write.parquet(
         sig_dir
     )
-    shingle_table(idx0, "doc_id", "text", 3).write.parquet(sh_dir)
+    shingle_table(idx0, "doc_id", "text").write.parquet(sh_dir)
 
     # ingest batch 1 against the persisted index (the production path:
     # no index_docs, no re-sketching)
@@ -683,10 +683,10 @@ def test_incremental_dedup_index_roundtrip(spark, sf_oracle_dir, tmp_path):
 
     # ROUND TRIP: append batch 1's own sketches — the ingest's output
     # index state — so they become batch 2's input index
-    signature_from_shingles(shingle_table(b1, "doc_id", "text", 3)).write.mode(
+    signature_from_shingles(shingle_table(b1, "doc_id", "text")).write.mode(
         "append"
     ).parquet(sig_dir)
-    shingle_table(b1, "doc_id", "text", 3).write.mode("append").parquet(sh_dir)
+    shingle_table(b1, "doc_id", "text").write.mode("append").parquet(sh_dir)
 
     v2 = incremental_near_dups(
         None, b2,

@@ -670,10 +670,6 @@ TEST_ONLY_PARAMS: dict[str, tuple[str, str]] = {
         "tests/test_bandjoin.py",
         "salt mode keeps the pairs that drop mode loses (full recall)",
     ),
-    "operators/minhash.py::tune_bands(n_hashes)": (
-        "tests/test_minhash_unit.py",
-        "the tuner's picks must be divisor pairs of the hash count",
-    ),
     "operators/skew.py::salted_join(how)": (
         "tests/test_skew_demo.py",
         "outer salted joins must match the unsalted join",
@@ -707,55 +703,96 @@ def _call_name(fn) -> str | None:
     return fn.attr if isinstance(fn, ast.Attribute) else None
 
 
-def _calls(paths) -> dict[str, list[tuple[int, set, bool]]]:
-    """Call name -> (positional count, keyword names, spreads ``*``/``**``)
-    per call; ``functools.partial(f, ...)`` counts as a call of ``f``."""
+def _value(node):
+    """What an argument or default says, up to spelling: a constant, or
+    a name however it is qualified (``N_HASHES``, ``minhash.N_HASHES``)."""
+    if isinstance(node, ast.Constant):
+        return type(node.value).__name__, repr(node.value)
+    if isinstance(node, (ast.Name, ast.Attribute)):
+        return "name", _call_name(node)
+    return "ast", ast.dump(node)
+
+
+def _calls(paths) -> dict[str, list[tuple[list, dict, bool]]]:
+    """Call name -> (positional arguments, keyword arguments, spreads
+    ``*``/``**``) per call. ``functools.partial(f, ...)`` counts as a call
+    of ``f``; ``super().__init__(...)`` inside class ``C`` is filed under
+    ``super@C``. An argument that names a module-level constant of its
+    file stands as that constant's value."""
     from collections import defaultdict
 
     out = defaultdict(list)
-    for path in paths:
-        for n in ast.walk(ast.parse(path.read_text())):
+
+    def walk(node, cls, consts):
+        def val(a):
+            return consts.get(a.id, a) if isinstance(a, ast.Name) else a
+
+        for n in ast.iter_child_nodes(node):
+            walk(n, n.name if isinstance(n, ast.ClassDef) else cls, consts)
             if not isinstance(n, ast.Call):
                 continue
             fn, args = n.func, n.args
             if _call_name(fn) == "partial" and args:
                 fn, args = args[0], args[1:]
             name = _call_name(fn)
+            if name == "__init__":
+                on = fn.value
+                is_super = isinstance(on, ast.Call) and _call_name(on.func) == "super"
+                name = f"super@{cls}" if is_super else None
             if name:
-                kws = {k.arg for k in n.keywords}
+                kws = {k.arg: val(k.value) for k in n.keywords}
                 spread = None in kws or any(isinstance(a, ast.Starred) for a in args)
-                out[name].append((len(args), kws - {None}, spread))
+                out[name].append(([val(a) for a in args], kws, spread))
+
+    for path in paths:
+        tree = ast.parse(path.read_text())
+        walk(tree, None, _constants(tree))
     return out
 
 
+def _constants(tree) -> dict:
+    """Module-level ``NAME = <literal>`` bindings of one file."""
+    return {
+        t.id: n.value
+        for n in tree.body
+        if isinstance(n, (ast.Assign, ast.AnnAssign)) and isinstance(n.value, ast.Constant)
+        for t in (n.targets if isinstance(n, ast.Assign) else [n.target])
+        if isinstance(t, ast.Name)
+    }
+
+
 def _defaulted_params(pkg):
-    """(key, call names, parameter, positional index or None, is_method)
-    for every defaulted parameter of every function in the package. An
-    ``__init__`` is called by its class's name, its subclasses' names
-    (unless they define their own) and ``super().__init__``."""
+    """(key, call names, parameter, positional index or None, is_method,
+    the default's values) for every defaulted parameter of every function
+    in the package. Calls match by bare name, so a method is reached by
+    any ``x.<name>(...)`` call. An ``__init__`` is called by its class's
+    name, its subclasses' names (unless they define their own) and
+    ``super().__init__`` in their direct subclasses. A default that names
+    a module-level constant also matches that constant's value."""
     trees = {p: ast.parse(p.read_text()) for p in sorted(pkg.rglob("*.py"))}
     classes = [
         n for t in trees.values() for n in ast.walk(t) if isinstance(n, ast.ClassDef)
     ]
+    bases = {c.name: {_call_name(b) for b in c.bases} for c in classes}
     #: classes without an ``__init__`` of their own -> their base names
     inherits = {
-        c.name: {_call_name(b) for b in c.bases}
+        c.name: bases[c.name]
         for c in classes
         if not any(isinstance(f, ast.FunctionDef) and f.name == "__init__" for f in c.body)
     }
 
     def ctor_names(cls):
-        names = {cls, "__init__"}
+        names = {cls}
         while grown := {c for c, bs in inherits.items() if bs & names} - names:
             names |= grown
-        return names
+        return names | {f"super@{c}" for c, bs in bases.items() if bs & names}
 
     out = []
 
-    def walk(node, rel, cls):
+    def walk(node, rel, cls, consts):
         for ch in ast.iter_child_nodes(node):
             if isinstance(ch, ast.ClassDef):
-                walk(ch, rel, ch.name)
+                walk(ch, rel, ch.name, consts)
             elif isinstance(ch, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 a = ch.args
                 pos = [x.arg for x in a.posonlyargs + a.args]
@@ -763,36 +800,49 @@ def _defaulted_params(pkg):
                 names = ctor_names(cls) if ch.name == "__init__" else {ch.name}
                 qual = f"{cls}.{ch.name}" if cls else ch.name
                 first = len(pos) - len(a.defaults)
-                params = [(p, i) for i, p in enumerate(pos) if i >= first]
-                params += [
-                    (k.arg, None) for k, d in zip(a.kwonlyargs, a.kw_defaults) if d
+                params = [
+                    (p, i, d) for i, (p, d) in enumerate(zip(pos[first:], a.defaults), first)
                 ]
-                for p, i in params:
-                    out.append((f"{rel}::{qual}({p})", names, p, i, method))
-                walk(ch, rel, None)
+                params += [
+                    (k.arg, None, d) for k, d in zip(a.kwonlyargs, a.kw_defaults) if d
+                ]
+                for p, i, d in params:
+                    default = {_value(d)}
+                    if isinstance(d, ast.Name) and d.id in consts:
+                        default.add(_value(consts[d.id]))
+                    out.append((f"{rel}::{qual}({p})", names, p, i, method, default))
+                walk(ch, rel, None, consts)
             else:
-                walk(ch, rel, cls)
+                walk(ch, rel, cls, consts)
 
     for path, tree in trees.items():
-        walk(tree, path.relative_to(pkg).as_posix(), None)
+        walk(tree, path.relative_to(pkg).as_posix(), None, _constants(tree))
     return out
 
 
-def _is_set(calls, names, param, idx, method) -> bool:
+def _is_set(calls, names, param, idx, method, default) -> bool:
+    """Some call passes ``param`` a value other than its default, or
+    spreads ``*``/``**`` into a call of that name."""
     shift = 1 if method else 0  # a bound call leaves ``self`` implicit
-    return any(
-        spread or param in kws or (idx is not None and idx < npos + shift)
-        for name in names
-        for npos, kws, spread in calls.get(name, ())
-    )
+
+    def sets(args, kws, spread):
+        if spread:
+            return True
+        if param in kws:
+            return _value(kws[param]) not in default
+        at = -1 if idx is None else idx - shift
+        return 0 <= at < len(args) and _value(args[at]) not in default
+
+    return any(sets(*c) for name in names for c in calls.get(name, ()))
 
 
 def test_every_defaulted_parameter_has_a_caller():
     """A defaulted parameter that no caller sets is a constant with a
     knob on it: fold it into its constant. The census reads the AST of
     the package and its callers (package, scripts/, bench.py,
-    perfbench/, __spark_entry__.py); a call sets a parameter by keyword,
-    by position, or through ``*``/``**`` spreading. Parameters only a
+    perfbench/, __spark_entry__.py); a call sets a parameter when it
+    passes it, by keyword or by position, a value other than its
+    default, or spreads ``*``/``**`` into the call. Parameters only a
     test sets live in TEST_ONLY_PARAMS, and an entry goes stale when a
     real caller appears, the parameter goes, or its test stops setting
     it."""

@@ -8,7 +8,9 @@ session cannot be built inside the test JVM (getOrCreate returns the
 already-configured one; newSession inherits its SparkConf), so the
 check runs scripts/driver_emu.py on the env-sensitive queries in a
 subprocess — same mechanism as the driver invoking ``__spark_entry__``
-in its own interpreter.
+in its own interpreter. Given query names, driver_emu skips ``entry``,
+so the first of them meets a session nothing has configured and its
+own load path must apply the session invariants.
 """
 
 from __future__ import annotations

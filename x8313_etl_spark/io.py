@@ -105,11 +105,11 @@ def read_csv(
     spark: SparkSession,
     path: str,
     schema: StructType,
-    header: bool = True,
 ) -> DataFrame:
-    """S3: comma-separated ingest with explicit schema (no sampling pass at scale)."""
+    """S3: comma-separated ingest with a header line and an explicit
+    schema (no sampling pass at scale)."""
     ensure_session_invariants(spark)
-    return spark.read.csv(path, schema=schema, header=header)
+    return spark.read.csv(path, schema=schema, header=True)
 
 
 def read_jsonl(spark: SparkSession, path: str, schema: StructType) -> DataFrame:

@@ -46,6 +46,11 @@ from pyspark.sql import DataFrame
 from ..audit import audited_checkpoint
 
 DEFAULT_QSCALE = 1_000
+#: power iteration: fixed rounds, the ~scale the iterate is normalized
+#: to, and the truncating divisor that pre-shrinks matrix entries
+POWER_ROUNDS = 4
+POWER_SCALE = 1_000_000
+POWER_CDIV = 1_000
 
 
 def quantized_vec(vec, qscale: int = DEFAULT_QSCALE):
@@ -145,31 +150,29 @@ def full_matrix(com: DataFrame) -> DataFrame:
 def pca_power_topvec(
     cmat: DataFrame,
     dim: int,
-    rounds: int = 4,
-    scale: int = 1_000_000,
-    cdiv: int = 1_000,
     ledger_key: str = "covariance.power",
 ) -> DataFrame:
-    """(i, v): the dominant eigenvector direction after ``rounds`` fixed
-    power-iteration steps, L∞-normalized to ~``scale`` integer units.
+    """(i, v): the dominant eigenvector direction after ``POWER_ROUNDS``
+    fixed power-iteration steps, L∞-normalized to ~``POWER_SCALE``
+    integer units.
 
     ``cmat`` is the full symmetric (i, j, c) integer matrix; entries
-    are pre-shrunk by truncating ``div cdiv`` so the matvec
+    are pre-shrunk by truncating ``div POWER_CDIV`` so the matvec
     ``Σ_j c'·v`` stays far from int64 range (headroom documented in the
     unit test). Each round: matvec → m = max|raw| → v = raw div
-    (m div scale + 1) — the ``+1`` keeps the divisor ≥ 1 and the result
-    ~scale. Covariance is PSD, so the dominant eigenvalue is
+    (m div POWER_SCALE + 1) — the ``+1`` keeps the divisor ≥ 1 and the
+    result ~POWER_SCALE. Covariance is PSD, so the dominant eigenvalue is
     non-negative and the iteration cannot sign-flip between rounds.
-    Deterministic start: v₀ = scale for every dimension."""
+    Deterministic start: v₀ = POWER_SCALE for every dimension."""
     spark = cmat.sparkSession
     cm = audited_checkpoint(
         f"{ledger_key}.cmat",
-        cmat.select("i", "j", F.expr(f"c div {cdiv}").alias("c")),
+        cmat.select("i", "j", F.expr(f"c div {POWER_CDIV}").alias("c")),
     )
     v = spark.range(1, dim + 1).select(
-        F.col("id").cast("int").alias("i"), F.lit(scale).cast("bigint").alias("v")
+        F.col("id").cast("int").alias("i"), F.lit(POWER_SCALE).cast("bigint").alias("v")
     )
-    for _ in range(rounds):
+    for _ in range(POWER_ROUNDS):
         raw = (
             cm.join(v.select(F.col("i").alias("j"), "v"), "j")
             .groupBy("i")
@@ -180,6 +183,6 @@ def pca_power_topvec(
         # single-row scalar cross — the g1 per-iteration idiom
         v = raw.crossJoin(F.broadcast(m)).select(
             "i",
-            F.expr(f"raw div (m div {scale} + 1)").alias("v"),
+            F.expr(f"raw div (m div {POWER_SCALE} + 1)").alias("v"),
         )
     return v

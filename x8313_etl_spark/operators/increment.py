@@ -22,7 +22,7 @@ can regenerate it exactly):
    bands (one shuffle keyed by band value — the index side can be
    pre-bucketed by band key on disk, making the probe a co-located
    join).
-3. Exact shingle-Jaccard verify at ``threshold`` on the candidates.
+3. Exact shingle-Jaccard verify at ``NEAR_DUP_THRESHOLD`` on the candidates.
 4. Per batch doc: top-1 match by (jaccard DESC, index id ASC) and an
    ``is_dup`` verdict, LEFT-joined so every batch doc gets a row
    (non-dups carry NULL match columns) — the keep/drop decision an
@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame, Window
 
 from .bandjoin import DEFAULT_MAX_BUCKET_SIZE, drop_hot_buckets
 from .minhash import (
+    NEAR_DUP_THRESHOLD,
     band_table,
     jaccard_verify,
     shingle_table,
@@ -85,7 +86,6 @@ def top1_verdict(ids: DataFrame, verified: DataFrame) -> DataFrame:
 def incremental_near_dups(
     index_docs: DataFrame | None,
     batch_docs: DataFrame,
-    threshold: float = 0.3,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
     index_sig: DataFrame | None = None,
     index_sh: DataFrame | None = None,
@@ -94,7 +94,7 @@ def incremental_near_dups(
 
     ``dup_of`` is the index doc with the highest verified Jaccard
     (ties → min index id); NULL (with ``is_dup = false``) when no
-    index doc collides on any band with Jaccard ≥ ``threshold``.
+    index doc collides on any band with Jaccard ≥ ``NEAR_DUP_THRESHOLD``.
     Batch docs with fewer than 3 words have no shingles and are
     never dups under this metric (same contract as
     ``minhash.near_dup_pairs``).
@@ -165,5 +165,7 @@ def incremental_near_dups(
         band_table(sig_old, "old_id"), ("band", "key"), max_bucket_size
     )
     cand = b_new.join(b_old, ["band", "key"]).select("new_id", "old_id").distinct()
-    verified = jaccard_verify(cand, sh_new, sh_old, "new_id", "old_id", threshold)
+    verified = jaccard_verify(
+        cand, sh_new, sh_old, "new_id", "old_id", NEAR_DUP_THRESHOLD
+    )
     return top1_verdict(batch_docs.select("doc_id"), verified)

@@ -55,6 +55,7 @@ from pyspark.sql import DataFrame
 from .bandjoin import DEFAULT_MAX_BUCKET_SIZE, drop_hot_buckets
 from .increment import top1_verdict
 from .minhash import (
+    NEAR_DUP_THRESHOLD,
     band_table,
     jaccard_verify,
     shingle_table,
@@ -71,11 +72,9 @@ class IngestDedupSink(VersionedStateDir):
     def __init__(
         self,
         state_root: str,
-        threshold: float = 0.3,
         max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
     ) -> None:
         super().__init__(state_root)
-        self.threshold = threshold
         self.max_bucket_size = max_bucket_size
 
     def init_index(self, index_docs: DataFrame) -> None:
@@ -139,7 +138,7 @@ class IngestDedupSink(VersionedStateDir):
 
         sh_all = sh_old.unionByName(bsh)
         verified = jaccard_verify(
-            cand, bsh, sh_all, "new_id", "old_id", self.threshold
+            cand, bsh, sh_all, "new_id", "old_id", NEAR_DUP_THRESHOLD
         )
         self._commit_state(
             batch_id,

@@ -52,6 +52,8 @@ ROWS_PER_BAND = 4
 assert BANDS * ROWS_PER_BAND == N_HASHES
 
 _SHINGLE_K = 3
+#: exact shingle Jaccard a verified near-dup pair reaches
+NEAR_DUP_THRESHOLD = 0.3
 
 
 def shingle_hashes(sh: Column) -> Column:
@@ -97,12 +99,11 @@ PERM_A = [(i * 2_654_435_761 + 1) % MINHASH_P for i in range(N_HASHES)]
 PERM_B = [(i * 40_503 + 17) % MINHASH_P for i in range(N_HASHES)]
 
 
-def shingle_table(
-    docs: DataFrame, id_col: str, text_col: str, k: int = _SHINGLE_K
-) -> DataFrame:
+def shingle_table(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(doc_id, sh): distinct shingle arrays, shingle-less docs dropped."""
     return docs.select(
-        F.col(id_col).alias("doc_id"), shingles_rx(F.col(text_col), k).alias("sh")
+        F.col(id_col).alias("doc_id"),
+        shingles_rx(F.col(text_col), _SHINGLE_K).alias("sh"),
     ).filter(F.size("sh") > 0)
 
 
@@ -277,18 +278,16 @@ def jaccard_verify(
 
 def near_dup_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.3,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
     log_dropped: bool = False,
     on_hot: str = "drop",
 ) -> DataFrame:
-    """LSH candidates + exact-Jaccard verify → (doc_a, doc_b, jaccard).
+    """LSH candidates + exact-Jaccard verify of ``docs`` (doc_id, text) →
+    (doc_a, doc_b, jaccard).
 
-    Emits each qualifying pair once (doc_a < doc_b). ``threshold`` is on
-    the EXACT shingle Jaccard of candidates; banding only bounds which
-    pairs get verified.
+    Emits each qualifying pair once (doc_a < doc_b).
+    ``NEAR_DUP_THRESHOLD`` is on the EXACT shingle Jaccard of candidates;
+    banding only bounds which pairs get verified.
 
     ``max_bucket_size`` caps band buckets (operators/bandjoin.py): a
     degenerate bucket of B docs otherwise emits B² candidates. The
@@ -335,7 +334,7 @@ def near_dup_pairs(
     # once while sh materializes, and the signature kernel reads the
     # cached arrays (measured on the l2 path, see OPTIMIZATION_r13.md).
     # sig's one consumer is the pooled `banded`, so sig is not pooled.
-    sh = swap_persist("minhash.sh", shingle_table(docs, id_col, text_col))
+    sh = swap_persist("minhash.sh", shingle_table(docs, "doc_id", "text"))
     # `banded` has two or more consumers in every mode (the band join's
     # two sides, plus the guard's size agg): persist the slim
     # (id, band, key) table so signatures and keys are computed once.
@@ -363,7 +362,7 @@ def near_dup_pairs(
             log_label="minhash-lsh",
         )
 
-    return jaccard_verify(cand, sh, sh, "doc_a", "doc_b", threshold)
+    return jaccard_verify(cand, sh, sh, "doc_a", "doc_b", NEAR_DUP_THRESHOLD)
 
 
 def band_candidate_prob(s: float, bands: int, rows: int) -> float:
@@ -373,30 +372,30 @@ def band_candidate_prob(s: float, bands: int, rows: int) -> float:
     return 1.0 - (1.0 - s**rows) ** bands
 
 
-def tune_bands(threshold: float, n_hashes: int = N_HASHES) -> tuple[int, int]:
-    """Pick (bands, rows) with bands*rows == n_hashes minimizing the
+def tune_bands(threshold: float) -> tuple[int, int]:
+    """Pick (bands, rows) with bands*rows == N_HASHES minimizing the
     S-curve's total error mass around ``threshold``: the integral of
     P(candidate) below the threshold (false-positive area, paid in
     verify-join work) plus the integral of P(miss) above it
     (false-negative area, paid in recall). Candidates are the divisor
-    pairs of n_hashes, so the search space is tiny and exact; the
+    pairs of N_HASHES, so the search space is tiny and exact; the
     integrals are midpoint sums over 1000 cells, so the pick is
     deterministic.
 
     Why it matters at 100 TB: the fixed (8, 4) default centers the
     curve at (1/8)^(1/4) ≈ 0.595. A pipeline hunting t = 0.9 near-exact
     dups with that split floods the verify join with sub-threshold
-    candidates; tune_bands(0.9, 32) -> (2, 16) moves the knee to ≈ 0.96
+    candidates; tune_bands(0.9) -> (2, 16) moves the knee to ≈ 0.96
     and the false-positive area drops by ~20x. The tuner makes that
     trade explicit instead of hard-coded."""
     if not 0.0 < threshold < 1.0:
         raise ValueError(f"threshold must be in (0,1): {threshold}")
     steps = 1000
     best: tuple[float, int, int] | None = None
-    for rows in range(1, n_hashes + 1):
-        if n_hashes % rows:
+    for rows in range(1, N_HASHES + 1):
+        if N_HASHES % rows:
             continue
-        bands = n_hashes // rows
+        bands = N_HASHES // rows
         err = 0.0
         for i in range(steps):
             s = (i + 0.5) / steps

@@ -87,15 +87,19 @@ def media_features(mm: DataFrame) -> DataFrame:
 FRAME_SCHEMA = (
     "doc_id bigint, frame_idx int, frame_offset_ms bigint, frame_md5 string"
 )
+#: frames sampled per media row
+N_FRAMES = 4
+#: longest side of a planned resize box
+MAX_SIDE = 32
 
 
-def sample_frames(mm: DataFrame, n_frames: int = 4) -> DataFrame:
-    """Frame sampling plumbing: each media row fans out to ``n_frames``
+def sample_frames(mm: DataFrame) -> DataFrame:
+    """Frame sampling plumbing: each media row fans out to ``N_FRAMES``
     rows with deterministic offsets (md5-derived duration stand-in,
     evenly spaced — exactly the shape a real ffmpeg-backed sampler
     yields, one row per decoded frame). Pure function of the bytes →
     SQL twin exists. Fan-out is the scale knob: output rows =
-    n_frames × input rows, so partition AFTER sampling when frames are
+    N_FRAMES × input rows, so partition AFTER sampling when frames are
     heavy."""
 
     def extract(batches: Iterator) -> Iterator:
@@ -109,8 +113,8 @@ def sample_frames(mm: DataFrame, n_frames: int = 4) -> DataFrame:
                 b = bytes(content)
                 d = hashlib.md5(b).hexdigest()
                 duration_ms = int(d[4:8], 16) % 60_000 + 1_000  # fake probe
-                step = duration_ms // n_frames
-                for i in range(n_frames):
+                step = duration_ms // N_FRAMES
+                for i in range(N_FRAMES):
                     off = i * step
                     rows["doc_id"].append(doc_id)
                     rows["frame_idx"].append(i)
@@ -125,9 +129,9 @@ def sample_frames(mm: DataFrame, n_frames: int = 4) -> DataFrame:
     return mm.mapInPandas(extract, schema=FRAME_SCHEMA)
 
 
-def resize_plan(features: DataFrame, max_side: int = 32) -> DataFrame:
+def resize_plan(features: DataFrame) -> DataFrame:
     """Resize planning over extracted dimensions: compute the integer
-    target box (longest side → ``max_side``, aspect preserved via exact
+    target box (longest side → ``MAX_SIDE``, aspect preserved via exact
     integer arithmetic — no float rounding ambiguity cross-engine). The
     pixel resample itself belongs to the codec; this is the
     distributed part that decides what every worker does."""
@@ -137,8 +141,8 @@ def resize_plan(features: DataFrame, max_side: int = 32) -> DataFrame:
         "doc_id",
         "width",
         "height",
-        F.floor((w * max_side) / longest).cast("int").alias("out_width"),
-        F.floor((h * max_side) / longest).cast("int").alias("out_height"),
-        F.lit(max_side).alias("scale_num"),
+        F.floor((w * MAX_SIDE) / longest).cast("int").alias("out_width"),
+        F.floor((h * MAX_SIDE) / longest).cast("int").alias("out_height"),
+        F.lit(MAX_SIDE).alias("scale_num"),
         longest.cast("int").alias("scale_den"),
     )

@@ -7,7 +7,7 @@ AQE). For ``how`` in ('inner', 'left') the transform is
 result-identical to the plain join — only the physical key distribution
 changes — so the DuckDB twin is simply the unsalted join. Other join
 types are rejected: an unmatched SMALL-side row is replicated once per
-salt by the explode, so 'right'/'full' would emit n_salts null-padded
+salt by the explode, so 'right'/'full' would emit N_SALTS null-padded
 duplicates of it; supporting them would need a post-join dedup that
 costs more than the salting saves.
 
@@ -29,6 +29,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 _SALT = "__x8313_salt"
+#: salt values S: a hot key spreads over this many shuffle partitions
+N_SALTS = 16
 
 
 def salted_join(
@@ -36,11 +38,10 @@ def salted_join(
     small: DataFrame,
     on: str,
     salt_by: str,
-    n_salts: int = 16,
     how: str = "inner",
 ) -> DataFrame:
     """Join ``big`` ⋈ ``small`` on column ``on`` with the big side's
-    hot keys spread over ``n_salts`` shuffle partitions.
+    hot keys spread over ``N_SALTS`` shuffle partitions.
 
     ``salt_by`` is any well-distributed column of ``big`` (a unique id)
     used to derive the deterministic salt. Only 'inner' and 'left' are
@@ -50,13 +51,13 @@ def salted_join(
     if how not in ("inner", "left"):
         raise ValueError(
             f"salted_join supports how='inner'|'left', got {how!r}: the "
-            "small side is replicated n_salts times, so outer variants "
+            "small side is replicated N_SALTS times, so outer variants "
             "would duplicate its unmatched rows"
         )
     salted_big = big.withColumn(
-        _SALT, F.pmod(F.xxhash64(F.col(salt_by)), F.lit(n_salts)).cast("int")
+        _SALT, F.pmod(F.xxhash64(F.col(salt_by)), F.lit(N_SALTS)).cast("int")
     )
-    salts = F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1))).alias(_SALT)
+    salts = F.explode(F.sequence(F.lit(0), F.lit(N_SALTS - 1))).alias(_SALT)
     salted_small = small.select("*", salts)
     joined = salted_big.join(salted_small, on=[on, _SALT], how=how)
     return joined.drop(_SALT)

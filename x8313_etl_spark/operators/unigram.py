@@ -154,7 +154,7 @@ def segment_words(
 def train_unigram(
     words: DataFrame,
     vocab_size: int,
-    rounds: int = 4,
+    rounds: int,
     max_piece_len: int = MAX_PIECE_LEN,
 ) -> tuple[dict[str, int], dict[str, int]]:
     """Viterbi-EM over the interned word table; returns (counts,

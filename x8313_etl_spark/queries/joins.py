@@ -410,7 +410,7 @@ def j12_salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_custkey").alias("user_id"), F.col("c_mktsegment")
     )
     return (
-        salted_join(e, c, on="user_id", salt_by="event_id", n_salts=16)
+        salted_join(e, c, on="user_id", salt_by="event_id")
         .groupBy("user_id", "c_mktsegment")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )

@@ -143,7 +143,7 @@ def l2_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (see operators/minhash.py scale notes).
     """
     d = load_table(spark, sf_dir, "documents")
-    return near_dup_pairs(d, "doc_id", "text", threshold=0.3)
+    return near_dup_pairs(d)
 
 
 @register(

@@ -31,6 +31,7 @@ from ..functions.text import (
 )
 from ..io import load_table
 from ..operators.concomp import connected_components
+from ..operators.minhash import NEAR_DUP_THRESHOLD
 from ..registry import register
 
 _STOPWORDS = ("the", "a", "of", "and", "to")
@@ -1321,7 +1322,6 @@ def p_er_blocked_multikey(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _DELTA_MOD = 5  # doc_id % 5 == 0 is the arriving batch; the rest is the index
-_INC_TAU = 0.3
 
 
 def _incremental_dedup_sql() -> str:
@@ -1345,7 +1345,7 @@ best AS (
            row_number() OVER (
              PARTITION BY new_id ORDER BY jaccard DESC, old_id
            ) AS rn
-    FROM pairs WHERE n_band_hits > 0 AND jaccard >= {_INC_TAU}
+    FROM pairs WHERE n_band_hits > 0 AND jaccard >= {NEAR_DUP_THRESHOLD}
   ) WHERE rn = 1
 )
 SELECT d.doc_id,
@@ -1391,7 +1391,7 @@ def p_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     index = d.filter(F.col("doc_id") % _DELTA_MOD != 0)
     batch = d.filter(F.col("doc_id") % _DELTA_MOD == 0)
-    return incremental_near_dups(index, batch, threshold=_INC_TAU)
+    return incremental_near_dups(index, batch)
 
 
 def _golden_sql() -> str:
@@ -1971,7 +1971,7 @@ def _containment_over(docs: DataFrame) -> DataFrame:
 
     sh = swap_persist(
         "contain.sh",
-        shingle_table(docs, "doc_id", "text", 3).filter(F.size("sh") > 0),
+        shingle_table(docs, "doc_id", "text").filter(F.size("sh") > 0),
     )
     sizes = sh.select("doc_id", F.size("sh").alias("sz"))
     post = sh.select("doc_id", F.explode("sh").alias("shingle"))
@@ -2473,7 +2473,7 @@ def p_dedup_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism
     )
-    sh = swap_persist("dedupeval.sh", shingle_table(d, "doc_id", "text", 3))
+    sh = swap_persist("dedupeval.sh", shingle_table(d, "doc_id", "text"))
     # sig derives from the pooled sh — one regex shingling pass per
     # corpus, not two (signature_from_shingles, r13 optimization round);
     # repartition above spreads that pass over the cores (single-file

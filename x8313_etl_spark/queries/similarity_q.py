@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from ..functions.vector import dot, norm, sql_cosine
 from ..io import load_table
 from ..operators.concomp import connected_components
+from ..operators.covariance import POWER_CDIV, POWER_ROUNDS, POWER_SCALE
 from ..registry import register
 from ..session import default_parallelism
 
@@ -1712,9 +1713,6 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _PCA_DIM = 64
 _PCA_Q = 1_000
-_PCA_ROUNDS = 4
-_PCA_SCALE = 1_000_000
-_PCA_CDIV = 1_000
 
 #: Shared with a26_dim_covariance's oracle (aggregates.py imports it):
 #: integer co-moment table over the floor-quantized embedding grid.
@@ -1744,18 +1742,18 @@ def _pca_sql() -> str:
     ctes = (
         f"WITH {PCA_COV_CTES},\n"
         f"""cm AS MATERIALIZED (
-  SELECT i, j, c // {_PCA_CDIV} AS c FROM (
+  SELECT i, j, c // {POWER_CDIV} AS c FROM (
     SELECT i, j, cov_num AS c FROM cov
     UNION ALL
     SELECT j AS i, i AS j, cov_num AS c FROM cov WHERE i <> j
   )
 ),
 v0 AS (
-  SELECT CAST(i AS INTEGER) AS i, CAST({_PCA_SCALE} AS BIGINT) AS v
+  SELECT CAST(i AS INTEGER) AS i, CAST({POWER_SCALE} AS BIGINT) AS v
   FROM (SELECT unnest(generate_series(1, {_PCA_DIM})) AS i)
 )"""
     )
-    for r in range(1, _PCA_ROUNDS + 1):
+    for r in range(1, POWER_ROUNDS + 1):
         ctes += f""",
 r{r} AS MATERIALIZED (
   SELECT c.i, CAST(sum(c.c * v.v) AS BIGINT) AS raw
@@ -1763,10 +1761,10 @@ r{r} AS MATERIALIZED (
 ),
 v{r} AS MATERIALIZED (
   SELECT i,
-         raw // ((SELECT max(abs(raw)) FROM r{r}) // {_PCA_SCALE} + 1) AS v
+         raw // ((SELECT max(abs(raw)) FROM r{r}) // {POWER_SCALE} + 1) AS v
   FROM r{r}
 )"""
-    return ctes + f"\nSELECT i, CAST(v AS BIGINT) AS v FROM v{_PCA_ROUNDS}"
+    return ctes + f"\nSELECT i, CAST(v AS BIGINT) AS v FROM v{POWER_ROUNDS}"
 
 
 @register(
@@ -1802,9 +1800,6 @@ def sim_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = pca_power_topvec(
         full_matrix(com),
         _PCA_DIM,
-        rounds=_PCA_ROUNDS,
-        scale=_PCA_SCALE,
-        cdiv=_PCA_CDIV,
         ledger_key="sim_pca.power",
     )
     return v.select(F.col("i").cast("int").alias("i"), "v")

@@ -62,7 +62,7 @@ def s3_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = scratch(f"s3_supplier_csv_{_tag(sf_dir)}")
     sup = load_table(spark, sf_dir, "supplier")
     sup.write.mode("overwrite").csv(path, header=True)
-    return read_csv(spark, path, SUPPLIER, header=True)
+    return read_csv(spark, path, SUPPLIER)
 
 
 @register(

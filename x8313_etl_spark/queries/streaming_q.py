@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..functions.numeric import dsum, sql_dsum
 from ..io import load_table, stream_events
+from ..operators.minhash import NEAR_DUP_THRESHOLD
 from ..registry import register
 from ..streaming import run_to_memory
 
@@ -267,7 +268,7 @@ def t7_stateful_counter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     s = stream_events(spark, sf_dir)
     if not has_state_server_deps():
-        return stateful_merge_counter(spark, s, key="user_id")
+        return stateful_merge_counter(spark, s)
 
     counted = s.groupBy("user_id").transformWithStateInPandas(
         statefulProcessor=UserCounter(),
@@ -975,7 +976,6 @@ def t17_stream_delta_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _T18_DELTA_MOD = 5  # pipeline_q's batch/index split, shared convention
-_T18_TAU = 0.3
 
 
 def _t18_sql() -> str:
@@ -1000,7 +1000,7 @@ best AS (
            row_number() OVER (
              PARTITION BY new_id ORDER BY jaccard DESC, old_id
            ) AS rn
-    FROM pairs WHERE n_band_hits > 0 AND jaccard >= {_T18_TAU}
+    FROM pairs WHERE n_band_hits > 0 AND jaccard >= {NEAR_DUP_THRESHOLD}
   ) WHERE rn = 1
 )
 SELECT d.doc_id,
@@ -1099,7 +1099,7 @@ def t18_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(tmp, ignore_errors=True)
         os.utime(dst, (t0 + 10 * i, t0 + 10 * i))
 
-    sink = IngestDedupSink(os.path.join(work, "state"), threshold=_T18_TAU)
+    sink = IngestDedupSink(os.path.join(work, "state"))
     sink.init_index(index)
     stream = (
         spark.readStream.schema("doc_id long, text string")

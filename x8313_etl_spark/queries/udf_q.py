@@ -257,7 +257,7 @@ def x8_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     mm = attach_binary(d, "doc_id", "text", modality="video")
-    return sample_frames(mm, n_frames=4)
+    return sample_frames(mm)
 
 
 @register(
@@ -287,7 +287,7 @@ def x9_resize_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     mm = attach_binary(d, "doc_id", "text", modality="image")
-    return resize_plan(media_features(mm), max_side=32)
+    return resize_plan(media_features(mm))
 
 
 @register(

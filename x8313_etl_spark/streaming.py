@@ -177,12 +177,8 @@ def run_to_memory(
     return spark.table(name)
 
 
-def stateful_merge_counter(
-    spark: SparkSession,
-    stream: DataFrame,
-    key: str = "user_id",
-) -> DataFrame:
-    """Custom cross-batch stateful per-key counters WITHOUT the Python
+def stateful_merge_counter(spark: SparkSession, stream: DataFrame) -> DataFrame:
+    """Custom cross-batch stateful per-``user_id`` counters WITHOUT the Python
     state-server: state lives as a compacted parquet table that each
     microbatch merges into (foreachBatch → batch-agg → union with prior
     state → re-agg → write next state version).
@@ -199,14 +195,14 @@ def stateful_merge_counter(
     latest: dict[str, str | None] = {"dir": None}
 
     def process(bdf: DataFrame, batch_id: int) -> None:
-        agg = bdf.groupBy(key).agg(
+        agg = bdf.groupBy("user_id").agg(
             F.count(F.lit(1)).alias("n_events"), F.max("value").alias("max_value")
         )
         if latest["dir"] is not None:
             prev = spark.read.parquet(latest["dir"])
             agg = (
                 prev.unionByName(agg)
-                .groupBy(key)
+                .groupBy("user_id")
                 .agg(
                     F.sum("n_events").alias("n_events"),
                     F.max("max_value").alias("max_value"),
