@@ -85,7 +85,7 @@ def test_training_recovers_planted_pieces(spark):
         "efef abab cdef abcd",
     ] * 3
     words = distinct_words(_docs(spark, texts)).persist()
-    counts, costs = train_unigram(words, vocab_size=9, rounds=3, max_piece_len=3)
+    counts, costs = train_unigram(words, vocab_size=9, max_piece_len=3)
     for planted in ("ab", "cd", "ef"):
         assert planted in counts, counts
     assert viterbi_path("abcd", costs) == ("ab", "cd")
@@ -136,7 +136,7 @@ def test_round_costs_monotone_nonincreasing(spark):
 def test_single_chars_survive_aggressive_pruning(spark):
     texts = ["ab ab ab cd cd"]
     words = distinct_words(_docs(spark, texts)).persist()
-    counts, costs = train_unigram(words, vocab_size=1, rounds=2, max_piece_len=2)
+    counts, costs = train_unigram(words, vocab_size=1, max_piece_len=2)
     for ch in "abcd":
         assert ch in counts
     words.unpersist()
@@ -145,8 +145,8 @@ def test_single_chars_survive_aggressive_pruning(spark):
 def test_training_is_deterministic(spark):
     texts = ["abcd cdab abab", "efcd abef cdcd"]
     words = distinct_words(_docs(spark, texts)).persist()
-    a = train_unigram(words, vocab_size=8, rounds=2, max_piece_len=3)
-    b = train_unigram(words, vocab_size=8, rounds=2, max_piece_len=3)
+    a = train_unigram(words, vocab_size=8, max_piece_len=3)
+    b = train_unigram(words, vocab_size=8, max_piece_len=3)
     assert a == b
     words.unpersist()
 
@@ -155,7 +155,7 @@ def test_encode_corpus_reassembles_in_order(spark):
     texts = ["abcd ab", "cdcd abcd"]
     docs = _docs(spark, texts)
     words = distinct_words(docs).persist()
-    _, costs = train_unigram(words, vocab_size=9, rounds=3, max_piece_len=2)
+    _, costs = train_unigram(words, vocab_size=9, max_piece_len=2)
     got = {r.doc_id: r.pieces for r in encode_corpus(docs, costs, max_piece_len=2).collect()}
     for i, t in enumerate(texts):
         expect = [
@@ -171,7 +171,7 @@ def test_fixture_vocab_learns_whole_words(spark, sf_dir):
     # (up-front seed pruning regressed this to char fragments).
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     words = distinct_words(docs).persist()
-    counts, costs = train_unigram(words, vocab_size=64, rounds=4)
+    counts, costs = train_unigram(words, vocab_size=64)
     for word in ("table", "customer", "window"):
         assert viterbi_path(word, costs) == (word,), (word, counts)
     words.unpersist()
@@ -180,7 +180,7 @@ def test_fixture_vocab_learns_whole_words(spark, sf_dir):
 def test_encode_preserves_empty_docs(spark):
     docs = _docs(spark, ["ab ab", ""])
     words = distinct_words(docs).persist()
-    _, costs = train_unigram(words, vocab_size=4, rounds=1, max_piece_len=2)
+    _, costs = train_unigram(words, vocab_size=4, max_piece_len=2)
     got = {r.doc_id: r.pieces for r in encode_corpus(docs, costs, max_piece_len=2).collect()}
     assert set(got) == {0, 1}
     assert got[1] == []

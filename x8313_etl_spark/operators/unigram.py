@@ -46,6 +46,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql.functions import pandas_udf
 
 MAX_PIECE_LEN = 8
+#: Viterbi-EM rounds; the last one prunes to the target vocabulary
+EM_ROUNDS = 4
 COST_SCALE = 1_000_000  # micro-nats
 
 
@@ -154,7 +156,6 @@ def segment_words(
 def train_unigram(
     words: DataFrame,
     vocab_size: int,
-    rounds: int,
     max_piece_len: int = MAX_PIECE_LEN,
 ) -> tuple[dict[str, int], dict[str, int]]:
     """Viterbi-EM over the interned word table; returns (counts,
@@ -176,7 +177,7 @@ def train_unigram(
         r["piece"]: int(r["count"])
         for r in seed_vocab(words, vocab_size * 4, max_piece_len).collect()
     }
-    for r in range(rounds):
+    for r in range(EM_ROUNDS):
         costs = _costs_from_counts(counts)
         seg = segment_words(words, costs, max_piece_len)
         new = (
@@ -193,7 +194,7 @@ def train_unigram(
                 observed[p] = 1
         target = (
             vocab_size
-            if r == rounds - 1
+            if r == EM_ROUNDS - 1
             else max(vocab_size, int(len(counts) * 0.75))
         )
         counts = _prune(observed, target)

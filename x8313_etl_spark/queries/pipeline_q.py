@@ -1514,7 +1514,6 @@ def p_er_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _UNI_VOCAB = 64
-_UNI_ROUNDS = 4
 
 def _unigram_costs(spark: SparkSession, sf_dir: str) -> dict[str, int]:
     """Train the unigram LM from the fixture documents. Deliberately
@@ -1529,9 +1528,7 @@ def _unigram_costs(spark: SparkSession, sf_dir: str) -> dict[str, int]:
     docs = load_table(spark, sf_dir, "documents")
     words = distinct_words(docs).persist()
     try:
-        _counts, costs = train_unigram(
-            words, vocab_size=_UNI_VOCAB, rounds=_UNI_ROUNDS
-        )
+        _counts, costs = train_unigram(words, vocab_size=_UNI_VOCAB)
     finally:
         words.unpersist()
     return costs
