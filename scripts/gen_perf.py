@@ -115,18 +115,14 @@ def render(bench: dict, proxy: dict) -> str:
         "on a 50k-doc replica (10× sf0.1, per-copy prefix tokens so copies "
         "are near- not exact-dups) the full MinHash near-dup pipeline — "
         "sketch, banded LSH, hot-bucket guard, exact-Jaccard verify — runs "
-        "in 6.7 s on local[32] and emits 250,383 verified pairs. The "
-        "all-native sketch path (operators/minhash.py `signature_table`: "
-        "explode → per-row md5 → 32 native min-aggs, map-side "
-        "partial-combined to one row per doc) is what made that 3.9× faster "
-        "than the higher-order-fold form at this scale; the same corpus "
-        "through the brute-force twin would be a 2.5B-pair scan. The SimHash "
-        "pipeline got the same treatment (queries/pipeline_q.py "
+        "in 6.7 s on local[32] and emits 250,383 verified pairs; the same "
+        "corpus through the brute-force twin would be a 2.5B-pair scan. The "
+        "SimHash pipeline uses an all-native sketch (queries/pipeline_q.py "
         "`simhash_table_native`: 31 per-bit ±1 native sums): at 50k docs the "
         "full banded pipeline emits 12.45M verified pairs in 13.1 s, where "
-        "the fold-form sketch left the candidate stage alone at 163 s. Both "
-        "sketches cost ~0.2-0.4 s of extra fixed latency at sf0.1 (one more "
-        "exchange) — the deliberate trade for the scale path. `sim_ivf_topk` "
+        "the fold-form sketch left the candidate stage alone at 163 s. The "
+        "native sketch costs ~0.2-0.4 s of extra fixed latency at sf0.1 (one "
+        "more exchange) — the deliberate trade for the scale path. `sim_ivf_topk` "
         "at 10× embeddings went 16.1s → 3.8s (and 0.94s → 0.64s at sf0.1) "
         "from two plan fixes: persist the centroid-assignment table (it "
         "feeds both sides of the bucket search — recomputing it per branch "
@@ -134,8 +130,7 @@ def render(bench: dict, proxy: dict) -> str:
         "cent_id has only K=16 distinct keys, so its parallelism collapses "
         "to the hottest bucket). A 64-term unrolled native dot product was "
         "also tried and measured 3× slower than the higher-order fold "
-        "(functions/vector.py `dot_fixed` documents the negative result — "
-        "large flat expression trees fall out of efficient codegen).",
+        "(large flat expression trees fall out of efficient codegen).",
         "",
         "Full-bench-set 10× sweep (round 4): the ENTIRE 24-query bench set "
         "was run once on an assembled ~sf1 directory (6M-row lineitem / "
@@ -154,23 +149,6 @@ def render(bench: dict, proxy: dict) -> str:
         "output-volume density, the same effect the r3 fixture "
         "regeneration had on the text near-dup family, not a plan "
         "regression).",
-        "",
-        "Hot-bucket handling cost (round 4): `operators/bandjoin.py` offers "
-        "two postures over the `max_bucket_size` cap — `drop` (the default "
-        "guard: bounded work, recall loss on rows confined to hot buckets) "
-        "and `salt` (`salted_band_self_join`: hot buckets split into "
-        "K = ceil(B/salt_block) blocks and paired through triangular "
-        "(block_i ≤ block_j) join keys, so the bucket's B² candidates — "
-        "full recall IS B² work; there is no cheaper complete answer — run "
-        "as K(K+1)/2 parallel tasks of ≤ salt_block² candidates instead of "
-        "one straggler). Measured on a crafted 5000-doc near-identical "
-        "cluster (cap 1000, salt_block 256 → 210 tasks): the guard emits 0 "
-        "pairs, the salted join emits all 12,497,500 in ~13 s on local[32]; "
-        "the mixed-bucket equivalence test pins salted ≡ unguarded exactly. "
-        "Cost model: hot-row replication is (K+1)/2 per join side — extra "
-        "shuffled volume ≈ candidate volume / salt_block — so `salt` bounds "
-        "latency, not volume; `drop` stays the right default for "
-        "boilerplate mega-buckets that carry no signal.",
         "",
         "BM25 plan note (round 4): `p_bm25_topk` broadcast-prunes the "
         "(doc, term, tf) table with the query term set (a semi-join — only "

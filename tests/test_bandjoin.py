@@ -3,14 +3,12 @@
 The degenerate corpus every real crawl contains — thousands of
 near-identical boilerplate documents — collapses LSH buckets into one
 mega-bucket. These tests pin the promised behavior: the pipeline
-completes with defaults and full pair output below the cap, drops (and
-reports) mega-buckets above it, and is a provable no-op whenever no
-bucket exceeds the cap.
+completes with defaults and full pair output below the cap, drops
+mega-buckets above it (``hot_buckets`` lists them), and is a provable
+no-op whenever no bucket exceeds the cap.
 """
 
 from __future__ import annotations
-
-import logging
 
 import pyspark.sql.functions as F
 from hypothesis import given, settings, strategies as st
@@ -19,7 +17,6 @@ from x8313_etl_spark.operators.bandjoin import (
     DEFAULT_MAX_BUCKET_SIZE,
     guarded_band_self_join,
     hot_buckets,
-    salted_band_self_join,
 )
 from x8313_etl_spark.operators.minhash import near_dup_pairs
 
@@ -44,15 +41,12 @@ def test_degenerate_corpus_completes_with_defaults(spark):
     assert all(r.jaccard == 1.0 for r in rows)
 
 
-def test_guard_drops_and_reports_hot_bucket(spark, caplog):
+def test_guard_drops_and_reports_hot_bucket(spark):
     """Cap below the cluster size: every bucket is hot, all pairs drop,
-    and the drop is WARN-logged with bucket sizes — bounded work, never
-    a silent wrong answer."""
+    and ``hot_buckets`` reports the dropped bucket with its size —
+    bounded work, never a silent wrong answer."""
     docs = _identical_docs(spark, 200)
-    with caplog.at_level(logging.WARNING, "x8313_etl_spark.operators.bandjoin"):
-        pairs = near_dup_pairs(docs, max_bucket_size=50, log_dropped=True)
-        assert pairs.count() == 0
-    assert any("max_bucket_size=50" in r.message for r in caplog.records)
+    assert near_dup_pairs(docs, max_bucket_size=50).count() == 0
 
     banded = _identical_docs(spark, 200).select(
         "doc_id", F.lit(0).alias("band"), F.lit("k").alias("key")
@@ -89,73 +83,6 @@ def test_guard_is_noop_below_cap_and_subset_above(spark, sizes, cap):
         for b in range(a + 1, n)
     }
     assert {(r.doc_a, r.doc_b) for r in got} == expect
-
-
-def test_salted_join_is_recall_complete_on_hot_cluster(spark):
-    """VERDICT r03 #7: a 5000-doc near-identical cluster far above the
-    cap must yield ALL C(5000,2) pairs through the salted path — the
-    guard would drop every one of them. Salt blocks of 256 → K=20 →
-    210 triangular tasks of ≤ 256² candidates each."""
-    n, cap, blk = 5_000, 1_000, 256
-    banded = spark.range(n).select(
-        F.col("id").alias("doc_id"), F.lit(0).alias("band"), F.lit("k").alias("key")
-    )
-    assert (
-        guarded_band_self_join(
-            banded, "doc_id", ("band", "key"), max_bucket_size=cap
-        ).count()
-        == 0
-    )
-    got = salted_band_self_join(
-        banded, "doc_id", ("band", "key"), max_bucket_size=cap, salt_block=blk
-    )
-    assert got.count() == n * (n - 1) // 2
-
-
-def test_salted_join_matches_unguarded_mixed_buckets(spark):
-    """Hot + cold buckets together, with carry columns: the salted join
-    must emit exactly the unguarded pair set (ids ordered, carries
-    riding with their own id). Small salt_block forces many blocks so
-    id-order-vs-salt-order conflicts (the subtle miss an `id_a < id_b`
-    triangular join would cause) are guaranteed to occur."""
-    rows = [(i, 0) for i in range(40)] + [(100 + i, 1) for i in range(5)]
-    banded = (
-        spark.createDataFrame(rows, "doc_id long, key int")
-        .withColumn("band", F.lit(0))
-        .withColumn("sig", F.col("doc_id") * 7)
-    )
-    want = {
-        (r.doc_a, r.doc_b, r.sig_a, r.sig_b)
-        for r in guarded_band_self_join(
-            banded, "doc_id", ("band", "key"), max_bucket_size=None, carry=("sig",)
-        ).collect()
-    }
-    got = {
-        (r.doc_a, r.doc_b, r.sig_a, r.sig_b)
-        for r in salted_band_self_join(
-            banded,
-            "doc_id",
-            ("band", "key"),
-            max_bucket_size=10,  # the 40-doc bucket is hot, the 5-doc is not
-            salt_block=4,  # K=10 blocks of ~4 docs
-            carry=("sig",),
-        ).collect()
-    }
-    assert got == want
-    assert all(a < b for a, b, *_ in got)
-    assert all(sa == a * 7 and sb == b * 7 for a, b, sa, sb in got)
-
-
-def test_near_dup_pairs_on_hot_salt_recovers_dropped_pairs(spark):
-    """End-to-end through the minhash pipeline: with a cap below the
-    cluster size, on_hot='drop' loses every pair; on_hot='salt' returns
-    the full C(n,2) at Jaccard 1.0 — same answer the uncapped join
-    gives."""
-    docs = _identical_docs(spark, 200)
-    assert near_dup_pairs(docs, max_bucket_size=50).count() == 0
-    salted = near_dup_pairs(docs, max_bucket_size=50, on_hot="salt").collect()
-    assert len(salted) == 200 * 199 // 2
-    assert all(r.jaccard == 1.0 for r in salted)
 
 
 def test_default_cap_cannot_trigger_on_fixtures(spark, sf_oracle_dir):

@@ -116,11 +116,11 @@ def test_kmeans_update_is_map_side_combined(spark, sf_dir):
 
 
 def test_incremental_dedup_band_join_shapes(spark, sf_dir):
-    from x8313_etl_spark.operators.increment import incremental_near_dups
+    from x8313_etl_spark.operators.increment import incremental_near_dups, sketch_index
 
     d = _docs(spark, sf_dir)
     out = incremental_near_dups(
-        d.filter(F.col("doc_id") % 5 != 0),
+        *sketch_index(d.filter(F.col("doc_id") % 5 != 0)),
         d.filter(F.col("doc_id") % 5 == 0),
     )
     plan = _plan(out)

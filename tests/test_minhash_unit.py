@@ -85,41 +85,3 @@ def test_perm_constants_match_expressions(spark):
     ).collect()
     for r in rows:
         assert PERM_A[r.i] == r.a and PERM_B[r.i] == r.b
-
-
-def test_tune_bands_divides_and_tracks_threshold():
-    from x8313_etl_spark.operators.minhash import tune_bands
-
-    prev_rows = 0
-    for t in (0.1, 0.3, 0.5, 0.7, 0.9):
-        b, r = tune_bands(t)
-        assert b * r == 32
-        assert r >= prev_rows  # higher threshold -> longer rows (sharper AND)
-        prev_rows = r
-
-
-def test_tune_bands_pins_pipeline_default():
-    # The hard-coded (BANDS, ROWS_PER_BAND) = (8, 4) split is exactly
-    # what the tuner picks at the near-dup pipeline's operating
-    # threshold — the default is optimal, not arbitrary.
-    from x8313_etl_spark.operators.minhash import BANDS, ROWS_PER_BAND, tune_bands
-
-    assert tune_bands(0.5) == (BANDS, ROWS_PER_BAND)
-
-
-def test_band_candidate_prob_is_a_monotone_cdf_shape():
-    import pytest
-
-    from x8313_etl_spark.operators.minhash import band_candidate_prob, tune_bands
-
-    prev = -1.0
-    for i in range(11):
-        s = i / 10
-        p = band_candidate_prob(s, 8, 4)
-        assert 0.0 <= p <= 1.0 and p >= prev
-        prev = p
-    with pytest.raises(ValueError):
-        tune_bands(0.0)
-    with pytest.raises(ValueError):
-        tune_bands(1.0)
-

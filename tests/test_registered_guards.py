@@ -639,8 +639,9 @@ def test_incremental_dedup_index_roundtrip(spark, sf_oracle_dir, tmp_path):
     """The standing-index contract COMPOUNDS (r8 verdict item 5): batch
     N's signatures, appended to the persisted parquet index, are batch
     N+1's index — and the verdicts from that round-tripped index equal
-    a from-docs recompute over the full earlier corpus, row for row
-    (including jaccard: both paths verify from identical shingle sets).
+    a reference sketched by ``sketch_index`` from the full earlier
+    corpus's docs, row for row (including jaccard: both verify from
+    identical shingle sets).
     Split: id-ordered halves/quarters via one-row percentile scalars
     (the t16/t18 sentinel pattern, never an id collect). The fixture
     exercises the compounding for real: some batch-2 verdicts point at
@@ -648,7 +649,7 @@ def test_incremental_dedup_index_roundtrip(spark, sf_oracle_dir, tmp_path):
     import os
 
     from x8313_etl_spark.io import load_table
-    from x8313_etl_spark.operators.increment import incremental_near_dups
+    from x8313_etl_spark.operators.increment import incremental_near_dups, sketch_index
     from x8313_etl_spark.operators.minhash import (
         shingle_table,
         signature_from_shingles,
@@ -673,11 +674,9 @@ def test_incremental_dedup_index_roundtrip(spark, sf_oracle_dir, tmp_path):
     shingle_table(idx0, "doc_id", "text").write.parquet(sh_dir)
 
     # ingest batch 1 against the persisted index (the production path:
-    # no index_docs, no re-sketching)
+    # no re-sketching of the index)
     v1 = incremental_near_dups(
-        None, b1,
-        index_sig=spark.read.parquet(sig_dir),
-        index_sh=spark.read.parquet(sh_dir),
+        spark.read.parquet(sig_dir), spark.read.parquet(sh_dir), b1
     )
     assert v1.count() == b1.count()
 
@@ -689,11 +688,9 @@ def test_incremental_dedup_index_roundtrip(spark, sf_oracle_dir, tmp_path):
     shingle_table(b1, "doc_id", "text").write.mode("append").parquet(sh_dir)
 
     v2 = incremental_near_dups(
-        None, b2,
-        index_sig=spark.read.parquet(sig_dir),
-        index_sh=spark.read.parquet(sh_dir),
+        spark.read.parquet(sig_dir), spark.read.parquet(sh_dir), b2
     )
-    ref = incremental_near_dups(idx0.unionByName(b1), b2)
+    ref = incremental_near_dups(*sketch_index(idx0.unionByName(b1)), b2)
 
     key = lambda r: (r["doc_id"],)
     got = sorted(map(tuple, v2.collect()), key=lambda t: t[0])

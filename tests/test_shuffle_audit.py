@@ -628,15 +628,25 @@ def test_pool_sites_are_capped_per_module():
 #: "<module under x8313_etl_spark/>::<function>(<parameter>)" -> (the test
 #: module that sets it, why only a test does). These are the defaulted
 #: parameters no package, script, bench or perfbench call sets; each
-#: reaches behaviour the default cannot show on the fixtures.
+#: reaches behaviour the default cannot show on the fixtures. A key
+#: without the "(<parameter>)" part is a whole function that only its
+#: test calls, kept for the reason given.
 TEST_ONLY_PARAMS: dict[str, tuple[str, str]] = {
-    "operators/bandjoin.py::salted_band_self_join(salt_block)": (
-        "tests/test_bandjoin.py",
-        "small salt blocks split a fixture-sized hot bucket into blocks",
+    "io.py::validate_table_schema": (
+        "tests/test_io_schema.py",
+        "S2 schema check: the pinned schemas must match the fixture footers",
     ),
-    "operators/bandjoin.py::salted_band_self_join(carry)": (
-        "tests/test_bandjoin.py",
-        "carry columns must swap with their id in the normalized hot pairs",
+    "operators/snapshots.py::SnapshotTable.vacuum": (
+        "tests/test_snapshots.py",
+        "SURVEY m7 liveness: vacuum keeps exactly the dirs live versions name",
+    ),
+    "operators/snapshots.py::SnapshotTable.rewrite_compact": (
+        "tests/test_snapshots.py",
+        "ROADMAP direction 2: compaction at commit will call it",
+    ),
+    "operators/viewmaint.py::JoinViewSink.read_bases": (
+        "tests/test_viewmaint.py",
+        "the maintained view must equal the join of the committed bases",
     ),
     "operators/concomp.py::connected_components(max_iter)": (
         "tests/test_concomp.py",
@@ -646,14 +656,6 @@ TEST_ONLY_PARAMS: dict[str, tuple[str, str]] = {
         "tests/test_increment.py",
         "cap 0 makes the hot-bucket guard drop every index bucket",
     ),
-    "operators/increment.py::incremental_near_dups(index_sig)": (
-        "tests/test_increment.py",
-        "the precomputed-index path must match the recompute path",
-    ),
-    "operators/increment.py::incremental_near_dups(index_sh)": (
-        "tests/test_increment.py",
-        "the precomputed-index path must match the recompute path",
-    ),
     "operators/ingestdedup.py::IngestDedupSink.__init__(max_bucket_size)": (
         "tests/test_ingestdedup.py",
         "a cap of 1 must drop a hot bucket inside one micro-batch",
@@ -661,18 +663,6 @@ TEST_ONLY_PARAMS: dict[str, tuple[str, str]] = {
     "operators/minhash.py::near_dup_pairs(max_bucket_size)": (
         "tests/test_bandjoin.py",
         "a low cap makes a fixture-sized cluster hot",
-    ),
-    "operators/minhash.py::near_dup_pairs(log_dropped)": (
-        "tests/test_bandjoin.py",
-        "the dropped-bucket warning must name the cap",
-    ),
-    "operators/minhash.py::near_dup_pairs(on_hot)": (
-        "tests/test_bandjoin.py",
-        "salt mode keeps the pairs that drop mode loses (full recall)",
-    ),
-    "operators/skew.py::salted_join(how)": (
-        "tests/test_skew_demo.py",
-        "outer salted joins must match the unsalted join",
     ),
     "operators/snapshots.py::SnapshotTable.read(as_of_ts)": (
         "tests/test_snapshots.py",
@@ -836,6 +826,22 @@ def _is_set(calls, names, param, idx, method, default) -> bool:
     return any(sets(*c) for name in names for c in calls.get(name, ()))
 
 
+def _census_files():
+    """(package dir, the non-test files whose calls count: package,
+    scripts/, perfbench/, bench.py, __spark_entry__.py)."""
+    from pathlib import Path
+
+    pkg = Path(audit.__file__).parent
+    root = pkg.parent
+    return pkg, [
+        *sorted(pkg.rglob("*.py")),
+        *sorted((root / "scripts").glob("*.py")),
+        *sorted((root / "perfbench").glob("*.py")),
+        root / "bench.py",
+        root / "__spark_entry__.py",
+    ]
+
+
 def test_every_defaulted_parameter_has_a_caller():
     """A defaulted parameter that no caller sets is a constant with a
     knob on it: fold it into its constant. The census reads the AST of
@@ -846,17 +852,7 @@ def test_every_defaulted_parameter_has_a_caller():
     test sets live in TEST_ONLY_PARAMS, and an entry goes stale when a
     real caller appears, the parameter goes, or its test stops setting
     it."""
-    from pathlib import Path
-
-    pkg = Path(audit.__file__).parent
-    root = pkg.parent
-    callers = [
-        *sorted(pkg.rglob("*.py")),
-        *sorted((root / "scripts").glob("*.py")),
-        *sorted((root / "perfbench").glob("*.py")),
-        root / "bench.py",
-        root / "__spark_entry__.py",
-    ]
+    pkg, callers = _census_files()
     calls = _calls(callers)
     params = {key: rest for key, *rest in _defaulted_params(pkg)}
     unset = sorted(
@@ -866,10 +862,105 @@ def test_every_defaulted_parameter_has_a_caller():
     assert not unset, f"defaulted parameters no caller sets — fold into constants: {unset}"
     stale = []
     for key, (test, _why) in TEST_ONLY_PARAMS.items():
+        if not key.endswith(")"):
+            continue  # a whole function: test_every_function_has_a_caller
         if key not in params:
             stale.append((key, "no such defaulted parameter"))
         elif _is_set(calls, *params[key]):
             stale.append((key, "a non-test call sets it now"))
-        elif not _is_set(_calls([root / test]), *params[key]):
+        elif not _is_set(_calls([pkg.parent / test]), *params[key]):
             stale.append((key, f"{test} does not set it"))
+    assert not stale, f"stale TEST_ONLY_PARAMS entries — delete them: {stale}"
+
+
+#: methods pyspark calls on a ``@udtf`` class (it has no base class)
+_UDTF_HOOKS = {"analyze", "eval", "terminate", "cleanup"}
+
+
+def _references(paths) -> set[str]:
+    """Every name the files use: bare names, attribute names and
+    imported names. A bare name inside a function of that name (a
+    recursive call) is not a use."""
+    out = set()
+
+    def walk(node, fn):
+        for ch in ast.iter_child_nodes(node):
+            if isinstance(ch, ast.Name) and ch.id != fn:
+                out.add(ch.id)
+            elif isinstance(ch, ast.Attribute):
+                out.add(ch.attr)
+            elif isinstance(ch, ast.alias):
+                out.add(ch.name.rsplit(".", 1)[-1])
+            is_def = isinstance(ch, (ast.FunctionDef, ast.AsyncFunctionDef))
+            walk(ch, ch.name if is_def else fn)
+
+    for path in paths:
+        walk(ast.parse(path.read_text()), None)
+    return out
+
+
+def _functions(pkg):
+    """(key, name) for every top-level function and method in the
+    package that someone has to call by name. Exempt: dunders,
+    ``@register``ed queries (the registry calls them), and methods
+    pyspark calls — an override of an attribute of a base class
+    imported from pyspark, or a ``@udtf`` class's hooks."""
+    import importlib
+
+    def name_of(node):
+        node = node.func if isinstance(node, ast.Call) else node
+        return _call_name(node)
+
+    out = []
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        rel = path.relative_to(pkg).as_posix()
+        pyspark = {
+            a.asname or a.name: getattr(importlib.import_module(n.module), a.name)
+            for n in tree.body
+            if isinstance(n, ast.ImportFrom) and (n.module or "").startswith("pyspark")
+            for a in n.names
+        }
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                if "register" not in {name_of(d) for d in node.decorator_list}:
+                    out.append((f"{rel}::{node.name}", node.name))
+            elif isinstance(node, ast.ClassDef):
+                bases = [pyspark[b.id] for b in node.bases if getattr(b, "id", None) in pyspark]
+                udtf = "udtf" in {name_of(d) for d in node.decorator_list}
+                for f in node.body:
+                    if not isinstance(f, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                        continue
+                    hook = any(hasattr(b, f.name) for b in bases) or (
+                        udtf and f.name in _UDTF_HOOKS
+                    )
+                    if not (f.name.startswith("__") or hook):
+                        out.append((f"{rel}::{node.name}.{f.name}", f.name))
+    return out
+
+
+def test_every_function_has_a_caller():
+    """A function no query, sink, script, bench or perfbench run reaches
+    is a second form kept alive by its tests: delete it with them. The
+    census walks the same caller set as the parameter census and fails
+    on any top-level function or method of the package whose name no
+    non-test file uses (by name, so any ``x.<name>`` counts). Functions
+    kept for their tests are TEST_ONLY_PARAMS keys without a
+    ``(<parameter>)`` part; an entry goes stale when a real caller
+    appears, the function goes, or its test stops calling it."""
+    pkg, callers = _census_files()
+    used = _references(callers)
+    funcs = dict(_functions(pkg))
+    kept = {k for k in TEST_ONLY_PARAMS if not k.endswith(")")}
+    uncalled = sorted(k for k, name in funcs.items() if name not in used and k not in kept)
+    assert not uncalled, f"functions only tests call — delete them: {uncalled}"
+    stale = []
+    for key in sorted(kept):
+        test = TEST_ONLY_PARAMS[key][0]
+        if key not in funcs:
+            stale.append((key, "no such function"))
+        elif funcs[key] in used:
+            stale.append((key, "a non-test file uses it now"))
+        elif funcs[key] not in _references([pkg.parent / test]):
+            stale.append((key, f"{test} does not call it"))
     assert not stale, f"stale TEST_ONLY_PARAMS entries — delete them: {stale}"

@@ -73,12 +73,3 @@ def test_salted_join_identical_and_spread_on_real_skew(spark):
         f"\nskew-demo (AQE off, no broadcast, 50% hot key, {_N_BIG} rows): "
         f"unsalted={t_plain:.2f}s salted={t_salted:.2f}s"
     )
-
-
-def test_salted_join_rejects_outer_variants(spark):
-    big, small = _tables(spark)
-    import pytest
-
-    for how in ("right", "full", "outer"):
-        with pytest.raises(ValueError, match="inner"):
-            salted_join(big, small, on="k", salt_by="id", how=how)

@@ -34,7 +34,7 @@ def _df(spark, rows):
 
 def test_overwrite_and_append_lineage(spark):
     t = _tbl()
-    assert t.latest_version() is None
+    assert t.versions() == []
     assert t.commit(_df(spark, [(1, "a"), (2, "b")])) == 0
     assert t.commit(_df(spark, [(3, "c")]), mode="append") == 1
     assert t.commit(_df(spark, [(9, "z")]), mode="overwrite") == 2
@@ -73,7 +73,7 @@ def test_torn_write_is_invisible(spark):
     t.commit(_df(spark, [(1, "a")]))
     _df(spark, [(666, "torn")]).write.parquet(os.path.join(t.base, "d-torn"))
     assert [(r.k, r.v) for r in t.read(spark).collect()] == [(1, "a")]
-    assert t.latest_version() == 0
+    assert [m["version"] for m in t.versions()] == [0]
 
 
 def test_apply_cdc_upsert_delete_insert(spark):

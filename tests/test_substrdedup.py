@@ -1,7 +1,7 @@
 """Property tests for operators/substrdedup.py: the distributed
 duplicated-span detector must match a brute-force suffix-scan reference
 (every K-window counted, intervals merged by hand) on random small-
-alphabet corpora, and the clip must equal reference token removal."""
+alphabet corpora."""
 
 from __future__ import annotations
 
@@ -9,10 +9,7 @@ from collections import Counter
 
 from hypothesis import given, settings, strategies as st
 
-from x8313_etl_spark.operators.substrdedup import (
-    clip_spans,
-    duplicated_spans,
-)
+from x8313_etl_spark.operators.substrdedup import duplicated_spans
 
 _SETTINGS = dict(max_examples=8, deadline=None)
 
@@ -47,14 +44,6 @@ def _ref_spans(docs: list[list[str]], k: int, min_occ: int = 2):
     return sorted(spans)
 
 
-def _ref_clip(toks: list[str], spans: list[tuple[int, int]]) -> list[str]:
-    return [
-        t
-        for i, t in enumerate(toks)
-        if not any(s <= i < e for s, e in spans)
-    ]
-
-
 def _corpus_df(spark, docs):
     return spark.createDataFrame(
         [(i, " ".join(toks)) for i, toks in enumerate(docs)],
@@ -70,20 +59,6 @@ def test_spans_match_bruteforce(spark, docs, k):
         for r in duplicated_spans(_corpus_df(spark, docs), k).collect()
     )
     assert got == _ref_spans(docs, k)
-
-
-@settings(**_SETTINGS)
-@given(docs=_corpus, k=st.sampled_from([2, 3]))
-def test_clip_matches_reference_removal(spark, docs, k):
-    df = _corpus_df(spark, docs)
-    spans = duplicated_spans(df, k)
-    got = {
-        r.doc_id: r.clean_text for r in clip_spans(df, spans).collect()
-    }
-    ref = _ref_spans(docs, k)
-    for i, toks in enumerate(docs):
-        mine = [(s, e) for d, s, e, _ in ref if d == i]
-        assert got[i] == " ".join(_ref_clip(toks, mine)), (i, toks, mine)
 
 
 def test_min_occurrences_three(spark):

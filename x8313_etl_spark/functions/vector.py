@@ -37,28 +37,6 @@ def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
-def dot_fixed(a: Column, b: Column, dim: int) -> Column:
-    """Dot product UNROLLED for a known fixed dimension → double.
-
-    Bit-identical to ``dot`` (0.0 + p1 == p1 exactly, same
-    left-associative partial-sum sequence). **Measured NEGATIVE
-    result — do not use in hot paths**: at dim=64 the ~300-node
-    element_at tree is 3× SLOWER than the HOF fold on the IVF
-    assignment cross join (5.6s vs 1.9s warm at 50k vectors) — large
-    flat expression trees fall out of efficient whole-stage codegen,
-    while the fold iterates the array data once. Kept as the documented
-    experiment + for small dims where unrolling can still win.
-    """
-    terms = [
-        F.element_at(a, i).cast("double") * F.element_at(b, i).cast("double")
-        for i in range(1, dim + 1)
-    ]
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
-
-
 def cosine(a: Column, b: Column) -> Column:
     """cos(a,b) = dot/(|a||b|) — all IEEE double ops, cross-engine exact.
 

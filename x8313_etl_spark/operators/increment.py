@@ -14,10 +14,11 @@ This module implements that shape with the SAME deterministic sketch as
 at ingest time N is still valid at ingest time N+k, and the DuckDB twin
 can regenerate it exactly):
 
-1. ``shingle_table`` then ``signature_from_shingles`` on each side — in
-   production the index side is a parquet-persisted table maintained
-   across ingests (pass it via ``index_sig``/``index_sh``); recomputing
-   it here is fixture convenience, not the contract.
+1. ``shingle_table`` then ``signature_from_shingles`` on each side. The
+   index side arrives PRE-SKETCHED: (doc_id, sig) and (doc_id, sh)
+   tables, in production parquet-persisted and maintained across
+   ingests; ``sketch_index`` builds them from raw docs (what
+   p_incremental_dedup does with the fixture corpus).
 2. Band keys exploded on both sides; equi-join batch bands to index
    bands (one shuffle keyed by band value — the index side can be
    pre-bucketed by band key on disk, making the probe a co-located
@@ -34,11 +35,10 @@ Banding and the verify are ``minhash.band_table`` and
 
 Hot-bucket guard: a band key shared by B_index docs multiplies every
 colliding batch doc by B_index. ``max_bucket_size`` drops index-side
-buckets over the cap (the ``on_hot="drop"`` posture of
-operators/bandjoin.py); the default cannot trigger without a
-5000-strong near-identical index cluster, so the twin's exact band
-predicate holds on any test corpus while a boilerplate-heavy crawl
-stays bounded.
+buckets over the cap (operators/bandjoin.py's guard); the default
+cannot trigger without a 5000-strong near-identical index cluster, so
+the twin's exact band predicate holds on any test corpus while a
+boilerplate-heavy crawl stays bounded.
 """
 
 from __future__ import annotations
@@ -83,12 +83,27 @@ def top1_verdict(ids: DataFrame, verified: DataFrame) -> DataFrame:
     )
 
 
+def sketch_index(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(sig, sh) for ``incremental_near_dups`` from raw (doc_id, text)
+    index docs: the ``signature_from_shingles``/``shingle_table``
+    tables a standing index persists.
+
+    sh feeds the index signatures AND the verify join, so it is pooled;
+    sig is not: the guard pass and the band join each rerun its
+    map-only kernel, cheaper than a persist (sf0.1: same jobs and
+    tasks, executor CPU 1.19 → 1.01 s)."""
+    from .cachepool import swap_persist
+
+    docs = docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
+    sh = swap_persist("increment.sh_old", shingle_table(docs, "doc_id", "text"))
+    return signature_from_shingles(sh), sh
+
+
 def incremental_near_dups(
-    index_docs: DataFrame | None,
+    index_sig: DataFrame,
+    index_sh: DataFrame,
     batch_docs: DataFrame,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
-    index_sig: DataFrame | None = None,
-    index_sh: DataFrame | None = None,
 ) -> DataFrame:
     """(doc_id, is_dup, dup_of, jaccard): one row per batch doc.
 
@@ -99,73 +114,41 @@ def incremental_near_dups(
     never dups under this metric (same contract as
     ``minhash.near_dup_pairs``).
 
-    ``index_sig``/``index_sh``: the PERSISTED standing-corpus
-    signature and shingle tables ((doc_id, sig) / (doc_id, sh), the
-    ``signature_from_shingles``/``shingle_table`` schemas). When both
-    are given, ``index_docs`` may be None: the index side is consumed
-    as-is — no re-sketching, no repartition (a parquet index
-    pre-bucketed by band key keeps its layout), no re-persist — which
-    is what makes per-ingest work independent of corpus size. When
-    omitted, both are derived from ``index_docs`` (fixture
-    convenience, not the production contract).
+    ``index_sig``/``index_sh``: the standing-corpus signature and
+    shingle tables ((doc_id, sig) / (doc_id, sh), as ``sketch_index``
+    returns them). They are consumed as-is — no re-sketching, no
+    repartition (a parquet index pre-bucketed by band key keeps its
+    layout), no re-persist — which is what makes per-ingest work
+    independent of corpus size.
 
     Determinism: constants are shared with operators/minhash.py, so
     the same corpus gives the same verdicts on any cluster size and
     the DuckDB twin regenerates identical signatures.
 
-    Cache lifetime (r14): the recompute path persists its shingle
-    tables through the keyed swap-pool (operators/cachepool.py), which
-    bounds them to one live table per key across repeated sweep calls
-    and files each plan in the audit ledger. Every path returns a
-    plain lazy frame.
+    Cache lifetime (r14): the batch shingle table goes through the
+    keyed swap-pool (operators/cachepool.py), which bounds it to one
+    live table per key across repeated sweep calls and files its plan
+    in the audit ledger. The result is a plain lazy frame.
     """
-    sp = batch_docs.sparkSession.sparkContext.defaultParallelism
-    batch_docs = batch_docs.repartition(sp)
+    from .cachepool import swap_persist
 
+    batch_docs = batch_docs.repartition(
+        batch_docs.sparkSession.sparkContext.defaultParallelism
+    )
     # One regex shingling pass per side, not two (r13 optimization
     # round): sig derives from sh via signature_from_shingles —
     # bit-identical signatures, but the CPU-dense shingling runs once
-    # while sh materializes instead of once per table.
-    sh_new = shingle_table(batch_docs, "doc_id", "text")
-    if index_sig is None:
-        from .cachepool import swap_persist
-
-        # two consumers: the batch signatures and the verify join
-        sh_new = swap_persist("increment.sh_new", sh_new)
-    sig_new = signature_from_shingles(sh_new)
-    if (index_sig is None) != (index_sh is None):
-        raise ValueError("pass index_sig and index_sh together")
-    if index_sig is not None:
-        if index_docs is not None:
-            # silently preferring one source over the other would let a
-            # STALE precomputed index masquerade as the docs the caller
-            # passed — make the ambiguity loud (review round 7)
-            raise ValueError(
-                "pass either index_docs or precomputed index_sig/index_sh, "
-                "not both"
-            )
-        sig_old, sh_old = index_sig, index_sh
-    else:
-        if index_docs is None:
-            raise ValueError("need index_docs or index_sig+index_sh")
-        index_docs = index_docs.repartition(sp)
-        # sh_old feeds the index signatures AND the verify join;
-        # precomputed tables are parquet reads, which amortize the same
-        # way without a persist. sig is not pooled: the guard pass and
-        # the band join each rerun its map-only kernel, cheaper than a
-        # persist (sf0.1: same jobs and tasks, executor CPU 1.19 →
-        # 1.01 s).
-        sh_old = swap_persist(
-            "increment.sh_old", shingle_table(index_docs, "doc_id", "text")
-        )
-        sig_old = signature_from_shingles(sh_old)
-
-    b_new = band_table(sig_new, "new_id")
+    # while sh materializes instead of once per table. Two consumers:
+    # the batch signatures and the verify join.
+    sh_new = swap_persist(
+        "increment.sh_new", shingle_table(batch_docs, "doc_id", "text")
+    )
+    b_new = band_table(signature_from_shingles(sh_new), "new_id")
     b_old = drop_hot_buckets(
-        band_table(sig_old, "old_id"), ("band", "key"), max_bucket_size
+        band_table(index_sig, "old_id"), ("band", "key"), max_bucket_size
     )
     cand = b_new.join(b_old, ["band", "key"]).select("new_id", "old_id").distinct()
     verified = jaccard_verify(
-        cand, sh_new, sh_old, "new_id", "old_id", NEAR_DUP_THRESHOLD
+        cand, sh_new, index_sh, "new_id", "old_id", NEAR_DUP_THRESHOLD
     )
     return top1_verdict(batch_docs.select("doc_id"), verified)

@@ -121,7 +121,7 @@ class IngestDedupSink(VersionedStateDir):
         # INSIDE a micro-batch pairs quadratically too (a crawl burst of
         # boilerplate arriving in one batch). Over-cap buckets are
         # dropped ENTIRELY from the candidate-supplying side (0 pairs
-        # from them — on_hot="drop", not a capped sample), so a doc
+        # from them, not a capped sample), so a doc
         # whose only collisions are hot buckets is reported non-dup; the
         # docstring's one-shot-twin caveat covers exactly this
         # divergence when the cap fires

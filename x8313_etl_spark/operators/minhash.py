@@ -279,8 +279,6 @@ def jaccard_verify(
 def near_dup_pairs(
     docs: DataFrame,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
-    log_dropped: bool = False,
-    on_hot: str = "drop",
 ) -> DataFrame:
     """LSH candidates + exact-Jaccard verify of ``docs`` (doc_id, text) →
     (doc_a, doc_b, jaccard).
@@ -295,14 +293,9 @@ def near_dup_pairs(
     a corpus without a 5000-strong near-identical cluster, so the
     DuckDB twin's exact band predicate still holds on any test corpus,
     while a real boilerplate-heavy crawl gets the bound. ``None``
-    disables the guard (exact band semantics unconditionally).
-
-    ``on_hot`` picks what happens to buckets over the cap: ``"drop"``
-    (bounded work, reduced recall — the default) or ``"salt"``
-    (recall-complete: hot buckets are block-paired through
-    ``salted_band_self_join``, spreading their B² candidates over
-    parallel tasks instead of one straggler; full recall IS B² work,
-    so this bounds latency, not volume).
+    disables the guard (exact band semantics unconditionally). Rows
+    confined to over-cap buckets lose their pairs (bounded work,
+    reduced recall); ``bandjoin.hot_buckets`` lists those buckets.
 
     The sketch feeds four plan branches (both sides of the band join,
     both sides of the verify join), so the sh and banded tables go
@@ -335,73 +328,13 @@ def near_dup_pairs(
     # cached arrays (measured on the l2 path, see OPTIMIZATION_r13.md).
     # sig's one consumer is the pooled `banded`, so sig is not pooled.
     sh = swap_persist("minhash.sh", shingle_table(docs, "doc_id", "text"))
-    # `banded` has two or more consumers in every mode (the band join's
-    # two sides, plus the guard's size agg): persist the slim
-    # (id, band, key) table so signatures and keys are computed once.
+    # `banded` has two or more consumers (the band join's two sides,
+    # plus the guard's size agg): persist the slim (id, band, key)
+    # table so signatures and keys are computed once.
     banded = swap_persist(
         "minhash.banded", band_table(signature_from_shingles(sh), "doc_id")
     )
-    if on_hot not in ("drop", "salt"):
-        raise ValueError(f"on_hot must be 'drop' or 'salt', got {on_hot!r}")
-    if on_hot == "salt" and max_bucket_size is not None:
-        from .bandjoin import salted_band_self_join
-
-        cand = salted_band_self_join(
-            banded,
-            "doc_id",
-            ("band", "key"),
-            max_bucket_size=max_bucket_size,
-        )
-    else:
-        cand = guarded_band_self_join(
-            banded,
-            "doc_id",
-            ("band", "key"),
-            max_bucket_size=max_bucket_size,
-            log_dropped=log_dropped,
-            log_label="minhash-lsh",
-        )
-
+    cand = guarded_band_self_join(
+        banded, "doc_id", ("band", "key"), max_bucket_size=max_bucket_size
+    )
     return jaccard_verify(cand, sh, sh, "doc_a", "doc_b", NEAR_DUP_THRESHOLD)
-
-
-def band_candidate_prob(s: float, bands: int, rows: int) -> float:
-    """P(candidate | true Jaccard s) under the banding scheme:
-    ``1 - (1 - s^rows)^bands`` — the LSH S-curve (Mining of Massive
-    Datasets §3.4, public text). Driver-side math, no Spark."""
-    return 1.0 - (1.0 - s**rows) ** bands
-
-
-def tune_bands(threshold: float) -> tuple[int, int]:
-    """Pick (bands, rows) with bands*rows == N_HASHES minimizing the
-    S-curve's total error mass around ``threshold``: the integral of
-    P(candidate) below the threshold (false-positive area, paid in
-    verify-join work) plus the integral of P(miss) above it
-    (false-negative area, paid in recall). Candidates are the divisor
-    pairs of N_HASHES, so the search space is tiny and exact; the
-    integrals are midpoint sums over 1000 cells, so the pick is
-    deterministic.
-
-    Why it matters at 100 TB: the fixed (8, 4) default centers the
-    curve at (1/8)^(1/4) ≈ 0.595. A pipeline hunting t = 0.9 near-exact
-    dups with that split floods the verify join with sub-threshold
-    candidates; tune_bands(0.9) -> (2, 16) moves the knee to ≈ 0.96
-    and the false-positive area drops by ~20x. The tuner makes that
-    trade explicit instead of hard-coded."""
-    if not 0.0 < threshold < 1.0:
-        raise ValueError(f"threshold must be in (0,1): {threshold}")
-    steps = 1000
-    best: tuple[float, int, int] | None = None
-    for rows in range(1, N_HASHES + 1):
-        if N_HASHES % rows:
-            continue
-        bands = N_HASHES // rows
-        err = 0.0
-        for i in range(steps):
-            s = (i + 0.5) / steps
-            p = band_candidate_prob(s, bands, rows)
-            err += (p if s < threshold else 1.0 - p) / steps
-        if best is None or err < best[0]:
-            best = (err, bands, rows)
-    assert best is not None
-    return best[1], best[2]

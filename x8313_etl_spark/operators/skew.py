@@ -3,13 +3,11 @@
 AQE's skew-join split handles most cases at runtime; explicit salting
 is the deterministic fallback for joins AQE can't split (e.g. when the
 skewed side must build the hash table, or on engines/configs without
-AQE). For ``how`` in ('inner', 'left') the transform is
-result-identical to the plain join — only the physical key distribution
-changes — so the DuckDB twin is simply the unsalted join. Other join
-types are rejected: an unmatched SMALL-side row is replicated once per
-salt by the explode, so 'right'/'full' would emit N_SALTS null-padded
-duplicates of it; supporting them would need a post-join dedup that
-costs more than the salting saves.
+AQE). The join is INNER, which makes the transform result-identical to
+the plain join — only the physical key distribution changes — so the
+DuckDB twin is simply the unsalted join. (An outer join would not be:
+the small side is replicated once per salt, so its unmatched rows
+would come back N_SALTS times.)
 
 Mechanics: the big (skewed) side gets a uniform salt in [0, S); the
 small side is replicated S× with every salt value; the join key becomes
@@ -38,26 +36,17 @@ def salted_join(
     small: DataFrame,
     on: str,
     salt_by: str,
-    how: str = "inner",
 ) -> DataFrame:
-    """Join ``big`` ⋈ ``small`` on column ``on`` with the big side's
-    hot keys spread over ``N_SALTS`` shuffle partitions.
+    """Inner join ``big`` ⋈ ``small`` on column ``on`` with the big
+    side's hot keys spread over ``N_SALTS`` shuffle partitions.
 
     ``salt_by`` is any well-distributed column of ``big`` (a unique id)
-    used to derive the deterministic salt. Only 'inner' and 'left' are
-    result-identical to the unsalted join (module docstring); others
-    raise rather than silently duplicate unmatched small-side rows.
+    used to derive the deterministic salt.
     """
-    if how not in ("inner", "left"):
-        raise ValueError(
-            f"salted_join supports how='inner'|'left', got {how!r}: the "
-            "small side is replicated N_SALTS times, so outer variants "
-            "would duplicate its unmatched rows"
-        )
     salted_big = big.withColumn(
         _SALT, F.pmod(F.xxhash64(F.col(salt_by)), F.lit(N_SALTS)).cast("int")
     )
     salts = F.explode(F.sequence(F.lit(0), F.lit(N_SALTS - 1))).alias(_SALT)
     salted_small = small.select("*", salts)
-    joined = salted_big.join(salted_small, on=[on, _SALT], how=how)
+    joined = salted_big.join(salted_small, on=[on, _SALT])
     return joined.drop(_SALT)

@@ -102,11 +102,6 @@ class SnapshotTable:
                     out.append(m)
         return out
 
-    def latest_version(self) -> int | None:
-        """The newest version on ``main``, or None before the first commit."""
-        vs = self.versions("main")
-        return vs[-1]["version"] if vs else None
-
     def _resolve(
         self,
         version: int | None,

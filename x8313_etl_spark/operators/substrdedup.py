@@ -129,8 +129,8 @@ def contaminated_spans(docs: DataFrame, probes: DataFrame, k: int) -> DataFrame:
     corpus (the benchmark / eval set; both sides carry ``text``). The
     doc-level posture (p_decontaminate) throws away a whole document
     over one shared n-gram; the span posture — what large pretraining
-    pipelines actually ship — localizes the overlap so ``clip_spans``
-    can excise just the contaminated text.
+    pipelines actually ship — localizes the overlap so just the
+    contaminated text can be excised.
 
     Same growth law as ``duplicated_spans`` minus the corpus-wide
     count: the probe gram set is DISTINCT k-grams of the benchmark
@@ -149,32 +149,3 @@ def contaminated_spans(docs: DataFrame, probes: DataFrame, k: int) -> DataFrame:
     )
     marked = pg.join(probe_grams, "gram", "left_semi").select("doc_id", "pos")
     return merge_marked_windows(marked, k)
-
-
-def clip_spans(docs: DataFrame, spans: DataFrame) -> DataFrame:
-    """Rewrite each (doc_id, text) doc as ``clean_text`` with every
-    duplicated span's tokens removed (the aggressive remove-all-copies
-    posture; the paper's keep-one posture needs a canonical-occurrence
-    election and is a separate, more expensive op). Spans aggregate to a
-    per-doc array<struct> — bounded by doc length / k, never
-    corpus-sized — and the token filter is a per-row HOF over that
-    array; docs with no spans keep their text byte-identical (left join,
-    null guard)."""
-    sp = spans.groupBy("doc_id").agg(
-        F.collect_list(F.struct("span_start", "span_end")).alias("sp")
-    )
-    joined = docs.join(sp, "doc_id", "left")
-    w = F.split(F.col("text"), " ")
-    kept = F.filter(
-        w,
-        lambda tok, i: ~F.exists(
-            F.col("sp"),
-            lambda s: (i >= s["span_start"]) & (i < s["span_end"]),
-        ),
-    )
-    return joined.withColumn(
-        "clean_text",
-        F.when(F.col("sp").isNull(), F.col("text")).otherwise(
-            F.concat_ws(" ", kept)
-        ),
-    ).drop("sp")

@@ -244,7 +244,7 @@ def encode_corpus(
     )
     # left join back to the full id set: a doc with empty /
     # whitespace-only text must come back with an EMPTY pieces array,
-    # not vanish from the output (the clip_spans preserve-docs rule).
+    # not vanish from the output.
     ids = docs.select("doc_id")
     return ids.join(agg, "doc_id", "left").select(
         "doc_id",

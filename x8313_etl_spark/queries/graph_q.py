@@ -1258,13 +1258,12 @@ def g11_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     one cached bucketing shared with sim_ivf_topk/l10_knn_ivf);
     candidate volume is Σ bucket², never corpus². The bucket self-join
     shuffles on cent_id, which has only K distinct keys — at real
-    scale the dial is the salted bucket self-join
-    (operators/bandjoin.py salted_band_self_join / AQE skew join),
-    documented rather than needed at fixture size; the mutual flag is
-    one more equi-join on the (src, dst) edge key, against the
-    CHECKPOINTED edge table (key g11.edges) so the reversal reads k·N
-    rows instead of re-executing the dominant self-join stage (the r8
-    review catch — the checkpoint halved the 10× sweep). The top-k
+    scale the dial is AQE's skew-join split, not needed at fixture
+    size; the mutual flag is one more equi-join on the (src, dst)
+    edge key, against the CHECKPOINTED edge table (key g11.edges) so
+    the reversal reads k·N rows instead of re-executing the dominant
+    self-join stage (the r8 review catch — the checkpoint halved the
+    10× sweep). The top-k
     prune is a WindowGroupLimit below the shuffle. 10× sweep: 1.8×
     (git show 0b946b4:scripts/scale10x_r8.py; PERF.md growth law)."""
     from ..functions.vector import dot

@@ -323,13 +323,7 @@ def _simhash_candidates(s) -> DataFrame:
             )
         ).alias("band", "chunk"),
     )
-    return guarded_band_self_join(
-        banded,
-        "doc_id",
-        ("band", "chunk"),
-        carry=("sh",),
-        log_label="simhash-lsh",
-    )
+    return guarded_band_self_join(banded, "doc_id", ("band", "chunk"), carry=("sh",))
 
 
 @register(
@@ -1115,8 +1109,8 @@ def p_substr_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     count ≥ 2; per doc, overlapping/adjacent duplicated-gram positions
     merge into maximal SPANS (gaps > k break islands — the
     gaps-and-islands window). Emits (doc_id, span_start, span_end,
-    n_dup_grams) word offsets — the character-level clip is
-    operators/substrdedup.clip_spans. Completes the dedup ladder:
+    n_dup_grams) word offsets, the input a clip step excises. Completes
+    the dedup ladder:
     exact(l1) → MinHash(l2) → SimHash → semantic → SUBSTRING-SPAN
     (removes verbatim boilerplate INSIDE otherwise-unique docs, which
     whole-doc dedup can't).
@@ -1377,21 +1371,22 @@ def p_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: per-ingest work is |batch| sketching + Σ_key |batch_bucket|
     × |index_bucket| verify candidates — independent of corpus size
-    outside collided buckets; the index side accepts PRE-SKETCHED
-    parquet tables (index_sig/index_sh) so the standing corpus is
-    never re-read (the operator's production contract; recomputed here
-    from the fixture for oracle parity). Index-side hot buckets over
-    the cap are dropped (bandjoin's on_hot="drop" posture). 10× sweep:
+    outside collided buckets; the operator takes the index PRE-SKETCHED
+    (sig and shingle tables, parquet in production) so the standing
+    corpus is never re-read — sketched here from the fixture by
+    ``sketch_index`` for oracle parity. Index-side hot buckets over
+    the cap are dropped (bandjoin's guard). 10× sweep:
     sub-linear, git show 0b946b4:scripts/scale10x_increment.py
     (PERF.md). Operator: operators/increment.py; sketch tables pooled
     via the keyed swap-pool (increment.* keys, r14 — the old eager verdict
     checkpoint cost one extra full materialization per run)."""
-    from ..operators.increment import incremental_near_dups
+    from ..operators.increment import incremental_near_dups, sketch_index
 
     d = load_table(spark, sf_dir, "documents")
     index = d.filter(F.col("doc_id") % _DELTA_MOD != 0)
     batch = d.filter(F.col("doc_id") % _DELTA_MOD == 0)
-    return incremental_near_dups(index, batch)
+    sig, sh = sketch_index(index)
+    return incremental_near_dups(sig, sh, batch)
 
 
 def _golden_sql() -> str:
@@ -2456,8 +2451,8 @@ def p_dedup_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     caveat (VERDICT r7–r12): instead of documenting an S-curve posture,
     MEASURE it on the corpus at hand. At 100 TB this runs on a SAMPLE —
     it is the calibration instrument you consult before committing a
-    threshold/band split to a full crawl (tune_bands' S-curve made
-    empirical; its exact posting join is Σ df² on the sample, which is
+    threshold/band split to a full crawl (the banding S-curve
+    1-(1-s^rows)^bands made empirical; its exact posting join is Σ df² on the sample, which is
     the instrument's cost, not the pipeline's). The shingle and
     candidate tables ride the swap-pool (keys dedupeval.*); the three
     count aggregates are one-row scalars combined by broadcast (the

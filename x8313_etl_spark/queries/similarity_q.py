@@ -121,8 +121,7 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine and a map-side WindowGroupLimit argmin — no Python hop, no
     exchange before the partial limit. (An unrolled 64-term element_at
     cosine was tried and measured 3x SLOWER than the fold here — the
-    300-node expression falls out of efficient codegen; see
-    functions/vector.py `dot_fixed` for the negative result.) The assign
+    300-node expression falls out of efficient codegen.) The assign
     table is PERSISTED: it feeds both sides of the bucket search, and
     recomputing it per plan branch doubled the whole query (measured at
     50k vectors) — via the keyed swap-pool (operators/cachepool.py,
@@ -379,9 +378,7 @@ def banded_verified_pairs(
             )
         ).alias("band", "chunk"),
     )
-    cand = guarded_band_self_join(
-        banded, "vec_id", ("band", "chunk"), log_label="hyperplane-lsh"
-    )
+    cand = guarded_band_self_join(banded, "vec_id", ("band", "chunk"))
     norms = e.select("vec_id", "vnorm")
     va = raw.join(norms, "vec_id").select(
         F.col("vec_id").alias("vec_a"),
